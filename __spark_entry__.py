@@ -1126,10 +1126,12 @@ def q_shp_read(spark, sf_dir):
     grain, so the compare stays bit-level."""
     import os
 
+    from geomesa_spark.functions import register_functions
     from geomesa_spark.sources.shapefile import (build_dbf, build_shp,
                                                  point_record,
                                                  read_shapefile)
 
+    register_functions(spark)
     path = _store_tmp(sf_dir, "shpdir")
     os.makedirs(path, exist_ok=True)
     n = 500

@@ -710,11 +710,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     """
     if k < 1 or w < 1:
         raise ValueError(f"need k >= 1 and w >= 1, got k={k}, w={w}")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    gram = lambda p: F.array_join(F.slice(words, p, k), "\x1f")  # noqa: E731
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (k - 1)),
-        lambda p: _poly31(gram(p)))
+    # words and hashes are projected as columns and the grams are built
+    # before they are hashed, so each is evaluated once per row: a lambda
+    # that names an expression evaluates it again on every call
+    words = F.col("__w__")
+    grams = F.transform(F.sequence(F.lit(1), F.size(words) - (k - 1)),
+                        lambda p: F.array_join(F.slice(words, p, k), "\x1f"))
+    hashes = F.col("__h__")
     m = F.size(hashes)
     sel = F.transform(
         F.sequence(F.lit(1), F.greatest(m - (w - 1), F.lit(1))),
@@ -724,7 +726,10 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
                                 F.array_min(F.slice(hashes, p, w))))
             .cast("int").alias("pos"),
             F.array_min(F.slice(hashes, p, w)).alias("fp")))
-    return (df.filter(F.size(words) >= k)
+    return (df.select(F.col(id_col),
+                      F.split(F.trim(F.col(text_col)), r"\s+").alias("__w__"))
+              .filter(F.size(words) >= k)
+              .select(F.col(id_col), F.transform(grams, _poly31).alias("__h__"))
               .select(F.col(id_col), F.explode(sel).alias("__s__"))
               .select(id_col, F.col("__s__.pos").alias("pos"),
                       F.col("__s__.fp").alias("fp"))

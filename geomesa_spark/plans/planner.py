@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .store import (
     _WEEK_S, attr_query, bbox_partition_prefixes, bbox_query,
-    bbox_query_xz2, stbox_query_xz3, stbox_query_z3,
+    bbox_query_xz2, open_store, stbox_query_xz3, stbox_query_z3,
     xz2_partition_prefixes, xz3_partition_prefixes, z3_partition_prefixes,
 )
 
@@ -198,7 +198,7 @@ def planned_query(spark, stores: dict[str, str], *, bbox=None,
     elif chosen == "xz2":
         df = bbox_query_xz2(spark, stores["xz2"], *bbox, digits=z2_digits)
     else:  # full:<name>
-        df = spark.read.parquet(stores[chosen.split(":", 1)[1]])
+        df = open_store(spark, stores[chosen.split(":", 1)[1]])
         extended = "bx0" in df.columns
     # residuals: re-apply everything (cheap row predicates; pushed to
     # the parquet scan by Catalyst) so no strategy can under-filter

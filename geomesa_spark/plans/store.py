@@ -10,18 +10,25 @@ native Spark (SURVEY.md §1.3 / §3.3):
 - the directory layout is hive-partitioned parquet on ``z2_p`` —
   manifest pruning becomes Spark partition pruning, parquet row-group
   stats on lon/lat do the intra-partition skip,
-- a bbox query plans driver-side: Z2 range decomposition (the exact
-  litmax/bigmin BFS, ZN.scala:110-242 port) -> covering partition
-  prefixes -> ``z2_p IN (...)`` + lon/lat range predicates. The scan
-  shows both PartitionFilters and PushedFilters in .explain — nothing
-  is read outside the covering cells.
+- a bbox query plans driver-side: the window's covering partition
+  prefixes in closed form (a d-hex-digit z prefix is an axis-aligned
+  box, so the cover is the interleave of the window's per-dimension
+  prefix ranges) -> ``z2_p IN (...)`` + lon/lat range predicates. The
+  scan shows both PartitionFilters and PushedFilters in .explain —
+  nothing is read outside the covering cells,
+- queries open the store through :func:`open_store`, which reuses the
+  DataFrame (and with it Spark's partition discovery) while the store's
+  files are unchanged.
 
 At 10^12 rows only the partition count changes (digits knob: 16^d
-partitions); the planner still emits <= ~2000 prefixes (the
-reference's scan-range budget, QueryProperties.scala:24).
+partitions); the prefix cover is exact, so it needs no range budget.
 """
 
 from __future__ import annotations
+
+import os
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -30,9 +37,12 @@ from pyspark.sql.types import StringType
 
 from ..curves.norm import normalized_lat, normalized_lon
 from ..curves.sfc import Z2SFC
-from ..curves.zranges import z2_bounds_to_zbound, z2_ranges
+from ..curves.zorder import z2_encode, z3_encode
+# not called here; perfbench/tracing.py wraps these names on this module
+from ..curves.zranges import z2_ranges, z3_ranges  # noqa: F401
 
-__all__ = ["write_indexed", "read_indexed", "bbox_query", "bbox_partition_prefixes",
+__all__ = ["open_store", "write_indexed", "read_indexed", "bbox_query",
+           "bbox_partition_prefixes",
            "query_store", "write_indexed_xz2", "bbox_query_xz2",
            "xz2_partition_prefixes", "write_indexed_z3", "stbox_query_z3",
            "z3_partition_prefixes", "write_indexed_xz3", "stbox_query_xz3",
@@ -77,39 +87,112 @@ def write_indexed(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
         .partitionBy("z2_p").parquet(path)
 
 
+# (session, absolute path) -> (file listing, DataFrame), least recently
+# used first; bounded so a process that opens many stores keeps only the
+# recent ones alive
+_OPENED: OrderedDict = OrderedDict()
+_OPENED_MAX = 64
+_OPENED_LOCK = threading.Lock()
+
+
+def _listing(root: str) -> tuple:
+    """Sorted (relative path, size, mtime_ns) of every file under ``root``:
+    the facts Spark's file index caches for a store."""
+    out = []
+    for d, _, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        for f in files:
+            try:
+                st = os.stat(os.path.join(d, f))
+            except FileNotFoundError:  # removed while walking
+                continue
+            out.append((os.path.join(rel, f), st.st_size, st.st_mtime_ns))
+    out.sort()
+    return tuple(out)
+
+
+def open_store(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reused while the store is unchanged.
+
+    Opening a store lists it and discovers its partitions (a Spark job
+    on a many-partition store), which costs more than a pruned query's
+    scan. The DataFrame of the last open of the same local directory in
+    the same session is returned again as long as a driver-side listing
+    of its files (relative path, size, mtime_ns) has not changed; any
+    write, published file or compaction changes the listing, so the next
+    open reads the store afresh. A path that is not a local directory is
+    always read afresh.
+    """
+    root = os.path.abspath(path)
+    if not os.path.isdir(root):
+        return spark.read.parquet(path)
+    key = (spark, root)
+    listing = _listing(root)
+    with _OPENED_LOCK:
+        hit = _OPENED.get(key)
+        if hit is not None and hit[0] == listing:
+            _OPENED.move_to_end(key)
+            return hit[1]
+    df = spark.read.parquet(path)
+    with _OPENED_LOCK:
+        _OPENED[key] = (listing, df)
+        _OPENED.move_to_end(key)
+        while len(_OPENED) > _OPENED_MAX:
+            _OPENED.popitem(last=False)
+    return df
+
+
 def read_indexed(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return open_store(spark, path)
+
+
+def _prefix_cover(encode, bits: int, lows, highs, keep, shift: int,
+                  digits: int) -> list[str]:
+    """Covering ``digits``-hex-char prefixes of a Morton-coded window.
+
+    A prefix fixes the top ``keep[i]`` of the ``bits`` bits of dimension
+    i, so it is an axis-aligned box, and the prefixes meeting the window
+    [lows, highs] are exactly the interleaves of each dimension's prefix
+    range. ``encode`` interleaves full-width values; a prefix is the code
+    shifted right by ``shift``.
+    """
+    axes = [np.arange(lo >> (bits - k), (hi >> (bits - k)) + 1,
+                      dtype=np.int64) << (bits - k)
+            for lo, hi, k in zip(lows, highs, keep)]
+    grid = np.meshgrid(*axes, indexing="ij")
+    codes = encode(*(g.ravel() for g in grid)).astype(np.uint64) >> np.uint64(shift)
+    return [format(int(c), f"0{digits}x") for c in np.sort(codes)]
+
+
+def _clamp(v, lo, hi):
+    """Clamp a window bound into the world, as the lenient store keys
+    clamp rows: a window wholly outside the world covers the edge cells
+    its clamped rows are keyed to."""
+    return min(max(v, lo), hi)
+
+
+def _check_digits(digits: int) -> None:
+    if not 1 <= digits <= 15:
+        raise ValueError(f"digits must be in [1, 15], got {digits}")
 
 
 def bbox_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                            digits: int, max_ranges: int = 2000) -> list[str]:
+                            digits: int) -> list[str]:
     """Driver-side planning: bbox -> covering z2_p partition prefixes.
 
-    Normalizes the window, runs the exact Z2 range decomposition at
-    4*digits bits of precision (+2 for the hex shift), and expands the
-    ranges into the distinct ``digits``-char hex prefixes they cover.
+    Normalizes the window and returns, in closed form, every
+    ``digits``-char hex prefix whose cell meets it. The hex key is
+    (z << 2), so a prefix fixes the top 2*digits bits of x and of y.
     """
     if xmin > xmax or ymin > ymax:
         raise ValueError(
             f"inverted bbox ({xmin},{ymin},{xmax},{ymax}); split "
             "dateline-crossing windows before planning")
-    nx0 = int(_LON.normalize(max(xmin, -180.0)))
-    nx1 = int(_LON.normalize(min(xmax, 180.0)))
-    ny0 = int(_LAT.normalize(max(ymin, -90.0)))
-    ny1 = int(_LAT.normalize(min(ymax, 90.0)))
-    zbound = z2_bounds_to_zbound(nx0, ny0, nx1, ny1)
-    ranges = z2_ranges([zbound], max_ranges=max_ranges)
-    # hex key is (z << 2) as 16 chars, so the d-char prefix is the top
-    # 4d bits of (z << 2) == z >> (62 - 4d)
-    shift = 62 - 4 * digits
-    total = 16 ** digits
-    prefixes: set[str] = set()
-    for r in ranges:
-        for p in range(r.lower >> shift, (r.upper >> shift) + 1):
-            prefixes.add(format(p, f"0{digits}x"))
-        if len(prefixes) >= total:
-            break
-    return sorted(prefixes)
+    _check_digits(digits)
+    nx0, nx1 = (int(_LON.normalize(_clamp(v, -180.0, 180.0))) for v in (xmin, xmax))
+    ny0, ny1 = (int(_LAT.normalize(_clamp(v, -90.0, 90.0))) for v in (ymin, ymax))
+    return _prefix_cover(z2_encode, 31, (nx0, ny0), (nx1, ny1),
+                         (2 * digits, 2 * digits), 62 - 4 * digits, digits)
 
 
 def bbox_query(spark, path: str, xmin: float, ymin: float, xmax: float,
@@ -122,7 +205,7 @@ def bbox_query(spark, path: str, xmin: float, ymin: float, xmax: float,
     for points) — the flag mirrors the reference's loose-bbox semantics
     for parity.
     """
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     prefixes = bbox_partition_prefixes(xmin, ymin, xmax, ymax, digits)
     cond = F.col("z2_p").isin(prefixes)
     exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
@@ -151,7 +234,7 @@ def plan_query(spark, path: str, cql: str, digits: int = 2,
     """
     from ..functions.cql import cql_filter, extract_bounds
 
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     windows = extract_bounds(cql, "geom")
     plan = {"strategy": "full-scan", "windows": windows, "prefixes": None}
     if require_bounded and windows is None:
@@ -278,7 +361,7 @@ def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
     sidecar range predicates (pushed to parquet row groups). Returns rows
     whose envelope intersects the window; exact geometry refine is the
     caller's predicate (the reference's residual-CQL split)."""
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     prefixes = xz2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
     overlap = ((F.col("bx0") <= xmax) & (F.col("bx1") >= xmin)
                & (F.col("by0") <= ymax) & (F.col("by1") >= ymin))
@@ -293,7 +376,6 @@ def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
 
 from ..curves.binnedtime import MAX_OFFSET  # noqa: E402
 from ..curves.sfc import Z3SFC  # noqa: E402
-from ..curves.zranges import z3_bounds_to_zbound, z3_ranges  # noqa: E402
 
 _Z3 = Z3SFC("week")
 _WEEK_S = 604_800
@@ -335,27 +417,21 @@ def write_indexed_z3(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
 
 
 def z3_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                          off0: int, off1: int, digits: int,
-                          max_ranges: int = 2000) -> list[str]:
+                          off0: int, off1: int, digits: int) -> list[str]:
     """Covering z3_p prefixes for a bbox x within-bin offset window
-    [off0, off1] (inclusive, seconds)."""
-    nx0 = int(_Z3.lon.normalize(max(xmin, -180.0)))
-    nx1 = int(_Z3.lon.normalize(min(xmax, 180.0)))
-    ny0 = int(_Z3.lat.normalize(max(ymin, -90.0)))
-    ny1 = int(_Z3.lat.normalize(min(ymax, 90.0)))
-    nt0 = int(_Z3.time.normalize(float(max(off0, 0))))
-    nt1 = int(_Z3.time.normalize(float(min(off1, MAX_OFFSET["week"]))))
-    zbound = z3_bounds_to_zbound(nx0, ny0, nt0, nx1, ny1, nt1)
-    ranges = z3_ranges([zbound], max_ranges=max_ranges)
-    shift = 64 - 4 * digits
-    total = 16 ** digits
-    prefixes: set[str] = set()
-    for r in ranges:
-        for p in range((r.lower << 1) >> shift, ((r.upper << 1) >> shift) + 1):
-            prefixes.add(format(p, f"0{digits}x"))
-        if len(prefixes) >= total:
-            break
-    return sorted(prefixes)
+    [off0, off1] (inclusive, seconds), in closed form. The hex key is
+    (z << 1) with t, y, x interleaved from the top, so a 4*digits-bit
+    prefix fixes L+(r>=1) bits of t, L+(r>=2) of y and L of x, where
+    L, r = divmod(4*digits, 3)."""
+    _check_digits(digits)
+    nx0, nx1 = (int(_Z3.lon.normalize(_clamp(v, -180.0, 180.0))) for v in (xmin, xmax))
+    ny0, ny1 = (int(_Z3.lat.normalize(_clamp(v, -90.0, 90.0))) for v in (ymin, ymax))
+    nt0, nt1 = (int(_Z3.time.normalize(float(_clamp(v, 0, MAX_OFFSET["week"]))))
+                for v in (off0, off1))
+    lead, rem = divmod(4 * digits, 3)
+    keep = (lead, lead + (rem >= 2), lead + (rem >= 1))
+    return _prefix_cover(z3_encode, 21, (nx0, ny0, nt0), (nx1, ny1, nt1),
+                         keep, 63 - 4 * digits, digits)
 
 
 def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
@@ -368,7 +444,7 @@ def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
     windows; interior bins share the full-offset prefix set (computed
     once) — exactly the reference's per-bin range fan-out.
     """
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     if t1 <= t0:  # empty half-open interval: nothing can match
         return df.filter(F.lit(False))
     b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
@@ -491,7 +567,7 @@ def stbox_query_xz3(spark, path: str, xmin: float, ymin: float, xmax: float,
     prefix pruning + envelope/interval sidecar predicates. Returns rows
     whose ENVELOPE intersects the box and dtg in [t0, t1); exact geometry
     refine is the caller's residual predicate."""
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     if t1 <= t0:  # empty half-open interval: nothing can match
         return df.filter(F.lit(False))
     b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
@@ -575,7 +651,7 @@ def bbox_query_s2(spark, path: str, xmin: float, ymin: float, xmax: float,
     """Planned bbox scan over the s2 store: covering-prefix partition
     pruning + exact pushed coordinate range predicates. ``x``/``y`` must
     name the same columns the store was written with."""
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     prefixes = s2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
     cond = F.col("s2_p").isin(prefixes)
     exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
@@ -618,7 +694,7 @@ def stbox_query_s3(spark, path: str, xmin: float, ymin: float, xmax: float,
     before offset), so one covering serves every bin — the per-bin work
     the Z3 planner must do disappears here by key design.
     """
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     if t1 <= t0:  # empty half-open interval: nothing can match
         return df.filter(F.lit(False))
     prefixes = s2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
@@ -660,7 +736,7 @@ def attr_query(spark, path: str, attr: str, value,
     bucket pruning (one hive partition family per value) + optional z2
     prefix pruning + pushed exact predicates. digits/max_buckets must
     match the write."""
-    df = spark.read.parquet(path)
+    df = open_store(spark, path)
     one = df.sparkSession.range(1).select(
         F.pmod(F.xxhash64(F.lit(value)), F.lit(max_buckets)).alias("b"))
     bucket = one.collect()[0]["b"]  # same JVM hash the writer used

@@ -109,6 +109,17 @@ def _pd_cell(val, duck_type):
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_match(spark, duck, name):
+    _assert_oracle_match(spark, duck, name)
+
+
+def test_shp_read_fresh_session(spark, duck):
+    """The driver runs a query on a session where nothing is registered:
+    ``newSession()`` shares the context but has its own function registry,
+    so a query that uses st_* functions must register them itself."""
+    _assert_oracle_match(spark.newSession(), duck, "shp_read")
+
+
+def _assert_oracle_match(spark, duck, name):
     sdf = _QUERIES[name](spark, SF_DIR)
     _lint_spark_schema(name, sdf)
     scols = sdf.columns

@@ -104,6 +104,165 @@ def test_prefixes_world_bbox_is_everything(spark):
     assert len(bbox_partition_prefixes(-180, -90, 180, 90, digits=1)) == 16
 
 
+def _brute_cover(decode, n_bits: int, digits: int, lows, highs) -> list[str]:
+    """Every ``digits``-hex-char prefix of an ``n_bits``-bit Morton code
+    whose box meets the normalized window [lows, highs]: the box of a
+    prefix runs from the decode of its lowest code to that of its highest."""
+    shift = np.uint64(n_bits - 4 * digits)
+    p = np.arange(16 ** digits, dtype=np.uint64)
+    lo = decode(p << shift)
+    hi = decode(((p + np.uint64(1)) << shift) - np.uint64(1))
+    meets = np.ones(len(p), dtype=bool)
+    for a, b, w0, w1 in zip(lo, hi, lows, highs):
+        meets &= (np.asarray(a) <= w1) & (np.asarray(b) >= w0)
+    return [format(int(v), f"0{digits}x") for v in p[meets]]
+
+
+def _cover_windows(seed: int, n: int) -> list[tuple]:
+    rng = np.random.default_rng(seed)
+    out = [(-180.0, -90.0, 180.0, 90.0),           # whole world
+           (-74.0, 40.7, -74.0, 40.7),             # point-sized
+           (-180.0, -90.0, -180.0, -90.0), (180.0, 90.0, 180.0, 90.0),
+           (-190.0, -95.0, -170.0, -80.0),         # clamped at the edges
+           (170.0, 80.0, 200.0, 100.0), (-200.0, 10.0, -185.0, 20.0),
+           (-10.0, 91.0, 10.0, 95.0)]
+    for _ in range(n):
+        x0, y0 = rng.uniform(-185, 185), rng.uniform(-95, 95)
+        w, h = rng.choice([0.0, 0.01, 1.0, 20.0, 200.0], size=2) * rng.random(2)
+        out.append((x0, y0, x0 + w, y0 + h))
+    return out
+
+
+@pytest.mark.parametrize("digits", [1, 2, 3])
+def test_z2_prefix_cover_matches_brute_force(digits):
+    """The closed-form z2 cover is exactly the set of prefixes whose cell
+    meets the window (clamped to the world, then normalized)."""
+    from geomesa_spark.curves.sfc import Z2SFC
+    from geomesa_spark.curves.zorder import z2_decode
+
+    sfc = Z2SFC()
+    for x0, y0, x1, y1 in _cover_windows(100 + digits, 150):
+        nx = [int(sfc.lon.normalize(np.clip(v, -180, 180))) for v in (x0, x1)]
+        ny = [int(sfc.lat.normalize(np.clip(v, -90, 90))) for v in (y0, y1)]
+        want = _brute_cover(z2_decode, 62, digits, (nx[0], ny[0]), (nx[1], ny[1]))
+        assert bbox_partition_prefixes(x0, y0, x1, y1, digits) == want, (x0, y0, x1, y1)
+
+
+@pytest.mark.parametrize("digits", [1, 2])
+def test_z3_prefix_cover_matches_brute_force(digits):
+    """The closed-form z3 cover equals the brute-force prefix boxes that
+    meet the normalized (lon, lat, week offset) window, for full and
+    partial week-offset windows."""
+    from geomesa_spark.curves.sfc import Z3SFC
+    from geomesa_spark.curves.zorder import z3_decode
+    from geomesa_spark.plans.store import z3_partition_prefixes
+
+    sfc = Z3SFC("week")
+    rng = np.random.default_rng(7 + digits)
+    week = 604_799
+    for x0, y0, x1, y1 in _cover_windows(200 + digits, 40):
+        o0, o1 = sorted(int(v) for v in rng.integers(0, week + 1, 2))
+        for off0, off1 in ((0, week), (o0, o1), (0, 0), (week, week)):
+            nx = [int(sfc.lon.normalize(np.clip(v, -180, 180))) for v in (x0, x1)]
+            ny = [int(sfc.lat.normalize(np.clip(v, -90, 90))) for v in (y0, y1)]
+            nt = [int(sfc.time.normalize(float(v))) for v in (off0, off1)]
+            want = _brute_cover(z3_decode, 63, digits, (nx[0], ny[0], nt[0]),
+                                (nx[1], ny[1], nt[1]))
+            got = z3_partition_prefixes(x0, y0, x1, y1, off0, off1, digits)
+            assert got == want, (x0, y0, x1, y1, off0, off1)
+
+
+def _spy_parquet(monkeypatch) -> list:
+    """Record every DataFrameReader.parquet call (a store open)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        calls.append(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return calls
+
+
+_BOX = (-20.0, -10.0, 20.0, 10.0)
+
+
+def _point_rows(ids):
+    return [(int(i), float(i % 40) - 19.5, float(i % 20) - 9.5) for i in ids]
+
+
+def _ids_in_box(spark, path):
+    return sorted(r["pid"] for r in bbox_query(spark, path, *_BOX).collect())
+
+
+def test_open_store_reuses_unchanged_store(spark, tmp_path, monkeypatch):
+    """A repeated query on an unchanged store opens nothing again and
+    returns the same rows."""
+    path = str(tmp_path / "reuse")
+    write_indexed(spark.createDataFrame(_point_rows(range(300)),
+                                        "pid long, lon double, lat double"), path)
+    calls = _spy_parquet(monkeypatch)
+    first = _ids_in_box(spark, path)
+    calls.clear()
+    assert _ids_in_box(spark, path) == first and len(first) == 300
+    assert calls == []
+
+
+def test_open_store_sees_every_store_change(spark, tmp_path):
+    """Each way the store's files change (an overwrite, a file published
+    into an existing partition, a compaction) is seen by the next query."""
+    import shutil
+
+    from geomesa_spark.plans.store import compact_store
+
+    schema = "pid long, lon double, lat double"
+    path = str(tmp_path / "live")
+    write_indexed(spark.createDataFrame(_point_rows(range(100)), schema), path)
+    assert _ids_in_box(spark, path) == list(range(100))
+
+    # overwrite the same path with different rows
+    write_indexed(spark.createDataFrame(_point_rows(range(500, 560)), schema), path)
+    assert _ids_in_box(spark, path) == list(range(500, 560))
+
+    # publish a staged file into an existing partition by rename, the way
+    # streaming ingest publishes a batch
+    stage = str(tmp_path / "stage")
+    write_indexed(spark.createDataFrame(_point_rows([500 + 40 * 7]), schema)
+                  .coalesce(1), stage)
+    (part,) = [d for d in os.listdir(stage) if d.startswith("z2_p=")]
+    assert os.path.isdir(os.path.join(path, part))
+    (src,) = [f for f in os.listdir(os.path.join(stage, part))
+              if f.endswith(".parquet")]
+    os.replace(os.path.join(stage, part, src),
+               os.path.join(path, part, "batch-1-0.parquet"))
+    shutil.rmtree(stage)
+    want = sorted(list(range(500, 560)) + [780])
+    assert _ids_in_box(spark, path) == want
+
+    # compaction swaps the directory for a rewritten one
+    compact_store(spark, path, ["z2_p"], sort_by=["z2_hex"])
+    assert _ids_in_box(spark, path) == want
+
+
+def test_open_store_keeps_sessions_apart(spark, tmp_path):
+    """A new session sharing the context never gets another session's
+    DataFrame for the same store."""
+    from geomesa_spark.plans.store import open_store
+
+    path = str(tmp_path / "sessions")
+    write_indexed(spark.createDataFrame(_point_rows(range(50)),
+                                        "pid long, lon double, lat double"), path)
+    other = spark.newSession()
+    for s in (spark, other, spark, other):
+        df = open_store(s, path)
+        assert df.sparkSession is s
+        assert df._jdf.sparkSession().equals(s._jsparkSession)
+    assert open_store(other, path) is not open_store(spark, path)
+
+
 def test_partition_rows_in_manifest(spark, tmp_path):
     """partition_by stages record per-partition row counts (the
     per-partition lineage/metrics surface the salt planner reads)."""
