@@ -2789,12 +2789,14 @@ def q_store_stbox(spark, sf_dir):
 
 
 def q_store_ageoff(spark, sf_dir):
-    """Dtg age-off retention scan (plans/store.age_off_query_z3 — the
-    reference's DtgAgeOffFilter at scan time): events younger than a
-    14-day TTL at the explicit reference instant Jan 31 2024, over a
+    """Dtg age-off retention scan (the reference's DtgAgeOffFilter at
+    scan time, DtgAgeOffFilter.scala / AgeOffFilter.scala): events
+    younger than a 14-day TTL at the explicit reference instant Jan 31
+    2024 (half-open [now - ttl, now); an explicit now keeps the scan
+    deterministic across retries), an interval-only scan of a
     Z3-partitioned store — expired whole weeks drop at the PARTITION
     level before any file opens. Oracle is the plain time filter."""
-    from geomesa_spark.plans.store import age_off_query_z3, write_indexed_z3
+    from geomesa_spark.plans.store import KEYSPACES, scan_store, write_indexed_z3
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -2803,8 +2805,8 @@ def q_store_ageoff(spark, sf_dir):
         F.unix_timestamp("ts").alias("secs"))
     path = _store_tmp(sf_dir, "ageoff")
     write_indexed_z3(ev, path)
-    out = age_off_query_z3(spark, path, ttl_s=14 * 86400,
-                           now_s=1706659200)
+    now = 1706659200
+    out = scan_store(spark, path, KEYSPACES["z3"], None, (now - 14 * 86400, now))
     return out.select("event_id", "lon", "lat", "secs")
 
 
@@ -2936,8 +2938,8 @@ def q_store_plan_xz(spark, sf_dir):
     import os
 
     from geomesa_spark.plans.planner import planned_query
-    from geomesa_spark.plans.store import (write_indexed_xz2,
-                                           write_indexed_xz3)
+    from geomesa_spark.plans.store import (KEYSPACES, write_indexed_xz2,
+                                           write_store)
 
     secs = (F.lit(1704067200).cast("long")
             + (F.col("c_custkey") % 28).cast("long") * 86400
@@ -2946,7 +2948,7 @@ def q_store_plan_xz(spark, sf_dir):
     base = _store_tmp(sf_dir, "planxz")
     stores = {k: os.path.join(base, k) for k in ("xz2", "xz3")}
     write_indexed_xz2(rects, stores["xz2"])
-    write_indexed_xz3(rects, stores["xz3"])
+    write_store(rects, stores["xz3"], KEYSPACES["xz3"])
     x0, y0, x1, y1, t0, t1 = _XZ3_STBOX
     plan, df = planned_query(
         spark, stores, bbox=(x0, y0, x1, y1), interval=(t0, t1))
@@ -2996,7 +2998,7 @@ def q_store_plan_t(spark, sf_dir):
     whole-world per-bin prefix cover with week-bin pruning. Raises
     unless z3 is chosen with z2 absent from the cost table; oracle =
     the plain time filter (row-set invariance through the
-    interval-only scan path of stbox_query_z3)."""
+    interval-only scan path of plans/store.scan_store)."""
     import os
 
     from geomesa_spark.plans.planner import planned_query
@@ -3354,8 +3356,8 @@ _XZ3_STBOX = (-10.0, -20.0, 25.0, 15.0,
 
 def q_store_xz3(spark, sf_dir):
     """XZ3 spatio-temporal extended-geometry store round trip
-    (plans/store.write_indexed_xz3 -> stbox_query_xz3): WKB rects keyed
-    by (xz3_bin, xz3_p) hive partitions — week-binned XZ3 keys, the
+    (plans/store.write_store -> scan_store, the xz3 keyspace): WKB rects
+    keyed by (xz3_bin, xz3_p) hive partitions — week-binned XZ3 keys, the
     reference XZ3IndexKeySpace.scala:48-80 key layout — scanned with
     per-bin prefix pruning + envelope/interval sidecar predicates. Each
     customer rect carries a deterministic dtg spread over 4 weeks
@@ -3363,16 +3365,16 @@ def q_store_xz3(spark, sf_dir):
     = the plain envelope-overlap + half-open time filter over the same
     derived rects; equality proves the per-bin XZ3 prefix cover loses
     no rows for extended geometries."""
-    from geomesa_spark.plans.store import stbox_query_xz3, write_indexed_xz3
+    from geomesa_spark.plans.store import KEYSPACES, scan_store, write_store
 
     secs = (F.lit(1704067200).cast("long")
             + (F.col("c_custkey") % 28).cast("long") * 86400
             + (F.col("c_custkey") % 7).cast("long") * 3600)
     rects = _cust_rects(spark, sf_dir).withColumn("secs", secs)
     path = _store_tmp(sf_dir, "xz3")
-    write_indexed_xz3(rects, path)
+    write_store(rects, path, KEYSPACES["xz3"])
     x0, y0, x1, y1, t0, t1 = _XZ3_STBOX
-    out = stbox_query_xz3(spark, path, x0, y0, x1, y1, t0, t1)
+    out = scan_store(spark, path, KEYSPACES["xz3"], (x0, y0, x1, y1), (t0, t1))
     return out.select("c_custkey", "bx0", "by0", "bx1", "by1", "secs")
 
 
@@ -3380,28 +3382,28 @@ _S2_BOX = (5.0, -25.0, 75.0, 30.0)
 
 
 def q_store_s2(spark, sf_dir):
-    """S2 store round trip: write_indexed_s2 (cube-face Hilbert cell
-    hex partitions) -> region-coverer prefix-pruned scan. Oracle = the
-    plain bbox filter; proves the S2 covering prefixes lose no rows
-    (S2IndexKeySpace.scala / S2RegionCoverer analog)."""
-    from geomesa_spark.plans.store import bbox_query_s2, write_indexed_s2
+    """S2 store round trip: write_store over the s2 keyspace (cube-face
+    Hilbert cell hex partitions) -> region-coverer prefix-pruned scan.
+    Oracle = the plain bbox filter; proves the S2 covering prefixes lose
+    no rows (S2IndexKeySpace.scala / S2RegionCoverer analog)."""
+    from geomesa_spark.plans.store import KEYSPACES, scan_store, write_store
 
     path = _store_tmp(sf_dir, "s2")
-    write_indexed_s2(_cust_points(spark, sf_dir), path)
-    x0, y0, x1, y1 = _S2_BOX
-    return bbox_query_s2(spark, path, x0, y0, x1, y1).select("c_custkey", "lon", "lat")
+    write_store(_cust_points(spark, sf_dir), path, KEYSPACES["s2"])
+    return (scan_store(spark, path, KEYSPACES["s2"], _S2_BOX)
+            .select("c_custkey", "lon", "lat"))
 
 
 _S3_STBOX = (-45.0, -20.0, 80.0, 50.0, 1704067200, 1705276800)  # Jan 1 - Jan 15
 
 
 def q_store_s3(spark, sf_dir):
-    """S3 spatio-temporal store round trip: write_indexed_s3 (S2 cell +
+    """S3 spatio-temporal store round trip: the s3 keyspace (S2 cell +
     week bin partitions, S3IndexKeySpace.scala:97-131 key order cell-
     before-offset) -> bin-range x covering-prefix pruned scan. Oracle =
     plain bbox+time filter; proves the time-independent S2 covering
     loses no rows across bins."""
-    from geomesa_spark.plans.store import stbox_query_s3, write_indexed_s3
+    from geomesa_spark.plans.store import KEYSPACES, scan_store, write_store
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -3409,9 +3411,9 @@ def q_store_s3(spark, sf_dir):
         tg.point_lat("event_id", _e["mlat"], _e["olat"]).alias("lat"),
         F.unix_timestamp("ts").alias("secs"))
     path = _store_tmp(sf_dir, "s3")
-    write_indexed_s3(ev, path)
+    write_store(ev, path, KEYSPACES["s3"])
     x0, y0, x1, y1, t0, t1 = _S3_STBOX
-    out = stbox_query_s3(spark, path, x0, y0, x1, y1, t0, t1)
+    out = scan_store(spark, path, KEYSPACES["s3"], (x0, y0, x1, y1), (t0, t1))
     return out.select("event_id", "lon", "lat", "secs")
 
 

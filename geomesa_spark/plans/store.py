@@ -1,91 +1,380 @@
-"""Cell-partitioned parquet store + bbox query planner — the engine index.
+"""Curve-keyed, hive-partitioned parquet stores — the engine index.
 
 The storage model of the reference FSDS/Iceberg path re-expressed for
-native Spark (SURVEY.md §1.3 / §3.3):
+native Spark (SURVEY.md §1.3 / §3.3). Every store layout is one
+:class:`KeySpace` record of the :data:`KEYSPACES` table, the analog of
+the reference's ``IndexKeySpace`` (Z3IndexKeySpace.scala:79-95): a
+fixed-width hex curve key (lexicographic == numeric order,
+Z2SFC.hexEncode), hive partitions on the week bin (Z3/XZ3/S3's [bin][z])
+and on the key's first ``digits`` hex chars (the Iceberg
+``truncate(hex, digits)`` spec, Z2Scheme.scala:48-51), a driver-side
+prefix cover of a query window, and the exact residual (a point box, or
+an envelope overlap on the ``bx0..by1`` sidecars of extended
+geometries, BoundingBoxField.scala:22-70).
 
-- each point row gets ``z2_hex`` = Z2SFC.hexEncode(z) (hex of z << 2,
-  16 digits, lexicographic == numeric order; Z2SFC.scala:59-81) and a
-  partition column ``z2_p`` = first ``digits`` hex chars (the Iceberg
-  ``truncate(z2_hex, digits)`` partition spec, Z2Scheme.scala:48-51),
-- the directory layout is hive-partitioned parquet on ``z2_p`` —
-  manifest pruning becomes Spark partition pruning, parquet row-group
-  stats on lon/lat do the intra-partition skip,
-- a bbox query plans driver-side: the window's covering partition
-  prefixes in closed form (a d-hex-digit z prefix is an axis-aligned
-  box, so the cover is the interleave of the window's per-dimension
-  prefix ranges) -> ``z2_p IN (...)`` + lon/lat range predicates. The
-  scan shows both PartitionFilters and PushedFilters in .explain —
-  nothing is read outside the covering cells,
-- queries open the store through :func:`open_store`, which reuses the
-  DataFrame (and with it Spark's partition discovery) while the store's
-  files are unchanged.
+One write path (:func:`write_store`) and one scan path
+(:func:`scan_store`) serve every keyspace: a scan is ``prefix IN
+(cover)`` (per group of week bins sharing a within-bin window, for the
+binned stores) plus the exact residual, so .explain shows both
+PartitionFilters and PushedFilters and nothing is read outside the
+covering cells. Queries open the store through :func:`open_store`,
+which reuses the DataFrame (and with it Spark's partition discovery)
+while the store's files are unchanged.
 
 At 10^12 rows only the partition count changes (digits knob: 16^d
-partitions); the prefix cover is exact, so it needs no range budget.
+prefixes per bin); the covers depend on the window, not on the data.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 import threading
 from collections import OrderedDict
+from functools import reduce
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from ..curves.norm import normalized_lat, normalized_lon
-from ..curves.sfc import Z2SFC
+from ..curves.binnedtime import MAX_OFFSET
+from ..curves.s2 import MAX_LEVEL, cell_id_from_lonlat, region_coverer, s2_ranges
+from ..curves.sfc import Z2SFC, Z3SFC
+from ..curves.xz2 import XZ2SFC
+from ..curves.xz3 import XZ3SFC
 from ..curves.zorder import z2_encode, z3_encode
 # not called here; perfbench/tracing.py wraps these names on this module
 from ..curves.zranges import z2_ranges, z3_ranges  # noqa: F401
 
-__all__ = ["open_store", "write_indexed", "read_indexed", "bbox_query",
-           "bbox_partition_prefixes",
-           "query_store", "write_indexed_xz2", "bbox_query_xz2",
-           "xz2_partition_prefixes", "write_indexed_z3", "stbox_query_z3",
-           "z3_partition_prefixes", "write_indexed_xz3", "stbox_query_xz3",
-           "xz3_partition_prefixes", "write_indexed_s2", "bbox_query_s2",
-           "s2_partition_prefixes", "write_indexed_s3", "stbox_query_s3",
-           "write_indexed_attr", "attr_query", "compact_store"]
+__all__ = ["KeySpace", "KEYSPACES", "ATTR", "keyed", "write_store",
+           "scan_store", "bin_windows", "residual", "open_store",
+           "write_indexed", "read_indexed", "bbox_query", "z2_keyed",
+           "plan_query", "query_store", "write_indexed_xz2",
+           "bbox_query_xz2", "write_indexed_z3", "stbox_query_z3",
+           "write_indexed_attr", "attr_query",
+           "compact_store"]
 
-_LON = normalized_lon(31)
-_LAT = normalized_lat(31)
 _SFC = Z2SFC()
+_Z3 = Z3SFC("week")
+_XZ2 = XZ2SFC()
+_XZ3 = XZ3SFC(12, "week")
+_XZ3_MAXZ = (8 ** 13 - 1) // 7
+_XZ3_NLZ = 64 - _XZ3_MAXZ.bit_length()
+_XZ3_OFF = _XZ3_NLZ % 4
+_XZ3_DIGITS = (64 - _XZ3_NLZ) // 4 + (0 if _XZ3_OFF == 0 else 1)
+_WEEK_S = 604_800
+_WORLD = (-180.0, -90.0, 180.0, 90.0)
+# range-search budgets of the XZ and S2 covers
+_XZ_MAX_RANGES = 2000
+_S2_MAX_CELLS = 64
 
 
-def z2_hex_udf():
-    """pandas UDF: (lon, lat) -> 16-char z2 hex key (Z2SFC.hexEncode)."""
+# ---------------------------------------------------------------------------
+# keys: numpy encoders behind one Arrow UDF, each returning the curve
+# codes already shifted into their hex key's bit position
+
+def _z2_codes(x, y):
+    return np.asarray(_SFC.index(x, y, lenient=True), np.uint64) << np.uint64(2)
+
+
+def _z3_codes(x, y, secs):
+    """(z << 1): 16 hex chars over the 63-bit z (the Z2SFC.hexEncode
+    trick at Z3's bit width); z interleaves the offset within the week."""
+    _, z = _Z3.index_millis(x, y, np.asarray(secs, np.int64) * 1000, lenient=True)
+    return np.asarray(z, np.uint64) << np.uint64(1)
+
+
+def _xz2_codes(x0, y0, x1, y1):
+    z = _XZ2.index(x0, y0, x1, y1, lenient=True)
+    return np.asarray(z, np.uint64) << np.uint64(_XZ2.hex_bit_offset)
+
+
+def _xz3_codes(x0, y0, x1, y1, secs):
+    off = (np.asarray(secs, np.int64) % _WEEK_S).astype(np.float64)
+    z = _XZ3.index(x0, y0, off, x1, y1, off, lenient=True)
+    return np.asarray(z, np.uint64) << np.uint64(_XZ3_OFF)
+
+
+def _s2_codes(x, y):
+    """The UNSIGNED level-30 S2 cell id."""
+    return cell_id_from_lonlat(np.asarray(x, np.float64), np.asarray(y, np.float64),
+                               MAX_LEVEL).astype(np.uint64)
+
+
+def _hex_udf(encode, width: int):
+    """pandas UDF: key columns -> ``width``-char hex of ``encode``'s codes
+    (fixed width, so lexicographic == numeric order)."""
+    fmt = f"0{width}x"
 
     @F.pandas_udf(StringType())
-    def enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        z = _SFC.index(x.to_numpy(np.float64), y.to_numpy(np.float64), lenient=True)
-        return pd.Series(_SFC.hex_encode(z))
+    def enc(*cols: pd.Series) -> pd.Series:
+        codes = encode(*(c.to_numpy() for c in cols))
+        return pd.Series([format(int(v), fmt) for v in codes])
 
     return enc
 
 
-def z2_keyed(df: DataFrame, x: str = "lon", y: str = "lat",
-             digits: int = 2) -> DataFrame:
-    """Attach THE store key columns (z2_hex + z2_p hive partition) —
-    the single definition of the store layout, shared by the batch
-    writer below and streaming/ingest.stream_ingest_indexed so the two
-    write paths can never drift."""
-    enc = z2_hex_udf()
-    return (df.withColumn("z2_hex", enc(F.col(x), F.col(y)))
-              .withColumn("z2_p", F.substring("z2_hex", 1, digits)))
+def _envelope_cols_udf():
+    from ..geom.wkb import wkb_read
+
+    schema = StructType([StructField(c, DoubleType()) for c in
+                         ("bx0", "by0", "bx1", "by1")])
+
+    @F.pandas_udf(schema)
+    def env(s: pd.Series) -> pd.DataFrame:
+        rows = []
+        for v in s:
+            if v is None:
+                rows.append((None,) * 4)
+            else:
+                rows.append(wkb_read(bytes(v)).envelope())
+        return pd.DataFrame(rows, columns=["bx0", "by0", "bx1", "by1"])
+
+    return env
 
 
-def write_indexed(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                  digits: int = 2) -> None:
-    """Write a point DataFrame as a z2-partitioned parquet store.
+# ---------------------------------------------------------------------------
+# covers: (bbox, off0, off1, digits) -> sorted covering prefixes
 
-    digits=2 -> up to 256 partitions (bits = 4*digits of z-prefix).
+def _clamp_window(bbox, off0, off1):
+    """(x0, y0, t0), (x1, y1, t1) of a box and within-bin offset window,
+    clamped into the world and the week as the lenient store keys clamp
+    rows: a window wholly outside the world covers the edge cells its
+    clamped rows are keyed to."""
+    x0, y0, x1, y1 = bbox
+    lo, hi = (-180.0, -90.0, 0), (180.0, 90.0, MAX_OFFSET["week"])
+    return tuple(tuple(float(min(max(v, a), b)) for v, a, b in zip(w, lo, hi))
+                 for w in ((x0, y0, off0), (x1, y1, off1)))
+
+
+def _morton_cover(encode, dims):
+    """Closed-form cover of a Morton key over the n normalized ``dims``
+    (x, y[, within-bin offset]) of equal precision, interleaved with the
+    last dimension on top. A 4*digits-bit prefix fixes L + (r >= n - i)
+    bits of dimension i, where L, r = divmod(4*digits, n), so it is an
+    axis-aligned box, and the prefixes meeting the window are exactly
+    the interleaves of each dimension's prefix range."""
+    n, bits = len(dims), dims[0].precision
+
+    def cover(bbox, off0, off1, digits):
+        lows, highs = _clamp_window(bbox, off0, off1)
+        lead, rem = divmod(4 * digits, n)
+        axes = []
+        for i, (d, lo, hi) in enumerate(zip(dims, lows, highs)):
+            drop = bits - lead - (rem >= n - i)
+            axes.append(np.arange(int(d.normalize(lo)) >> drop,
+                                  (int(d.normalize(hi)) >> drop) + 1,
+                                  dtype=np.int64) << drop)
+        grid = np.meshgrid(*axes, indexing="ij")
+        codes = encode(*(g.ravel() for g in grid)).astype(np.uint64)
+        codes >>= np.uint64(n * bits - 4 * digits)
+        return [format(int(c), f"0{digits}x") for c in np.sort(codes)]
+
+    return cover
+
+
+def _range_prefixes(ranges, bit_offset: int, width: int,
+                    digits: int) -> list[str]:
+    """Covering prefixes of curve code ranges [lo, hi] (extra tuple
+    fields ignored) of a ``width``-hex-char key holding the code shifted
+    left by ``bit_offset``. A range's cells contain every row whose code
+    falls inside it, so the prefix union is a true superset of the
+    matching rows."""
+    shift = 4 * (width - digits)
+    total = 16 ** digits
+    prefixes: set[int] = set()
+    for lo, hi, *_ in ranges:
+        prefixes.update(range((lo << bit_offset) >> shift,
+                              ((hi << bit_offset) >> shift) + 1))
+        if len(prefixes) >= total:
+            break
+    return [format(p, f"0{digits}x") for p in sorted(prefixes)]
+
+
+def _xz2_cover(bbox, off0, off1, digits):
+    """XZ2 range planner (XZ2SFC.ranges BFS port) expanded to prefixes."""
+    (x0, y0, _), (x1, y1, _) = _clamp_window(bbox, off0, off1)
+    ranges = _XZ2.ranges([(x0, y0, x1, y1)], max_ranges=_XZ_MAX_RANGES)
+    return _range_prefixes(ranges, _XZ2.hex_bit_offset, _XZ2.hex_digits, digits)
+
+
+def _xz3_cover(bbox, off0, off1, digits):
+    (x0, y0, t0), (x1, y1, t1) = _clamp_window(bbox, off0, off1)
+    ranges = _XZ3.ranges([(x0, y0, t0, x1, y1, t1)], max_ranges=_XZ_MAX_RANGES)
+    return _range_prefixes(ranges, _XZ3_OFF, _XZ3_DIGITS, digits)
+
+
+def _s2_cover(bbox, off0, off1, digits):
+    """S2 covering (S2RegionCoverer analog) expanded to prefixes. The
+    S3 key orders the cell before the time offset, so one covering
+    serves every within-bin window."""
+    cells = region_coverer(*bbox, max_cells=_S2_MAX_CELLS)
+    return _range_prefixes(s2_ranges(cells), 0, 16, digits)
+
+
+# ---------------------------------------------------------------------------
+# the keyspace table
+
+class KeySpace(NamedTuple):
+    """One store layout (the reference's IndexKeySpace)."""
+
+    partitions: tuple        # hive partition columns, outer to inner
+    bin: str | None          # week-bin partition column, if any
+    hex: str                 # curve key column the prefix truncates
+    inputs: tuple            # key inputs: x, y, bx0..by1 (envelope), secs
+    encode: Callable         # numpy key inputs -> shifted curve codes
+    width: int               # hex chars of the key
+    cells: Callable          # unchecked cover; call cover()
+    extended: bool           # residual: envelope overlap, else point box
+
+    @property
+    def prefix(self) -> str:
+        return self.partitions[-1]
+
+    def cover(self, bbox, off0: int, off1: int, digits: int) -> list[str]:
+        """Sorted ``digits``-hex-char prefixes whose cells meet ``bbox``
+        within the week-offset window [off0, off1] (ignored by unbinned
+        and S3 keys). The one input check every keyspace shares: an
+        inverted window (split dateline-crossing windows first) or a
+        prefix length outside the key raises ValueError."""
+        x0, y0, x1, y1 = bbox
+        if x0 > x1 or y0 > y1:
+            raise ValueError(
+                f"inverted bbox ({x0},{y0},{x1},{y1}); split "
+                "dateline-crossing windows before planning")
+        # the Morton covers shift a 62/63-bit code, so 15 chars at most
+        top = min(15, self.width)
+        if not 1 <= digits <= top:
+            raise ValueError(f"digits must be in [1, {top}], got {digits}")
+        return self.cells(bbox, off0, off1, digits)
+
+
+_ENV = ("bx0", "by0", "bx1", "by1")
+
+KEYSPACES: dict[str, KeySpace] = {
+    "z2": KeySpace(("z2_p",), None, "z2_hex", ("x", "y"), _z2_codes, 16,
+                   _morton_cover(z2_encode, (_SFC.lon, _SFC.lat)), False),
+    "xz2": KeySpace(("xz2_p",), None, "xz2_hex", _ENV, _xz2_codes,
+                    _XZ2.hex_digits, _xz2_cover, True),
+    "z3": KeySpace(("z3_bin", "z3_p"), "z3_bin", "z3_hex", ("x", "y", "secs"),
+                   _z3_codes, 16,
+                   _morton_cover(z3_encode, (_Z3.lon, _Z3.lat, _Z3.time)), False),
+    "xz3": KeySpace(("xz3_bin", "xz3_p"), "xz3_bin", "xz3_hex",
+                    _ENV + ("secs",), _xz3_codes, _XZ3_DIGITS, _xz3_cover, True),
+    "s2": KeySpace(("s2_p",), None, "s2_hex", ("x", "y"), _s2_codes, 16,
+                   _s2_cover, False),
+    "s3": KeySpace(("s3_bin", "s3_p"), "s3_bin", "s2_hex", ("x", "y"),
+                   _s2_codes, 16, _s2_cover, False),
+}
+
+# The attribute index's spatial tier: a z2 keyspace under an outer
+# hash-bucket partition (write_indexed_attr adds ``attr_b``).
+ATTR = KEYSPACES["z2"]._replace(partitions=("attr_b", "z2_p"))
+
+
+# ---------------------------------------------------------------------------
+# shared predicates, write path and scan path
+
+def _point_box(bbox, x: str, y: str) -> Column:
+    x0, y0, x1, y1 = bbox
+    return ((F.col(x) >= x0) & (F.col(x) <= x1)
+            & (F.col(y) >= y0) & (F.col(y) <= y1))
+
+
+def _envelope_overlap(bbox) -> Column:
+    x0, y0, x1, y1 = bbox
+    return ((F.col("bx0") <= x1) & (F.col("bx1") >= x0)
+            & (F.col("by0") <= y1) & (F.col("by1") >= y0))
+
+
+def residual(extended: bool, bbox, interval, x: str, y: str,
+             secs: str) -> list[Column]:
+    """The exact row predicates of a box / half-open [t0, t1) interval
+    query: an envelope overlap for extended geometries, else a point box
+    on ``x``/``y``."""
+    preds = []
+    if bbox is not None:
+        preds.append(_envelope_overlap(bbox) if extended else _point_box(bbox, x, y))
+    if interval is not None:
+        preds.append((F.col(secs) >= interval[0]) & (F.col(secs) < interval[1]))
+    return preds
+
+
+def bin_windows(t0: int, t1: int, bins=None) -> dict[tuple, list[int]]:
+    """The week bins meeting [t0, t1) (all of them, or those among
+    ``bins``) grouped by their within-bin offset window:
+    ``{(off0, off1): [bin, ...]}``. Interior bins share the full window,
+    so at most three windows need a cover (Z3IndexKeySpace.scala:132-158
+    per-bin fan-out)."""
+    b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
+    out: dict[tuple, list[int]] = {}
+    for b in (range(b0, b1 + 1) if bins is None
+              else [b for b in bins if b0 <= b <= b1]):
+        window = (max(t0 - b * _WEEK_S, 0), min(t1 - 1 - b * _WEEK_S, _WEEK_S - 1))
+        out.setdefault(window, []).append(b)
+    return out
+
+
+def keyed(df: DataFrame, ks: KeySpace, digits: int = 2, *, x: str = "lon",
+          y: str = "lat", geom: str = "geom", secs: str = "secs") -> DataFrame:
+    """Attach ``ks``'s key and partition columns. ``x``/``y`` name the
+    point columns, ``geom`` the WKB column of extended geometries (whose
+    ``bx0..by1`` envelope sidecars are added) and ``secs`` the
+    epoch-seconds dtg, as far as the keyspace reads them."""
+    if ks.extended:
+        df = (df.withColumn("__e__", _envelope_cols_udf()(F.col(geom)))
+                .select("*", *(f"__e__.{c}" for c in _ENV)).drop("__e__"))
+    names = {"x": x, "y": y, "secs": secs}
+    enc = _hex_udf(ks.encode, ks.width)
+    df = df.withColumn(ks.hex, enc(*(F.col(names.get(c, c)) for c in ks.inputs)))
+    if ks.bin is not None:  # a null dtg lands in the null (default) bin
+        df = df.withColumn(ks.bin, F.floor(F.col(secs) / F.lit(_WEEK_S)).cast("int"))
+    return df.withColumn(ks.prefix, F.substring(ks.hex, 1, digits))
+
+
+def write_store(df: DataFrame, path: str, ks: KeySpace, digits: int = 2,
+                **cols) -> None:
+    """Write ``df`` as a ``ks``-partitioned parquet store (up to 16^digits
+    prefixes per bin); ``cols`` as for :func:`keyed`."""
+    keyed(df, ks, digits, **cols).write.mode("overwrite") \
+        .partitionBy(*ks.partitions).parquet(path)
+
+
+def scan_store(spark, path: str, ks: KeySpace, bbox=None, interval=None,
+               digits: int = 2, *, x: str = "lon", y: str = "lat",
+               secs: str = "secs") -> DataFrame:
+    """Planned scan of a ``ks`` store: partition pruning + the exact
+    pushed residual. ``bbox=(x0, y0, x1, y1)``, ``interval=(t0, t1)``
+    epoch seconds half-open; ``digits``/``x``/``y``/``secs`` must match
+    the write.
+
+    A binned store with an interval prunes per group of week bins
+    sharing a within-bin window (:func:`bin_windows`), each group with
+    its own cover (the whole world stands in for a missing bbox).
+    Otherwise the bbox's cover prunes the prefix column.
     """
-    z2_keyed(df, x, y, digits).write.mode("overwrite") \
-        .partitionBy("z2_p").parquet(path)
+    df = open_store(spark, path)
+    if interval is not None and interval[1] <= interval[0]:
+        return df.filter(F.lit(False))  # empty half-open interval
+    conds = residual(ks.extended, bbox, interval, x, y, secs)
+    if ks.bin is not None and interval is not None:
+        by_cover: dict[tuple, list[int]] = {}
+        for (off0, off1), bins in bin_windows(*interval).items():
+            pfx = tuple(ks.cover(bbox or _WORLD, off0, off1, digits))
+            by_cover.setdefault(pfx, []).extend(bins)
+        conds.insert(0, reduce(operator.or_, (
+            F.col(ks.bin).isin(bins) & F.col(ks.prefix).isin(list(pfx))
+            for pfx, bins in by_cover.items())))
+    elif bbox is not None:
+        conds.insert(0, F.col(ks.prefix).isin(
+            ks.cover(bbox, 0, _WEEK_S - 1, digits)))
+    return df.filter(reduce(operator.and_, conds)) if conds else df
 
+
+# ---------------------------------------------------------------------------
+# opening a store
 
 # (session, absolute path) -> (file listing, DataFrame), least recently
 # used first; bounded so a process that opens many stores keeps only the
@@ -146,72 +435,61 @@ def read_indexed(spark, path: str) -> DataFrame:
     return open_store(spark, path)
 
 
-def _prefix_cover(encode, bits: int, lows, highs, keep, shift: int,
-                  digits: int) -> list[str]:
-    """Covering ``digits``-hex-char prefixes of a Morton-coded window.
+# ---------------------------------------------------------------------------
+# named entry points of the z2, xz2 and z3 stores
 
-    A prefix fixes the top ``keep[i]`` of the ``bits`` bits of dimension
-    i, so it is an axis-aligned box, and the prefixes meeting the window
-    [lows, highs] are exactly the interleaves of each dimension's prefix
-    range. ``encode`` interleaves full-width values; a prefix is the code
-    shifted right by ``shift``.
-    """
-    axes = [np.arange(lo >> (bits - k), (hi >> (bits - k)) + 1,
-                      dtype=np.int64) << (bits - k)
-            for lo, hi, k in zip(lows, highs, keep)]
-    grid = np.meshgrid(*axes, indexing="ij")
-    codes = encode(*(g.ravel() for g in grid)).astype(np.uint64) >> np.uint64(shift)
-    return [format(int(c), f"0{digits}x") for c in np.sort(codes)]
+def z2_keyed(df: DataFrame, x: str = "lon", y: str = "lat",
+             digits: int = 2) -> DataFrame:
+    """The z2 key columns (z2_hex + z2_p), shared by the batch writer and
+    streaming ingest so the two write paths can never drift."""
+    return keyed(df, KEYSPACES["z2"], digits, x=x, y=y)
 
 
-def _clamp(v, lo, hi):
-    """Clamp a window bound into the world, as the lenient store keys
-    clamp rows: a window wholly outside the world covers the edge cells
-    its clamped rows are keyed to."""
-    return min(max(v, lo), hi)
-
-
-def _check_digits(digits: int) -> None:
-    if not 1 <= digits <= 15:
-        raise ValueError(f"digits must be in [1, 15], got {digits}")
-
-
-def bbox_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                            digits: int) -> list[str]:
-    """Driver-side planning: bbox -> covering z2_p partition prefixes.
-
-    Normalizes the window and returns, in closed form, every
-    ``digits``-char hex prefix whose cell meets it. The hex key is
-    (z << 2), so a prefix fixes the top 2*digits bits of x and of y.
-    """
-    if xmin > xmax or ymin > ymax:
-        raise ValueError(
-            f"inverted bbox ({xmin},{ymin},{xmax},{ymax}); split "
-            "dateline-crossing windows before planning")
-    _check_digits(digits)
-    nx0, nx1 = (int(_LON.normalize(_clamp(v, -180.0, 180.0))) for v in (xmin, xmax))
-    ny0, ny1 = (int(_LAT.normalize(_clamp(v, -90.0, 90.0))) for v in (ymin, ymax))
-    return _prefix_cover(z2_encode, 31, (nx0, ny0), (nx1, ny1),
-                         (2 * digits, 2 * digits), 62 - 4 * digits, digits)
+def write_indexed(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
+                  digits: int = 2) -> None:
+    """Point rows -> z2 store (up to 16^digits partitions)."""
+    write_store(df, path, KEYSPACES["z2"], digits, x=x, y=y)
 
 
 def bbox_query(spark, path: str, xmin: float, ymin: float, xmax: float,
-               ymax: float, digits: int = 2, loose: bool = False,
+               ymax: float, digits: int = 2,
                x: str = "lon", y: str = "lat") -> DataFrame:
-    """Planned bbox scan: partition pruning + pushed range predicates.
+    """Planned bbox scan of a z2 store (``x``/``y`` as written)."""
+    return scan_store(spark, path, KEYSPACES["z2"], (xmin, ymin, xmax, ymax),
+                      None, digits, x=x, y=y)
 
-    ``x``/``y`` must name the same columns the store was written with
-    (write_indexed's x/y). loose=True skips nothing here (bbox is exact
-    for points) — the flag mirrors the reference's loose-bbox semantics
-    for parity.
-    """
-    df = open_store(spark, path)
-    prefixes = bbox_partition_prefixes(xmin, ymin, xmax, ymax, digits)
-    cond = F.col("z2_p").isin(prefixes)
-    exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
-             & (F.col(y) >= ymin) & (F.col(y) <= ymax))
-    return df.filter(cond & exact)
 
+def write_indexed_xz2(df: DataFrame, path: str, geom: str = "geom",
+                      digits: int = 2) -> None:
+    """Extended geometries (WKB ``geom``) -> xz2 store (XZ2Scheme)."""
+    write_store(df, path, KEYSPACES["xz2"], digits, geom=geom)
+
+
+def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
+                   ymax: float, digits: int = 2) -> DataFrame:
+    """Planned bbox scan of an xz2 store: rows whose ENVELOPE meets the
+    window; exact geometry refine is the caller's predicate (the
+    reference's residual-CQL split)."""
+    return scan_store(spark, path, KEYSPACES["xz2"], (xmin, ymin, xmax, ymax),
+                      None, digits)
+
+
+def write_indexed_z3(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
+                     secs: str = "secs", digits: int = 2) -> None:
+    """Points with an epoch-seconds dtg -> (z3_bin, z3_p) store."""
+    write_store(df, path, KEYSPACES["z3"], digits, x=x, y=y, secs=secs)
+
+
+def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
+                   ymax: float, t0: int, t1: int, digits: int = 2,
+                   x: str = "lon", y: str = "lat", secs: str = "secs") -> DataFrame:
+    """Planned box x [t0, t1) epoch-seconds scan of a z3 store."""
+    return scan_store(spark, path, KEYSPACES["z3"], (xmin, ymin, xmax, ymax),
+                      (t0, t1), digits, x=x, y=y, secs=secs)
+
+
+# ---------------------------------------------------------------------------
+# ECQL queries over a z2 store
 
 def plan_query(spark, path: str, cql: str, digits: int = 2,
                x: str = "lon", y: str = "lat",
@@ -248,15 +526,12 @@ def plan_query(spark, path: str, cql: str, digits: int = 2,
             plan["strategy"] = "empty"
             return df.filter(F.lit(False)), plan
         prefixes: set[str] = set()
-        cond = None
-        for (x0, y0, x1, y1) in windows:
-            prefixes.update(bbox_partition_prefixes(x0, y0, x1, y1, digits))
-            w = ((F.col(x) >= x0) & (F.col(x) <= x1)
-                 & (F.col(y) >= y0) & (F.col(y) <= y1))
-            cond = w if cond is None else (cond | w)
+        for w in windows:
+            prefixes.update(KEYSPACES["z2"].cover(w, 0, _WEEK_S - 1, digits))
         if len(prefixes) < (16 ** digits) * 3 // 4:
             plan["strategy"] = "z2-index"
             plan["prefixes"] = len(prefixes)
+            cond = reduce(operator.or_, (_point_box(w, x, y) for w in windows))
             df = df.filter(F.col("z2_p").isin(sorted(prefixes)) & cond)
         # else: covering nearly everything — pruning would only add a
         # partition-filter cost; fall through to full-scan + residual
@@ -273,437 +548,10 @@ def query_store(spark, path: str, cql: str, digits: int = 2,
 
 
 # ---------------------------------------------------------------------------
-# XZ2 store: extended geometries (the reference's XZ2Scheme /
-# BoundingBoxField sidecar columns, SURVEY.md §1.3)
+# attribute index
 
-from ..curves.xz2 import XZ2SFC  # noqa: E402
-
-_XZ2 = XZ2SFC()
-
-
-def _envelope_cols_udf():
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..geom.wkb import wkb_read
-
-    schema = StructType([StructField(c, DoubleType()) for c in
-                         ("bx0", "by0", "bx1", "by1")])
-
-    @F.pandas_udf(schema)
-    def env(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for v in s:
-            if v is None:
-                rows.append((None,) * 4)
-            else:
-                rows.append(wkb_read(bytes(v)).envelope())
-        return pd.DataFrame(rows, columns=["bx0", "by0", "bx1", "by1"])
-
-    return env
-
-
-def xz2_hex_udf():
-    """pandas UDF: envelope -> XZ2 hex key (XZ2Function / ZValueField)."""
-
-    @F.pandas_udf(StringType())
-    def enc(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
-        z = _XZ2.index(x0.to_numpy(np.float64), y0.to_numpy(np.float64),
-                       x1.to_numpy(np.float64), y1.to_numpy(np.float64),
-                       lenient=True)
-        return pd.Series(_XZ2.hex_encode(z))
-
-    return enc
-
-
-def write_indexed_xz2(df: DataFrame, path: str, geom: str = "geom",
-                      digits: int = 2) -> None:
-    """Write an extended-geometry DataFrame as an xz2-partitioned store.
-
-    Adds the reference's sidecar columns: ``bx0..by1`` envelope doubles
-    (BoundingBoxField.scala:22-70 — row-group pruning surface),
-    ``xz2_hex`` (ZValueField) and the ``xz2_p`` partition prefix
-    (XZ2Scheme truncate spec).
-    """
-    env = _envelope_cols_udf()
-    enc = xz2_hex_udf()
-    out = (df.withColumn("__e__", env(F.col(geom)))
-             .select("*", "__e__.bx0", "__e__.by0", "__e__.bx1", "__e__.by1")
-             .drop("__e__")
-             .withColumn("xz2_hex", enc("bx0", "by0", "bx1", "by1"))
-             .withColumn("xz2_p", F.substring("xz2_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("xz2_p").parquet(path)
-
-
-def xz2_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                           digits: int, max_ranges: int = 2000) -> list[str]:
-    """bbox window -> covering xz2_p prefixes via the XZ2 range planner
-    (XZ2SFC.ranges BFS port — a range's cells contain every geometry
-    whose sequence code falls inside it, so the prefix union is a true
-    superset of matching rows)."""
-    ranges = _XZ2.ranges([(max(xmin, -180.0), max(ymin, -90.0),
-                           min(xmax, 180.0), min(ymax, 90.0))],
-                         max_ranges=max_ranges)
-    shift = 4 * (_XZ2.hex_digits - digits)
-    off = _XZ2.hex_bit_offset
-    total = 16 ** digits
-    prefixes: set[str] = set()
-    for lo, hi, _ in ranges:
-        for p in range((lo << off) >> shift, ((hi << off) >> shift) + 1):
-            prefixes.add(format(p, f"0{digits}x"))
-        if len(prefixes) >= total:
-            break
-    return sorted(prefixes)
-
-
-def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
-                   ymax: float, digits: int = 2) -> DataFrame:
-    """Planned bbox scan over the xz2 store: partition pruning + envelope
-    sidecar range predicates (pushed to parquet row groups). Returns rows
-    whose envelope intersects the window; exact geometry refine is the
-    caller's predicate (the reference's residual-CQL split)."""
-    df = open_store(spark, path)
-    prefixes = xz2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
-    overlap = ((F.col("bx0") <= xmax) & (F.col("bx1") >= xmin)
-               & (F.col("by0") <= ymax) & (F.col("by1") >= ymin))
-    return df.filter(F.col("xz2_p").isin(prefixes) & overlap)
-
-
-# ---------------------------------------------------------------------------
-# Z3 store: spatio-temporal points (the reference's DEFAULT index for
-# point data with time — Z3IndexKeySpace [shard][bin:2][z:8] re-expressed
-# as (z3_bin, z3_p) hive partitions; per-bin interval decomposition per
-# Z3IndexKeySpace.scala:132-158)
-
-from ..curves.binnedtime import MAX_OFFSET  # noqa: E402
-from ..curves.sfc import Z3SFC  # noqa: E402
-
-_Z3 = Z3SFC("week")
-_WEEK_S = 604_800
-
-
-def z3_key_udf():
-    """pandas UDF: (lon, lat, epoch-secs) -> struct(bin int, z3_hex string).
-
-    The hex key is (z << 1) as 16 chars so lexicographic prefix order ==
-    numeric order over the 63-bit z (the Z2SFC.hexEncode trick applied
-    to Z3's bit width).
-    """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType([StructField("bin", IntegerType()),
-                         StructField("z3_hex", StringType())])
-
-    @F.pandas_udf(schema)
-    def enc(x: pd.Series, y: pd.Series, secs: pd.Series) -> pd.DataFrame:
-        bins, z = _Z3.index_millis(x.to_numpy(np.float64), y.to_numpy(np.float64),
-                                   secs.to_numpy(np.int64) * 1000, lenient=True)
-        shifted = np.asarray(z, dtype=np.uint64) << np.uint64(1)
-        return pd.DataFrame({"bin": bins.astype(np.int32),
-                             "z3_hex": [format(int(v), "016x") for v in shifted]})
-
-    return enc
-
-
-def write_indexed_z3(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                     secs: str = "secs", digits: int = 2) -> None:
-    """Write a spatio-temporal point DataFrame as a (z3_bin, z3_p)
-    partitioned store. ``secs`` is epoch seconds (long)."""
-    enc = z3_key_udf()
-    out = (df.withColumn("__k__", enc(F.col(x), F.col(y), F.col(secs)))
-             .select("*", "__k__.bin", "__k__.z3_hex").drop("__k__")
-             .withColumnRenamed("bin", "z3_bin")
-             .withColumn("z3_p", F.substring("z3_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("z3_bin", "z3_p").parquet(path)
-
-
-def z3_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                          off0: int, off1: int, digits: int) -> list[str]:
-    """Covering z3_p prefixes for a bbox x within-bin offset window
-    [off0, off1] (inclusive, seconds), in closed form. The hex key is
-    (z << 1) with t, y, x interleaved from the top, so a 4*digits-bit
-    prefix fixes L+(r>=1) bits of t, L+(r>=2) of y and L of x, where
-    L, r = divmod(4*digits, 3)."""
-    _check_digits(digits)
-    nx0, nx1 = (int(_Z3.lon.normalize(_clamp(v, -180.0, 180.0))) for v in (xmin, xmax))
-    ny0, ny1 = (int(_Z3.lat.normalize(_clamp(v, -90.0, 90.0))) for v in (ymin, ymax))
-    nt0, nt1 = (int(_Z3.time.normalize(float(_clamp(v, 0, MAX_OFFSET["week"]))))
-                for v in (off0, off1))
-    lead, rem = divmod(4 * digits, 3)
-    keep = (lead, lead + (rem >= 2), lead + (rem >= 1))
-    return _prefix_cover(z3_encode, 21, (nx0, ny0, nt0), (nx1, ny1, nt1),
-                         keep, 63 - 4 * digits, digits)
-
-
-def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
-                   ymax: float, t0: int, t1: int, digits: int = 2,
-                   x: str = "lon", y: str = "lat", secs: str = "secs") -> DataFrame:
-    """Planned spatio-temporal box scan: per-bin interval decomposition
-    -> (z3_bin, z3_p) partition pruning -> pushed range predicates.
-
-    [t0, t1) in epoch seconds. Boundary bins get their partial offset
-    windows; interior bins share the full-offset prefix set (computed
-    once) — exactly the reference's per-bin range fan-out.
-    """
-    df = open_store(spark, path)
-    if t1 <= t0:  # empty half-open interval: nothing can match
-        return df.filter(F.lit(False))
-    b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
-    full: list[str] | None = None
-    cond = None
-    for b in range(b0, b1 + 1):
-        off0 = max(t0 - b * _WEEK_S, 0)
-        off1 = min(t1 - 1 - b * _WEEK_S, _WEEK_S - 1)
-        if off0 == 0 and off1 == _WEEK_S - 1:
-            if full is None:
-                full = z3_partition_prefixes(xmin, ymin, xmax, ymax,
-                                             0, _WEEK_S - 1, digits)
-            pfx = full
-        else:
-            pfx = z3_partition_prefixes(xmin, ymin, xmax, ymax, off0, off1, digits)
-        c = (F.col("z3_bin") == b) & F.col("z3_p").isin(pfx)
-        cond = c if cond is None else (cond | c)
-    exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
-             & (F.col(y) >= ymin) & (F.col(y) <= ymax)
-             & (F.col(secs) >= t0) & (F.col(secs) < t1))
-    return df.filter(cond & exact)
-
-
-def age_off_query_z3(spark, path: str, ttl_s: int, now_s: int,
-                     digits: int = 2, x: str = "lon", y: str = "lat",
-                     secs: str = "secs") -> DataFrame:
-    """Dtg age-off retention scan over a Z3 store: keep only features
-    younger than ``ttl_s`` at the EXPLICIT reference time ``now_s``
-    (half-open [now - ttl, now); explicit now keeps the scan
-    deterministic across retries — the decayed_density convention).
-    The reference applies age-off per-row at scan time
-    (geomesa-index-api .../index/filters/DtgAgeOffFilter.scala,
-    AgeOffFilter.scala); a store partitioned by Z3 (bin, prefix) gets
-    the same semantics with whole EXPIRED WEEKS dropped at the
-    partition level — the scan never opens files older than the
-    retention horizon, which is the 100 TB point of age-off.
-    Implemented as the whole-world stbox scan, so the per-bin interval
-    decomposition and pushed time predicates are shared, tested code.
-    """
-    return stbox_query_z3(spark, path, -180.0, -90.0, 180.0, 90.0,
-                          int(now_s) - int(ttl_s), int(now_s),
-                          digits=digits, x=x, y=y, secs=secs)
-
-
-# ---------------------------------------------------------------------------
-# XZ3 store: extended geometries + time (XZ3IndexKeySpace
-# [shard][bin:2][xz3] -> (xz3_bin, xz3_p) partitions; instant-dtg
-# features, the reference's common case)
-
-from ..curves.xz3 import XZ3SFC  # noqa: E402
-
-_XZ3 = XZ3SFC(12, "week")
-_XZ3_MAXZ = (8 ** 13 - 1) // 7
-_XZ3_NLZ = 64 - _XZ3_MAXZ.bit_length()
-_XZ3_OFF = _XZ3_NLZ % 4
-_XZ3_DIGITS = (64 - _XZ3_NLZ) // 4 + (0 if _XZ3_OFF == 0 else 1)
-
-
-def xz3_key_udf():
-    """pandas UDF: (envelope, epoch-secs) -> struct(bin int, xz3_hex)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType([StructField("bin", IntegerType()),
-                         StructField("xz3_hex", StringType())])
-
-    @F.pandas_udf(schema)
-    def enc(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
-            secs: pd.Series) -> pd.DataFrame:
-        bins = (secs.to_numpy(np.int64) // _WEEK_S).astype(np.int32)
-        off = (secs.to_numpy(np.int64) % _WEEK_S).astype(np.float64)
-        z = _XZ3.index(x0.to_numpy(np.float64), y0.to_numpy(np.float64), off,
-                       x1.to_numpy(np.float64), y1.to_numpy(np.float64), off,
-                       lenient=True)
-        shifted = np.asarray(z, dtype=np.uint64) << np.uint64(_XZ3_OFF)
-        fmt = f"0{_XZ3_DIGITS}x"
-        return pd.DataFrame({"bin": bins,
-                             "xz3_hex": [format(int(v), fmt) for v in shifted]})
-
-    return enc
-
-
-def write_indexed_xz3(df: DataFrame, path: str, geom: str = "geom",
-                      secs: str = "secs", digits: int = 2) -> None:
-    """Extended geometries with an instant dtg -> (xz3_bin, xz3_p) store
-    with envelope sidecar columns."""
-    env = _envelope_cols_udf()
-    enc = xz3_key_udf()
-    out = (df.withColumn("__e__", env(F.col(geom)))
-             .select("*", "__e__.bx0", "__e__.by0", "__e__.bx1", "__e__.by1")
-             .drop("__e__")
-             .withColumn("__k__", enc("bx0", "by0", "bx1", "by1", F.col(secs)))
-             .select("*", "__k__.bin", "__k__.xz3_hex").drop("__k__")
-             .withColumnRenamed("bin", "xz3_bin")
-             .withColumn("xz3_p", F.substring("xz3_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("xz3_bin", "xz3_p").parquet(path)
-
-
-def xz3_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                           off0: int, off1: int, digits: int,
-                           max_ranges: int = 2000) -> list[str]:
-    ranges = _XZ3.ranges([(max(xmin, -180.0), max(ymin, -90.0), float(max(off0, 0)),
-                           min(xmax, 180.0), min(ymax, 90.0),
-                           float(min(off1, MAX_OFFSET["week"])))],
-                         max_ranges=max_ranges)
-    shift = 4 * (_XZ3_DIGITS - digits)
-    total = 16 ** digits
-    prefixes: set[str] = set()
-    for lo, hi, _ in ranges:
-        for p in range((lo << _XZ3_OFF) >> shift, ((hi << _XZ3_OFF) >> shift) + 1):
-            prefixes.add(format(p, f"0{digits}x"))
-        if len(prefixes) >= total:
-            break
-    return sorted(prefixes)
-
-
-def stbox_query_xz3(spark, path: str, xmin: float, ymin: float, xmax: float,
-                    ymax: float, t0: int, t1: int, digits: int = 2,
-                    secs: str = "secs") -> DataFrame:
-    """Planned spatio-temporal box scan over the xz3 store: per-bin
-    prefix pruning + envelope/interval sidecar predicates. Returns rows
-    whose ENVELOPE intersects the box and dtg in [t0, t1); exact geometry
-    refine is the caller's residual predicate."""
-    df = open_store(spark, path)
-    if t1 <= t0:  # empty half-open interval: nothing can match
-        return df.filter(F.lit(False))
-    b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
-    full: list[str] | None = None
-    cond = None
-    for b in range(b0, b1 + 1):
-        off0 = max(t0 - b * _WEEK_S, 0)
-        off1 = min(t1 - 1 - b * _WEEK_S, _WEEK_S - 1)
-        if off0 == 0 and off1 == _WEEK_S - 1:
-            if full is None:
-                full = xz3_partition_prefixes(xmin, ymin, xmax, ymax,
-                                              0, _WEEK_S - 1, digits)
-            pfx = full
-        else:
-            pfx = xz3_partition_prefixes(xmin, ymin, xmax, ymax, off0, off1, digits)
-        c = (F.col("xz3_bin") == b) & F.col("xz3_p").isin(pfx)
-        cond = c if cond is None else (cond | c)
-    exact = ((F.col("bx0") <= xmax) & (F.col("bx1") >= xmin)
-             & (F.col("by0") <= ymax) & (F.col("by1") >= ymin)
-             & (F.col(secs) >= t0) & (F.col(secs) < t1))
-    return df.filter(cond & exact)
-
-
-# ---------------------------------------------------------------------------
-# S2 store: cube-face Hilbert cells (S2IndexKeySpace semantics —
-# geomesa-index-api .../index/s2/S2IndexKeySpace.scala keys by the S2
-# cell id; query coverings via the S2RegionCoverer analog in curves/s2)
-
-from ..curves.s2 import MAX_LEVEL as _S2_MAX_LEVEL  # noqa: E402
-from ..curves.s2 import cell_id_from_lonlat, region_coverer, s2_ranges  # noqa: E402
-
-
-def s2_hex_udf():
-    """pandas UDF: (lon, lat) -> 16-char hex of the UNSIGNED level-30 S2
-    cell id (lexicographic == unsigned numeric order)."""
-
-    @F.pandas_udf(StringType())
-    def enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        ids = cell_id_from_lonlat(x.to_numpy(np.float64),
-                                  y.to_numpy(np.float64),
-                                  _S2_MAX_LEVEL).astype(np.uint64)
-        return pd.Series([format(int(v), "016x") for v in ids])
-
-    return enc
-
-
-def write_indexed_s2(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                     digits: int = 2) -> None:
-    """Point DataFrame -> S2-cell-partitioned parquet store (s2_p = first
-    ``digits`` hex chars of the cell id; top digit encodes the cube face)."""
-    enc = s2_hex_udf()
-    out = (df.withColumn("s2_hex", enc(F.col(x), F.col(y)))
-             .withColumn("s2_p", F.substring("s2_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("s2_p").parquet(path)
-
-
-def s2_partition_prefixes(xmin: float, ymin: float, xmax: float, ymax: float,
-                          digits: int, max_cells: int = 64) -> list[str]:
-    """Driver-side planning: bbox -> S2 covering -> distinct ``digits``-char
-    hex partition prefixes of the covering id ranges."""
-    if xmin > xmax or ymin > ymax:
-        raise ValueError(
-            f"inverted bbox ({xmin},{ymin},{xmax},{ymax}); split "
-            "dateline-crossing windows before planning")
-    ranges = s2_ranges(region_coverer(xmin, ymin, xmax, ymax,
-                                      max_cells=max_cells))
-    shift = 64 - 4 * digits
-    total = 16 ** digits
-    prefixes: set[str] = set()
-    for lo, hi in ranges:
-        for p in range(lo >> shift, (hi >> shift) + 1):
-            prefixes.add(format(p, f"0{digits}x"))
-        if len(prefixes) >= total:
-            break
-    return sorted(prefixes)
-
-
-def bbox_query_s2(spark, path: str, xmin: float, ymin: float, xmax: float,
-                  ymax: float, digits: int = 2,
-                  x: str = "lon", y: str = "lat") -> DataFrame:
-    """Planned bbox scan over the s2 store: covering-prefix partition
-    pruning + exact pushed coordinate range predicates. ``x``/``y`` must
-    name the same columns the store was written with."""
-    df = open_store(spark, path)
-    prefixes = s2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
-    cond = F.col("s2_p").isin(prefixes)
-    exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
-             & (F.col(y) >= ymin) & (F.col(y) <= ymax))
-    return df.filter(cond & exact)
-
-
-# ---------------------------------------------------------------------------
-# S3 store: S2 cell + time bin (S3IndexKeySpace semantics — the reference
-# keys points by (bin: Short, s2CellId: Long, timeOffset: Int);
-# geomesa-index-api .../index/s3/S3IndexKeySpace.scala:97-131 toIndexKey,
-# .../index/s3/package.scala:19 S3IndexKey. Unlike Z3, time is NOT
-# interleaved with space — the cell id precedes the offset — so pruning
-# is bin-range x S2-covering-prefix and the within-bin offset window is
-# a pushed residual predicate, exactly the reference's BoundedRange
-# (S3IndexKey(bin, s.lower, t0), S3IndexKey(bin, s.upper, t1)) fan-out
-# at S3IndexKeySpace.scala:227.)
-
-
-def write_indexed_s3(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                     secs: str = "secs", digits: int = 2) -> None:
-    """Spatio-temporal point DataFrame -> (s3_bin, s3_p) partitioned
-    store: week bin + first ``digits`` hex chars of the level-30 S2 cell
-    id. ``secs`` is epoch seconds (long)."""
-    enc = s2_hex_udf()
-    out = (df.withColumn("s2_hex", enc(F.col(x), F.col(y)))
-             .withColumn("s3_bin", F.floor(F.col(secs) / F.lit(_WEEK_S)).cast("int"))
-             .withColumn("s3_p", F.substring("s2_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("s3_bin", "s3_p").parquet(path)
-
-
-def stbox_query_s3(spark, path: str, xmin: float, ymin: float, xmax: float,
-                   ymax: float, t0: int, t1: int, digits: int = 2,
-                   x: str = "lon", y: str = "lat", secs: str = "secs") -> DataFrame:
-    """Planned spatio-temporal box scan over the s3 store: bin-range x
-    S2-covering-prefix partition pruning + exact pushed lon/lat/secs
-    range predicates. [t0, t1) in epoch seconds.
-
-    The spatial prefix set is time-independent (the S3 key orders cell
-    before offset), so one covering serves every bin — the per-bin work
-    the Z3 planner must do disappears here by key design.
-    """
-    df = open_store(spark, path)
-    if t1 <= t0:  # empty half-open interval: nothing can match
-        return df.filter(F.lit(False))
-    prefixes = s2_partition_prefixes(xmin, ymin, xmax, ymax, digits)
-    b0, b1 = t0 // _WEEK_S, (t1 - 1) // _WEEK_S
-    cond = (F.col("s3_bin").between(b0, b1) & F.col("s3_p").isin(prefixes))
-    exact = ((F.col(x) >= xmin) & (F.col(x) <= xmax)
-             & (F.col(y) >= ymin) & (F.col(y) <= ymax)
-             & (F.col(secs) >= t0) & (F.col(secs) < t1))
-    return df.filter(cond & exact)
+def _bucket(c: Column, max_buckets: int) -> Column:
+    return F.pmod(F.xxhash64(c), F.lit(max_buckets))
 
 
 def write_indexed_attr(df: DataFrame, path: str, attr: str,
@@ -716,16 +564,13 @@ def write_indexed_attr(df: DataFrame, path: str, attr: str,
     bounded HASH BUCKET of the attribute (xxhash64 mod max_buckets, so
     a high-cardinality attribute can never explode the partition count
     — the reference shards attribute keys the same way), with a short
-    z2 prefix as the secondary partition layer. An attr-equality query
-    prunes to one bucket; a spatial filter prunes z2 prefixes within
-    it; the exact attr/bbox predicates push down to the parquet scan.
+    z2 prefix as the secondary partition layer (:data:`ATTR`). An
+    attr-equality query prunes to one bucket; a spatial filter prunes
+    z2 prefixes within it; the exact attr/bbox predicates push down to
+    the parquet scan.
     """
-    enc = z2_hex_udf()
-    bucket = F.pmod(F.xxhash64(F.col(attr)), F.lit(max_buckets))
-    out = (df.withColumn("attr_b", bucket)
-             .withColumn("z2_hex", enc(F.col(x), F.col(y)))
-             .withColumn("z2_p", F.substring("z2_hex", 1, digits)))
-    out.write.mode("overwrite").partitionBy("attr_b", "z2_p").parquet(path)
+    write_store(df.withColumn("attr_b", _bucket(F.col(attr), max_buckets)),
+                path, ATTR, digits, x=x, y=y)
 
 
 def attr_query(spark, path: str, attr: str, value,
@@ -735,19 +580,13 @@ def attr_query(spark, path: str, attr: str, value,
     """Planned attribute(+bbox) scan over a write_indexed_attr store:
     bucket pruning (one hive partition family per value) + optional z2
     prefix pruning + pushed exact predicates. digits/max_buckets must
-    match the write."""
-    df = open_store(spark, path)
-    one = df.sparkSession.range(1).select(
-        F.pmod(F.xxhash64(F.lit(value)), F.lit(max_buckets)).alias("b"))
-    bucket = one.collect()[0]["b"]  # same JVM hash the writer used
-    cond = (F.col("attr_b") == int(bucket)) & (F.col(attr) == F.lit(value))
-    if bbox is not None:
-        xmin, ymin, xmax, ymax = bbox
-        prefixes = bbox_partition_prefixes(xmin, ymin, xmax, ymax, digits)
-        cond = cond & F.col("z2_p").isin(prefixes) \
-            & (F.col(x) >= xmin) & (F.col(x) <= xmax) \
-            & (F.col(y) >= ymin) & (F.col(y) <= ymax)
-    return df.filter(cond)
+    match the write. The bucket is the writer's JVM hash of the literal
+    cast to the column's type (xxhash64 of an int and of the same bigint
+    differ), which the optimizer folds to a constant partition filter."""
+    df = scan_store(spark, path, ATTR, bbox, None, digits, x=x, y=y)
+    lit = F.lit(value).cast(df.schema[attr].dataType)
+    return df.filter((F.col("attr_b") == _bucket(lit, max_buckets))
+                     & (F.col(attr) == lit))
 
 
 def compact_store(spark, path: str, partition_cols: list[str],
@@ -767,7 +606,6 @@ def compact_store(spark, path: str, partition_cols: list[str],
     ``{"files_before": n, "files_after": m, "rows": r}``.
     """
     import glob
-    import os
     import shutil
 
     def _count_files(p):

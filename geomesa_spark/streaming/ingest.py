@@ -4,11 +4,11 @@ the Lambda store's persistence tier: geomesa-lambda/.../stream/
 TransientStore.scala persists expired entries to the durable store).
 
 ``stream_ingest_indexed`` runs a micro-batch ``foreachBatch`` sink:
-each batch is keyed by plans/store.z2_keyed (the SAME function the
-batch writer uses — the two write paths cannot drift) and appended to
-the hive layout, so ALL existing store queries — bbox_query,
-query_store, compact_store — run unmodified over a store that is still
-being fed. A per-batch manifest JSON records row_count, the z2_p cell
+each batch is staged by plans/store.write_store over the z2 keyspace
+(the SAME write path as the batch writer — the two cannot drift) and
+appended to the hive layout, so ALL existing store queries —
+bbox_query, query_store, compact_store — run unmodified over a store
+that is still being fed. A per-batch manifest JSON records row_count, the z2_p cell
 histogram (the skew metric), and wall time — the lineage+metrics
 discipline of plans/checkpoint.py at micro-batch grain.
 
@@ -70,7 +70,7 @@ def _fs_rmtree(p):
 def _batch_writer(path: str, x: str, y: str, digits: int, hist_top: int):
     from pyspark.sql import functions as F
 
-    from ..plans.store import z2_keyed
+    from ..plans.store import KEYSPACES, write_store
 
     mdir = os.path.join(path, _MANIFEST_DIR)
 
@@ -79,9 +79,8 @@ def _batch_writer(path: str, x: str, y: str, digits: int, hist_top: int):
         if _fs_exists(mpath):  # committed batch -> replay is a no-op
             return
         t0 = time.monotonic()
-        out = z2_keyed(batch_df, x, y, digits)
         staging = os.path.join(path, "_staging", f"batch-{batch_id}")
-        out.write.mode("overwrite").partitionBy("z2_p").parquet(staging)
+        write_store(batch_df, staging, KEYSPACES["z2"], digits, x=x, y=y)
         # publish: deterministic names + sweep = idempotent under replay
         moved = []
         for part in sorted(os.listdir(staging)):

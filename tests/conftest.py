@@ -22,3 +22,45 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+def _partition_filters(df) -> list[list[str]]:
+    """The PartitionFilters of every file scan in ``df``'s executed plan,
+    one list of predicate strings per scan. Read from the scan nodes
+    rather than the plan string, which cuts each scan field at
+    spark.sql.maxMetadataStringLength characters."""
+    todo, out = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if name == "FileSourceScanExec":
+            fs = node.partitionFilters()
+            out.append([fs.apply(i).toString() for i in range(fs.size())])
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.fixture
+def pruned_on():
+    """Assert that every file scan of a DataFrame prunes partitions with
+    a predicate naming each of the given partition columns; returns the
+    filters. An unpruned scan has an empty PartitionFilters list."""
+    import re
+
+    def check(df, *cols):
+        scans = _partition_filters(df)
+        assert scans, "no file scan in the executed plan"
+        for filters in scans:
+            assert filters, f"unpruned scan: {scans}"
+            for c in cols:
+                assert any(re.search(rf"(?<!\w){c}#", f) for f in filters), (c, scans)
+        return scans
+
+    return check

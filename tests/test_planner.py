@@ -17,9 +17,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from geomesa_spark.plans.planner import choose_strategy, planned_query  # noqa: E402
+from geomesa_spark.plans.planner import (  # noqa: E402
+    choose_strategy, planned_query, store_cost)
 from geomesa_spark.plans.store import (  # noqa: E402
-    write_indexed, write_indexed_attr, write_indexed_z3)
+    KEYSPACES, write_indexed, write_indexed_attr, write_indexed_z3)
 
 BBOX = (-60.0, -30.0, 60.0, 45.0)
 T0, T1 = 1704672000, 1705881600  # Jan 8 - Jan 22 2024 (2 of ~5 weeks)
@@ -104,7 +105,7 @@ def test_extended_family_ordering_and_rows(spark, tmp_path):
     row set equals the plain envelope+time filter whichever index
     runs (bbox-only never costs xz3 — see the bbox-only tests)."""
     from geomesa_spark.geom.wkb import Polygon, wkb_write
-    from geomesa_spark.plans.store import write_indexed_xz2, write_indexed_xz3
+    from geomesa_spark.plans.store import write_indexed_xz2, write_store
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -123,7 +124,7 @@ def test_extended_family_ordering_and_rows(spark, tmp_path):
                                "gid long, geom binary, secs long")
     stores = {"xz2": str(tmp_path / "xz2"), "xz3": str(tmp_path / "xz3")}
     write_indexed_xz2(df, stores["xz2"])
-    write_indexed_xz3(df, stores["xz3"])
+    write_store(df, stores["xz3"], KEYSPACES["xz3"])
 
     bbox = (-30.0, -25.0, 30.0, 25.0)
     t0, t1 = base + 4 * 86400, base + 16 * 86400
@@ -148,14 +149,13 @@ def test_extended_family_ordering_and_rows(spark, tmp_path):
 def test_binned_cost_ignores_hive_default_partition(tmp_path):
     """A __HIVE_DEFAULT_PARTITION__ bin dir (null dtg rows) must not
     crash the cost model; a store with ONLY that dir can't help."""
-    from geomesa_spark.plans.planner import _z3_cost
-
     p = tmp_path / "z3null"
     (p / "z3_bin=__HIVE_DEFAULT_PARTITION__").mkdir(parents=True)
-    assert _z3_cost(str(p), (-10.0, -10.0, 10.0, 10.0),
-                    (0, 604800), 2) is None
+    assert store_cost(KEYSPACES["z3"], str(p), (-10.0, -10.0, 10.0, 10.0),
+                      (0, 604800), 2) is None
     (p / "z3_bin=0").mkdir()
-    c = _z3_cost(str(p), (-10.0, -10.0, 10.0, 10.0), (0, 604800), 2)
+    c = store_cost(KEYSPACES["z3"], str(p), (-10.0, -10.0, 10.0, 10.0),
+                   (0, 604800), 2)
     assert c is not None and 0 < c <= 1.0
 
 
@@ -182,6 +182,8 @@ def test_bbox_only_on_binned_store_full_scans_and_keeps_null_dtg(
             F.col("secs")))
     z3p = str(tmp_path / "z3n")
     write_indexed_z3(pts, z3p)
+    # a null dtg has no week bin: those rows land in the null partition
+    assert os.path.isdir(os.path.join(z3p, "z3_bin=__HIVE_DEFAULT_PARTITION__"))
 
     p = choose_strategy({"z3": z3p}, bbox=BBOX)
     assert p["chosen"] == "full:z3" and p["costs"] == {"full:z3": 1.0}
@@ -200,14 +202,12 @@ def test_binned_cost_denominator_excludes_null_bin(tmp_path):
     """The null-dtg partition dir must not inflate the prunable-bin
     denominator: a store with one integer bin + the null dir prices a
     full-week interval exactly like a store with the bin alone."""
-    from geomesa_spark.plans.planner import _z3_cost
-
     a = tmp_path / "plain"
     (a / "z3_bin=0").mkdir(parents=True)
     b = tmp_path / "withnull"
     (b / "z3_bin=0").mkdir(parents=True)
     (b / "z3_bin=__HIVE_DEFAULT_PARTITION__").mkdir()
     bbox = (-10.0, -10.0, 10.0, 10.0)
-    ca = _z3_cost(str(a), bbox, (0, 604800), 2)
-    cb = _z3_cost(str(b), bbox, (0, 604800), 2)
+    ca = store_cost(KEYSPACES["z3"], str(a), bbox, (0, 604800), 2)
+    cb = store_cost(KEYSPACES["z3"], str(b), bbox, (0, 604800), 2)
     assert ca is not None and ca == cb

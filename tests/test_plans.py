@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.plans.checkpoint import read_manifest, run_stage
 from geomesa_spark.plans.store import (
-    bbox_partition_prefixes, bbox_query, write_indexed,
+    KEYSPACES, bbox_query, scan_store, write_indexed, write_store,
 )
 from geomesa_spark.sources.pages import generate_points, page_coords
 
@@ -72,7 +72,7 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
     assert m["stage"] == "agg"
 
 
-def test_indexed_store_bbox_query(spark, tmp_path):
+def test_indexed_store_bbox_query(spark, tmp_path, pruned_on):
     n = 20_000
     pts = generate_points(spark, n, partitions=4)
     path = str(tmp_path / "store")
@@ -90,18 +90,33 @@ def test_indexed_store_bbox_query(spark, tmp_path):
     assert len(rows) > 0
 
     # the plan must show partition pruning + pushed filters
+    pruned_on(got, "z2_p")
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "z2_p" in plan
     assert "PushedFilters" in plan and "lon" in plan
 
     # pruning is real: fewer partition dirs scanned than exist
-    prefixes = bbox_partition_prefixes(*bbox, digits=2)
+    prefixes = KEYSPACES["z2"].cover(bbox, 0, 0, 2)
     all_parts = [d for d in os.listdir(path) if d.startswith("z2_p=")]
     assert 0 < len(prefixes) < len(all_parts)
 
 
 def test_prefixes_world_bbox_is_everything(spark):
-    assert len(bbox_partition_prefixes(-180, -90, 180, 90, digits=1)) == 16
+    assert len(KEYSPACES["z2"].cover((-180, -90, 180, 90), 0, 0, 1)) == 16
+
+
+@pytest.mark.parametrize("name", sorted(KEYSPACES))
+def test_cover_rejects_invalid_input_on_every_keyspace(name):
+    """An inverted window and a prefix length outside 1..min(15, key
+    width) raise the same ValueError on every keyspace."""
+    ks = KEYSPACES[name]
+    assert ks.cover((-10.0, -10.0, 10.0, 10.0), 0, 604_799, 1)
+    with pytest.raises(ValueError, match="inverted bbox"):
+        ks.cover((10.0, -10.0, -10.0, 10.0), 0, 604_799, 2)
+    with pytest.raises(ValueError, match="inverted bbox"):
+        ks.cover((-10.0, 10.0, 10.0, -10.0), 0, 604_799, 2)
+    for digits in (0, -1, 16, min(15, ks.width) + 1):
+        with pytest.raises(ValueError, match="digits must be in"):
+            ks.cover((-10.0, -10.0, 10.0, 10.0), 0, 604_799, digits)
 
 
 def _brute_cover(decode, n_bits: int, digits: int, lows, highs) -> list[str]:
@@ -145,7 +160,8 @@ def test_z2_prefix_cover_matches_brute_force(digits):
         nx = [int(sfc.lon.normalize(np.clip(v, -180, 180))) for v in (x0, x1)]
         ny = [int(sfc.lat.normalize(np.clip(v, -90, 90))) for v in (y0, y1)]
         want = _brute_cover(z2_decode, 62, digits, (nx[0], ny[0]), (nx[1], ny[1]))
-        assert bbox_partition_prefixes(x0, y0, x1, y1, digits) == want, (x0, y0, x1, y1)
+        got = KEYSPACES["z2"].cover((x0, y0, x1, y1), 0, 0, digits)
+        assert got == want, (x0, y0, x1, y1)
 
 
 @pytest.mark.parametrize("digits", [1, 2])
@@ -155,7 +171,6 @@ def test_z3_prefix_cover_matches_brute_force(digits):
     partial week-offset windows."""
     from geomesa_spark.curves.sfc import Z3SFC
     from geomesa_spark.curves.zorder import z3_decode
-    from geomesa_spark.plans.store import z3_partition_prefixes
 
     sfc = Z3SFC("week")
     rng = np.random.default_rng(7 + digits)
@@ -168,7 +183,7 @@ def test_z3_prefix_cover_matches_brute_force(digits):
             nt = [int(sfc.time.normalize(float(v))) for v in (off0, off1)]
             want = _brute_cover(z3_decode, 63, digits, (nx[0], ny[0], nt[0]),
                                 (nx[1], ny[1], nt[1]))
-            got = z3_partition_prefixes(x0, y0, x1, y1, off0, off1, digits)
+            got = KEYSPACES["z3"].cover((x0, y0, x1, y1), off0, off1, digits)
             assert got == want, (x0, y0, x1, y1, off0, off1)
 
 
@@ -311,14 +326,13 @@ def test_query_store_cql(spark, tmp_path):
     assert empty.count() == 0
 
 
-def test_xz2_store_bbox_query(spark, tmp_path):
+def test_xz2_store_bbox_query(spark, tmp_path, pruned_on):
     """Extended-geometry store: xz2 partition pruning + envelope sidecar
     predicates return exactly the envelope-intersecting rows."""
     import numpy as np
 
     from geomesa_spark.geom.wkb import Polygon, wkb_write
-    from geomesa_spark.plans.store import (
-        bbox_query_xz2, write_indexed_xz2, xz2_partition_prefixes)
+    from geomesa_spark.plans.store import bbox_query_xz2, write_indexed_xz2
 
     rng = np.random.RandomState(11)
     rows = []
@@ -337,14 +351,15 @@ def test_xz2_store_bbox_query(spark, tmp_path):
     write_indexed_xz2(df, path)
 
     qx0, qy0, qx1, qy1 = -30.0, -20.0, 10.0, 15.0
-    got = {r["gid"] for r in
-           bbox_query_xz2(spark, path, qx0, qy0, qx1, qy1).collect()}
+    out = bbox_query_xz2(spark, path, qx0, qy0, qx1, qy1)
+    got = {r["gid"] for r in out.collect()}
     want = {r[0] for r in rows
             if r[2] <= qx1 and r[4] >= qx0 and r[3] <= qy1 and r[5] >= qy0}
     assert got == want and got
+    pruned_on(out, "xz2_p")
 
     # the planner actually prunes: covering prefixes < all partitions
-    prefixes = xz2_partition_prefixes(qx0, qy0, qx1, qy1, digits=2)
+    prefixes = KEYSPACES["xz2"].cover((qx0, qy0, qx1, qy1), 0, 0, 2)
     n_parts = spark.read.parquet(path).select("xz2_p").distinct().count()
     assert 0 < len(prefixes) < 256
     assert len(prefixes) < n_parts or n_parts < 8  # meaningful pruning
@@ -377,14 +392,13 @@ def test_plan_query_strategy_selection(spark, tmp_path):
     assert p["strategy"] == "empty"
 
 
-def test_z3_store_stbox_query(spark, tmp_path):
+def test_z3_store_stbox_query(spark, tmp_path, pruned_on):
     """Spatio-temporal store: (bin, z3-prefix) pruning returns exactly
     the box-and-interval rows; interior bins reuse the full-offset
     prefix set."""
     import numpy as np
 
-    from geomesa_spark.plans.store import (
-        stbox_query_z3, write_indexed_z3, z3_partition_prefixes)
+    from geomesa_spark.plans.store import stbox_query_z3, write_indexed_z3
 
     rng = np.random.RandomState(3)
     n = 5000
@@ -400,25 +414,23 @@ def test_z3_store_stbox_query(spark, tmp_path):
     qx0, qy0, qx1, qy1 = -60.0, -30.0, 40.0, 35.0
     t0 = base + 3 * 86400          # mid-week start
     t1 = base + 16 * 86400         # spans 3 bins incl. one full interior
-    got = {r["pid"] for r in
-           stbox_query_z3(spark, path, qx0, qy0, qx1, qy1, t0, t1).collect()}
+    out = stbox_query_z3(spark, path, qx0, qy0, qx1, qy1, t0, t1)
+    got = {r["pid"] for r in out.collect()}
     want = {r[0] for r in rows
             if qx0 <= r[1] <= qx1 and qy0 <= r[2] <= qy1 and t0 <= r[3] < t1}
     assert got == want and got
+    pruned_on(out, "z3_bin", "z3_p")
 
     # pruning is real: the window's prefixes are a strict subset
-    pfx = z3_partition_prefixes(qx0, qy0, qx1, qy1, 0, 604_799, digits=2)
+    pfx = KEYSPACES["z3"].cover((qx0, qy0, qx1, qy1), 0, 604_799, 2)
     assert 0 < len(pfx) < 256
 
 
-def test_s3_store_stbox_query(spark, tmp_path):
+def test_s3_store_stbox_query(spark, tmp_path, pruned_on):
     """S3 store (S2 cell + week bin): bin-range x covering-prefix pruning
     returns exactly the box-and-interval rows; the spatial prefix set is
     shared across bins (key orders cell before offset)."""
     import numpy as np
-
-    from geomesa_spark.plans.store import (
-        s2_partition_prefixes, stbox_query_s3, write_indexed_s3)
 
     rng = np.random.RandomState(7)
     n = 5000
@@ -429,33 +441,33 @@ def test_s3_store_stbox_query(spark, tmp_path):
             for i in range(n)]
     df = spark.createDataFrame(rows, "pid long, lon double, lat double, secs long")
     path = str(tmp_path / "s3_store")
-    write_indexed_s3(df, path)
+    s3 = KEYSPACES["s3"]
+    write_store(df, path, s3)
 
-    qx0, qy0, qx1, qy1 = -60.0, -30.0, 40.0, 35.0
+    box = qx0, qy0, qx1, qy1 = -60.0, -30.0, 40.0, 35.0
     t0 = base + 3 * 86400
     t1 = base + 16 * 86400
-    got = {r["pid"] for r in
-           stbox_query_s3(spark, path, qx0, qy0, qx1, qy1, t0, t1).collect()}
+    out = scan_store(spark, path, s3, box, (t0, t1))
+    got = {r["pid"] for r in out.collect()}
     want = {r[0] for r in rows
             if qx0 <= r[1] <= qx1 and qy0 <= r[2] <= qy1 and t0 <= r[3] < t1}
     assert got == want and got
+    pruned_on(out, "s3_bin", "s3_p")
 
     # pruning is real: the covering's prefixes are a strict subset
-    pfx = s2_partition_prefixes(qx0, qy0, qx1, qy1, digits=2)
+    pfx = s3.cover(box, 0, 604_799, 2)
     assert 0 < len(pfx) < 256
 
     # empty interval short-circuits
-    assert stbox_query_s3(spark, path, qx0, qy0, qx1, qy1, t0, t0).count() == 0
+    assert scan_store(spark, path, s3, box, (t0, t0)).count() == 0
 
 
-def test_xz3_store_stbox_query(spark, tmp_path):
+def test_xz3_store_stbox_query(spark, tmp_path, pruned_on):
     """Extended geometries + time: (bin, xz3-prefix) pruning returns
     exactly the envelope-and-interval rows."""
     import numpy as np
 
     from geomesa_spark.geom.wkb import Polygon, wkb_write
-    from geomesa_spark.plans.store import (
-        stbox_query_xz3, write_indexed_xz3, xz3_partition_prefixes)
 
     rng = np.random.RandomState(5)
     base = 1_600_000_000
@@ -471,18 +483,20 @@ def test_xz3_store_stbox_query(spark, tmp_path):
     df = spark.createDataFrame([(r[0], r[1], r[2]) for r in rows],
                                "gid long, geom binary, secs long")
     path = str(tmp_path / "xz3_store")
-    write_indexed_xz3(df, path)
+    xz3 = KEYSPACES["xz3"]
+    write_store(df, path, xz3)
 
-    qx0, qy0, qx1, qy1 = -40.0, -25.0, 30.0, 30.0
+    box = qx0, qy0, qx1, qy1 = -40.0, -25.0, 30.0, 30.0
     t0, t1 = base + 2 * 86400, base + 12 * 86400
-    got = {r["gid"] for r in
-           stbox_query_xz3(spark, path, qx0, qy0, qx1, qy1, t0, t1).collect()}
+    out = scan_store(spark, path, xz3, box, (t0, t1))
+    got = {r["gid"] for r in out.collect()}
     want = {r[0] for r in rows
             if r[3] <= qx1 and r[5] >= qx0 and r[4] <= qy1 and r[6] >= qy0
             and t0 <= r[2] < t1}
     assert got == want and got
+    pruned_on(out, "xz3_bin", "xz3_p")
 
-    pfx = xz3_partition_prefixes(qx0, qy0, qx1, qy1, 0, 604_799, digits=2)
+    pfx = xz3.cover(box, 0, 604_799, 2)
     assert 0 < len(pfx) < 256
 
 
@@ -501,7 +515,7 @@ def test_query_guard_rejects_unbounded(spark, tmp_path):
     assert p["strategy"] == "z2-index" and df.count() == 1
 
 
-def test_attr_store_query(spark, tmp_path):
+def test_attr_store_query(spark, tmp_path, pruned_on):
     """Attribute index: bucket + z2 partition pruning, exact row set."""
     from geomesa_spark.plans.store import attr_query, write_indexed_attr
 
@@ -514,6 +528,7 @@ def test_attr_store_query(spark, tmp_path):
     got = attr_query(spark, path, "cat", "c3", digits=1, max_buckets=16)
     rows = sorted(r["page_id"] for r in got.collect())
     assert rows == [i for i in range(n) if i % 5 == 3]
+    pruned_on(got, "attr_b")
 
     bbox = (-75.0, 39.5, -72.0, 41.5)
     gotb = attr_query(spark, path, "cat", "c3", bbox=bbox, digits=1,
@@ -525,9 +540,20 @@ def test_attr_store_query(spark, tmp_path):
     assert sorted(r["page_id"] for r in gotb.collect()) == \
         sorted(ids[keep].tolist())
 
+    pruned_on(gotb, "attr_b", "z2_p")
     plan = gotb._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "attr_b" in plan and "z2_p" in plan
     assert "PushedFilters" in plan
+
+    # a Python int against a bigint attribute hashes as the bigint the
+    # writer hashed, so the query finds its bucket
+    ipath = str(tmp_path / "astore_long")
+    write_indexed_attr(pts.filter(F.col("page_id") < 500)
+                       .withColumn("kind", F.col("page_id") % 5),
+                       ipath, "kind", digits=1, max_buckets=16)
+    goti = attr_query(spark, ipath, "kind", 3, digits=1, max_buckets=16)
+    assert sorted(r["page_id"] for r in goti.collect()) == \
+        [i for i in range(500) if i % 5 == 3]
+    pruned_on(goti, "attr_b")
 
 
 def test_compact_store_binpacks_and_sorts(spark, tmp_path):
@@ -674,13 +700,13 @@ def test_crawl_to_training_pipeline_checkpointed(spark, tmp_path):
     # 3 words — still below the loosened gate; content identical
 
 
-def test_z3_store_age_off_query(spark, tmp_path):
+def test_z3_store_age_off_query(spark, tmp_path, pruned_on):
     """Age-off retention scan: exactly the rows inside [now-ttl, now),
     and whole expired week-bins are pruned at the partition level (the
     executed plan's PartitionFilters carry z3_bin)."""
     import numpy as np
 
-    from geomesa_spark.plans.store import age_off_query_z3, write_indexed_z3
+    from geomesa_spark.plans.store import write_indexed_z3
 
     rng = np.random.RandomState(7)
     base = 1_600_000_000
@@ -694,16 +720,15 @@ def test_z3_store_age_off_query(spark, tmp_path):
 
     now = base + 4 * 604_800
     ttl = 10 * 86400   # horizon lands mid-week: oldest ~2.5 weeks expire
-    out = age_off_query_z3(spark, path, ttl_s=ttl, now_s=now)
+    out = scan_store(spark, path, KEYSPACES["z3"], None, (now - ttl, now))
     got = {r["pid"] for r in out.collect()}
     want = {r[0] for r in rows if now - ttl <= r[3] < now}
     assert got == want and got and len(got) < len(rows)
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "z3_bin" in plan
+    pruned_on(out, "z3_bin")
 
 
-def test_inverted_index_store_query(spark, tmp_path):
+def test_inverted_index_store_query(spark, tmp_path, pruned_on):
     """Posting correctness vs a brute force over the same tokenization,
     case-normalized query terms, and hash-prefix partition pruning
     visible in the executed plan."""
@@ -726,8 +751,7 @@ def test_inverted_index_store_query(spark, tmp_path):
         ("hash", 3): (1, 0, [0]),
         ("vector", 1): (1, 0, [0]),
     }
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "term_p" in plan
+    pruned_on(out, "term_p")
 
     import pytest
     with pytest.raises(ValueError, match="at least one term"):

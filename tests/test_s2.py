@@ -103,11 +103,10 @@ def test_region_coverer_level_knobs():
     assert len(cells) <= 32 * 16
 
 
-def test_s2_store_roundtrip(spark, tmp_path):
-    """write_indexed_s2 + bbox_query_s2: planned scan == brute force, and
-    pruning touches a strict subset of partitions."""
-    from geomesa_spark.plans.store import (bbox_query_s2, s2_partition_prefixes,
-                                           write_indexed_s2)
+def test_s2_store_roundtrip(spark, tmp_path, pruned_on):
+    """The s2 keyspace's write_store + scan_store: planned scan == brute
+    force, and pruning touches a strict subset of partitions."""
+    from geomesa_spark.plans.store import KEYSPACES, scan_store, write_store
 
     rng = np.random.RandomState(17)
     n = 4000
@@ -115,10 +114,13 @@ def test_s2_store_roundtrip(spark, tmp_path):
             for i in range(n)]
     df = spark.createDataFrame(rows, "pid long, lon double, lat double")
     path = str(tmp_path / "s2_store")
-    write_indexed_s2(df, path, digits=2)
+    s2 = KEYSPACES["s2"]
+    write_store(df, path, s2, digits=2)
     box = (-60.0, -30.0, 40.0, 35.0)
-    got = {r.pid for r in bbox_query_s2(spark, path, *box).collect()}
+    out = scan_store(spark, path, s2, box)
+    got = {r.pid for r in out.collect()}
     want = {pid for pid, lon, lat in rows
             if box[0] <= lon <= box[2] and box[1] <= lat <= box[3]}
     assert got == want
-    assert len(s2_partition_prefixes(100.0, 40.0, 101.0, 41.0, 2)) < 64
+    pruned_on(out, "s2_p")
+    assert len(s2.cover((100.0, 40.0, 101.0, 41.0), 0, 0, 2)) < 64
