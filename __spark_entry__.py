@@ -268,12 +268,10 @@ def q_all_knn(spark, sf_dir):
 
 
 def q_z2_cells(spark, sf_dir):
-    from geomesa_spark.operators.spatial_join import cell_of_points
+    from geomesa_spark.curves import zexpr
 
-    cell = cell_of_points(8)
-    pts = _cust_points(spark, sf_dir)
-    return (pts.withColumn("cell", cell("lon", "lat"))
-               .groupBy("cell").agg(F.count("*").alias("n")))
+    pts = zexpr.with_z2(_cust_points(spark, sf_dir), "cell", "lon", "lat", 8)
+    return pts.groupBy("cell").agg(F.count("*").alias("n"))
 
 
 def q_geohash(spark, sf_dir):
@@ -1811,29 +1809,15 @@ def q_stats_minmax(spark, sf_dir):
 
 
 def q_z3_cells(spark, sf_dir):
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from geomesa_spark.curves.sfc import Z3SFC
-
-    sfc = Z3SFC("week")
-    level = 5
-    shift = 3 * (21 - level)
-
-    schema = StructType([StructField("bin", LongType()), StructField("cell", LongType())])
-
-    @F.pandas_udf(schema)
-    def z3(lon: pd.Series, lat: pd.Series, secs: pd.Series) -> pd.DataFrame:
-        bins, z = sfc.index_millis(lon.to_numpy(np.float64), lat.to_numpy(np.float64),
-                                   secs.to_numpy(np.int64) * 1000, lenient=True)
-        return pd.DataFrame({"bin": bins, "cell": np.asarray(z) >> shift})
+    from geomesa_spark.curves import zexpr
 
     ev = _t(spark, sf_dir, "events").select(
         tg.point_lon("event_id", _e["mlon"], _e["olon"]).alias("lon"),
         tg.point_lat("event_id", _e["mlat"], _e["olat"]).alias("lat"),
         F.unix_timestamp("ts").alias("secs"))
-    out = ev.withColumn("__bz__", z3("lon", "lat", "secs"))
-    return (out.select(F.col("__bz__.bin").alias("bin"), F.col("__bz__.cell").alias("cell"))
-               .groupBy("bin", "cell").agg(F.count("*").alias("n")))
+    ev = zexpr.with_z3(ev, "cell", "lon", "lat", "secs", 5)
+    return (ev.groupBy(zexpr.week_bin("secs").alias("bin"), "cell")
+              .agg(F.count("*").alias("n")))
 
 
 def q_point2point(spark, sf_dir):

@@ -4,8 +4,8 @@ Semantics re-derived from the reference implementation
 (/root/reference/geomesa-z3/src/main/scala/org/locationtech/geomesa/zorder/sfcurve/Z2.scala:58-78
 and Z3.scala:73-91): magic-mask bit spreading of 31-bit (Z2) / 21-bit (Z3)
 dimension values into a single 62/63-bit long. All functions accept numpy
-arrays (or scalars) and stay fully vectorized — these run inside Arrow-batched
-pandas UDFs on the Spark executors, never per-row Python.
+arrays (or scalars) and stay fully vectorized. The spread steps are one
+table shared with the JVM key expressions (curves/zexpr.py).
 
 Z2 bit layout: ``...y1x1y0x0`` (x in even bits).
 Z3 bit layout: ``...z1y1x1z0y0x0``.
@@ -23,6 +23,16 @@ Z2_MAX_MASK = np.uint64(0x7FFFFFFF)
 Z3_BITS_PER_DIM = 21
 Z3_MAX_MASK = np.uint64(0x1FFFFF)
 
+# magic-mask bit spread, (shift, mask) per step: Z2 xors each shifted copy
+# in (Z2.scala:58-66), Z3 ors it in (Z3.scala:73-80). One table for the
+# numpy kernels here and the JVM key expressions of curves/zexpr.py.
+Z2_SPREAD = ((32, 0x00000000FFFFFFFF), (16, 0x0000FFFF0000FFFF),
+             (8, 0x00FF00FF00FF00FF), (4, 0x0F0F0F0F0F0F0F0F),
+             (2, 0x3333333333333333), (1, 0x5555555555555555))
+Z3_SPREAD = ((32, 0x001F00000000FFFF), (16, 0x001F0000FF0000FF),
+             (8, 0x100F00F00F00F00F), (4, 0x10C30C30C30C30C3),
+             (2, 0x1249249249249249))
+
 
 def _u64(x) -> np.ndarray:
     return np.asarray(x).astype(np.uint64)
@@ -31,12 +41,8 @@ def _u64(x) -> np.ndarray:
 def z2_split(value) -> np.ndarray:
     """Insert one 0 bit between every bit of ``value`` (low 31 bits)."""
     x = _u64(value) & Z2_MAX_MASK
-    x = (x ^ (x << U64(32))) & U64(0x00000000FFFFFFFF)
-    x = (x ^ (x << U64(16))) & U64(0x0000FFFF0000FFFF)
-    x = (x ^ (x << U64(8))) & U64(0x00FF00FF00FF00FF)
-    x = (x ^ (x << U64(4))) & U64(0x0F0F0F0F0F0F0F0F)
-    x = (x ^ (x << U64(2))) & U64(0x3333333333333333)
-    x = (x ^ (x << U64(1))) & U64(0x5555555555555555)
+    for shift, mask in Z2_SPREAD:
+        x = (x ^ (x << U64(shift))) & U64(mask)
     return x
 
 
@@ -65,11 +71,8 @@ def z2_decode(z):
 def z3_split(value) -> np.ndarray:
     """Insert two 0 bits between every bit of ``value`` (low 21 bits)."""
     x = _u64(value) & Z3_MAX_MASK
-    x = (x | (x << U64(32))) & U64(0x001F00000000FFFF)
-    x = (x | (x << U64(16))) & U64(0x001F0000FF0000FF)
-    x = (x | (x << U64(8))) & U64(0x100F00F00F00F00F)
-    x = (x | (x << U64(4))) & U64(0x10C30C30C30C30C3)
-    x = (x | (x << U64(2))) & U64(0x1249249249249249)
+    for shift, mask in Z3_SPREAD:
+        x = (x | (x << U64(shift))) & U64(mask)
     return x
 
 

@@ -44,7 +44,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from .dedup import dedup_clusters
 from .cache import attach_cached as _attach_cached, release  # noqa: F401
-from .spatial_join import (DEFAULT_LEVEL, cell_expr_of_points,
+from .spatial_join import (DEFAULT_LEVEL, with_point_cell,
                            cells_of_disk_arrays, sphere_expand_degrees)
 
 __all__ = ["eps_neighbor_pairs", "dbscan", "release"]
@@ -75,11 +75,9 @@ def eps_neighbor_pairs(points: DataFrame, eps: float, id_col: str = "id",
     pts = points.select(F.col(id_col).cast("long").alias("__id__"),
                         F.col(x).cast("double").alias("__x__"),
                         F.col(y).cast("double").alias("__y__"))
-    l = pts.select(F.col("__id__").alias("id_a"),
-                   F.col("__x__").alias("__ax__"),
-                   F.col("__y__").alias("__ay__"),
-                   cell_expr_of_points("__x__", "__y__", level)
-                    .alias("__cell__"))
+    l = with_point_cell(pts, "__x__", "__y__", level).select(
+        F.col("__id__").alias("id_a"), F.col("__x__").alias("__ax__"),
+        F.col("__y__").alias("__ay__"), "__cell__")
     r = pts.select(F.col("__id__").alias("id_b"),
                    F.col("__x__").alias("__bx__"),
                    F.col("__y__").alias("__by__"),

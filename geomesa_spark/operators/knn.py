@@ -42,8 +42,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .cache import attach_cached
 from .spatial_join import (
-    DEFAULT_LEVEL, cell_expr_of_points, cells_of_bbox_arrays,
-    cells_of_disk_arrays, sphere_expand_degrees,
+    DEFAULT_LEVEL, cells_of_disk_arrays, sphere_expand_degrees, with_point_cell,
 )
 
 from ..geom.measures import EARTH_MEAN_RADIUS_M as EARTH_RADIUS_M
@@ -100,7 +99,7 @@ def knn_join(
     Returns (all query cols, all data cols, dist, rank 1..k). Deterministic
     tie-break on (dist, data_id).
     """
-    data_c = data.withColumn("__cell__", cell_expr_of_points(dx, dy, level))
+    data_c = with_point_cell(data, dx, dy, level)
 
     live = queries.withColumn("__r__", F.lit(float(initial_radius)))
     all_cand = None
@@ -173,16 +172,15 @@ def knn_join(
         # density everywhere, max_rounds too small) could route a large
         # query fraction here and degrade into a near-cartesian job —
         # make that visible instead of silent. The count is one cheap
-        # job over the already-persisted round frames.
-        n_strag = strag.count()
-        if n_strag > 10_000:
+        # job over the already-persisted round frames, bounded so it
+        # never counts past the threshold.
+        if strag.limit(10_001).count() > 10_000:
             import logging
             logging.getLogger(__name__).warning(
-                "knn_join completeness fallback engaged for %d queries "
-                "(> 10000): the broadcast nested-loop re-query scans the "
-                "full data side per straggler batch. Consider raising "
-                "max_rounds or the initial radius, or lowering k.",
-                n_strag)
+                "knn_join completeness fallback engaged for more than "
+                "10000 queries: the broadcast nested-loop re-query scans "
+                "the full data side per straggler batch. Consider raising "
+                "max_rounds or the initial radius, or lowering k.")
         dist = _dist_expr(F.col(qx), F.col(qy), F.col(dx), F.col(dy), metric)
         w1 = Window.partitionBy(query_id, "__salt__").orderBy(
             F.col("dist").asc(), F.col(data_id).asc())
@@ -261,11 +259,11 @@ def all_knn_join(
         max_rounds = max(
             2, math.ceil(math.log2(max(max_radius / seed_r, 1.0))) + 2)
 
-    rc = right.withColumn("__cell__", cell_expr_of_points(rx, ry, level))
+    rc = with_point_cell(right, rx, ry, level)
     dist = _dist_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry), metric)
 
     # phase 1: same-cell kth distance as the exact radius seed
-    lc = left.withColumn("__cell__", cell_expr_of_points(lx, ly, level))
+    lc = with_point_cell(left, lx, ly, level)
     w0 = Window.partitionBy(left_id).orderBy(
         F.col("__d0__").asc(), F.col(right_id).asc())
     kth = (lc.join(rc, on="__cell__", how="inner")

@@ -27,7 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .spatial_join import DEFAULT_LEVEL, _grid_i, _grid_j
+from ..curves import zexpr
+from .spatial_join import DEFAULT_LEVEL
 
 __all__ = ["track_segments", "snap_join", "segment_intersections"]
 
@@ -75,19 +76,19 @@ def snap_join(points: DataFrame, segments: DataFrame,
                 F.col(y1).cast("double").alias("__y1__"),
                 F.col(x2).cast("double").alias("__x2__"),
                 F.col(y2).cast("double").alias("__y2__"),
-                F.explode(F.sequence(_grid_i(sgx0, level),
-                                     _grid_i(sgx1, level))).alias("__gi__"),
+                F.explode(F.sequence(zexpr.lon_cell(sgx0, level),
+                                     zexpr.lon_cell(sgx1, level))).alias("__gi__"),
                 sgy0.alias("__sgy0__"), sgy1.alias("__sgy1__"))
             .select("__sid__", "__x1__", "__y1__", "__x2__", "__y2__",
                     "__gi__",
-                    F.explode(F.sequence(_grid_j(F.col("__sgy0__"), level),
-                                         _grid_j(F.col("__sgy1__"), level)))
+                    F.explode(F.sequence(zexpr.lat_cell(F.col("__sgy0__"), level),
+                                         zexpr.lat_cell(F.col("__sgy1__"), level)))
                      .alias("__gj__")))
     pts = points.select(
         F.col(point_id), F.col(px).cast("double").alias("__px__"),
         F.col(py).cast("double").alias("__py__"),
-        _grid_i(F.col(px).cast("double"), level).alias("__gi__"),
-        _grid_j(F.col(py).cast("double"), level).alias("__gj__"))
+        zexpr.lon_cell(F.col(px).cast("double"), level).alias("__gi__"),
+        zexpr.lat_cell(F.col(py).cast("double"), level).alias("__gj__"))
 
     dx = F.col("__x2__") - F.col("__x1__")
     dy = F.col("__y2__") - F.col("__y1__")

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from .spatial_join import DEFAULT_LEVEL, cell_expr_of_points, cells_of_disk_arrays
+from .spatial_join import DEFAULT_LEVEL, cells_of_disk_arrays, with_point_cell
 
 __all__ = ["route_search", "track_interpolate", "stay_points",
            "geofence_sequence", "od_matrix", "zone_paths"]
@@ -71,7 +71,7 @@ def route_search(
     segs_k = segs.withColumn("__cell__", F.explode(
         seg_cells("__x0__", "__y0__", "__x1__", "__y1__")))
 
-    d = data.withColumn("__cell__", cell_expr_of_points(dx, dy, level))
+    d = with_point_cell(data, dx, dy, level)
     cand = d.join(F.broadcast(segs_k), on="__cell__", how="inner")
 
     # exact point-to-segment distance (cartesian degrees), vectorized expr:

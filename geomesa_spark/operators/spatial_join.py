@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, LongType, StructField, StructType,
 )
 
+from ..curves import zexpr
 from ..curves.zorder import z2_encode
 from ..curves.norm import normalized_lat, normalized_lon
 from ..geom import kernels as K
@@ -51,58 +52,33 @@ _LON = normalized_lon(31)
 _LAT = normalized_lat(31)
 
 
-def cell_expr_of_points(x, y, level: int = DEFAULT_LEVEL):
-    """Pure-JVM Column: (x, y) -> Z2 cell id at ``level``.
+def with_point_cell(df: DataFrame, x: str, y: str, level: int) -> DataFrame:
+    """The point side of a cell equi-join: ``df`` plus the Z2 cell of
+    (``x``, ``y``) at ``level`` as ``__cell__`` (curves/zexpr.py, inside
+    whole-stage codegen).
 
-    Bit-identical to :func:`cell_of_points` (same floor-normalization and
-    interleave as the numpy kernel / Z2.scala:58-78) but expressed with
-    built-in floor/shift/mask expressions, so the 10^12-row point side of a
-    join never crosses the Arrow boundary — the cell key stays inside
-    whole-stage codegen.
-    """
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    cx = F.greatest(F.least(x, F.lit(180.0)), F.lit(-180.0))
-    cy = F.greatest(F.least(y, F.lit(90.0)), F.lit(-90.0))
-    ix = F.least(F.floor((cx + 180.0) * (2147483648.0 / 360.0)),
-                 F.lit((1 << 31) - 1)).cast("long")
-    iy = F.least(F.floor((cy + 90.0) * (2147483648.0 / 180.0)),
-                 F.lit((1 << 31) - 1)).cast("long")
-    ixl = F.shiftright(ix, 31 - level)
-    iyl = F.shiftright(iy, 31 - level)
-    cell = F.lit(0).cast("long")
-    for b in range(level):
-        cell = (cell
-                + F.shiftleft(F.shiftright(ixl, b).bitwiseAND(F.lit(1)), 2 * b)
-                + F.shiftleft(F.shiftright(iyl, b).bitwiseAND(F.lit(1)), 2 * b + 1))
-    return cell
+    A row with a null coordinate has no cell and can never match, so it
+    is dropped. The cell is then keyed from coalesced coordinates, which
+    makes it non-nullable: a nullable join key gets an inferred
+    ``isnotnull`` filter that the optimizer pushes down through the
+    key's projections, inlining its normalization 2^steps times."""
+    keep = df.filter(F.col(x).isNotNull() & F.col(y).isNotNull())
+    return zexpr.with_z2(keep, "__cell__", F.coalesce(F.col(x), F.lit(0.0)),
+                         F.coalesce(F.col(y), F.lit(0.0)), level)
 
 
-def cell_of_points(level: int = DEFAULT_LEVEL):
-    """pandas UDF: (x, y) -> Z2 cell id at the given level (one cell/point)."""
-    shift = np.uint64(2 * (31 - level))
-
-    @pandas_udf(LongType())
-    def cell(x: pd.Series, y: pd.Series) -> pd.Series:
-        xs = x.to_numpy(dtype=np.float64)
-        ys = y.to_numpy(dtype=np.float64)
-        nx = _LON.normalize(np.clip(xs, -180.0, 180.0))
-        ny = _LAT.normalize(np.clip(ys, -90.0, 90.0))
-        z = z2_encode(nx, ny).astype(np.uint64) >> shift
-        out = pd.Series(z.astype(np.int64))
-        out[x.isna().to_numpy() | y.isna().to_numpy()] = None
-        return out
-
-    return cell
+def _grid_of_bbox(xmin, ymin, xmax, ymax, level: int):
+    """Per-dimension Z2 grid index ranges (i0, i1, j0, j1) at ``level`` of
+    bbox arrays, clamped into the world (the numpy twin of
+    zexpr.lon_cell/lat_cell)."""
+    shift = 31 - level
+    return tuple((dim.normalize(np.clip(v, dim.min, dim.max)) >> shift).astype(np.int64)
+                 for dim, v in ((_LON, xmin), (_LON, xmax), (_LAT, ymin), (_LAT, ymax)))
 
 
 def cells_of_bbox_arrays(xmin, ymin, xmax, ymax, level: int):
     """Vectorized bbox -> list of covering cell ids (python list per row)."""
-    shift = 31 - level
-    ix0 = (_LON.normalize(np.clip(xmin, -180.0, 180.0)) >> shift).astype(np.int64)
-    ix1 = (_LON.normalize(np.clip(xmax, -180.0, 180.0)) >> shift).astype(np.int64)
-    iy0 = (_LAT.normalize(np.clip(ymin, -90.0, 90.0)) >> shift).astype(np.int64)
-    iy1 = (_LAT.normalize(np.clip(ymax, -90.0, 90.0)) >> shift).astype(np.int64)
+    ix0, ix1, iy0, iy1 = _grid_of_bbox(xmin, ymin, xmax, ymax, level)
     out = []
     for a, b, c, d in zip(ix0, ix1, iy0, iy1):
         xs = np.arange(a, b + 1, dtype=np.int64)
@@ -174,32 +150,6 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-def _grid_i(x, level: int):
-    """JVM Column: lon -> level-truncated grid i (bit-identical to
-    _LON.normalize >> (31-level); same literal structure as
-    cell_expr_of_points)."""
-    cx = F.greatest(F.least(x, F.lit(180.0)), F.lit(-180.0))
-    ix = F.least(F.floor((cx + 180.0) * (2147483648.0 / 360.0)),
-                 F.lit((1 << 31) - 1)).cast("long")
-    return F.shiftright(ix, 31 - level)
-
-
-def _grid_j(y, level: int):
-    cy = F.greatest(F.least(y, F.lit(90.0)), F.lit(-90.0))
-    iy = F.least(F.floor((cy + 90.0) * (2147483648.0 / 180.0)),
-                 F.lit((1 << 31) - 1)).cast("long")
-    return F.shiftright(iy, 31 - level)
-
-
-def _interleave_expr(gi, gj, level: int):
-    cell = F.lit(0).cast("long")
-    for b in range(level):
-        cell = (cell
-                + F.shiftleft(F.shiftright(gi, b).bitwiseAND(F.lit(1)), 2 * b)
-                + F.shiftleft(F.shiftright(gj, b).bitwiseAND(F.lit(1)), 2 * b + 1))
-    return cell
-
-
 def _explode_bbox_ij(df: DataFrame, x0, y0, x1, y1, level: int,
                      tag: str) -> DataFrame:
     """Explode each row to its covering raw (gi, gj) grid pairs — entirely
@@ -210,8 +160,8 @@ def _explode_bbox_ij(df: DataFrame, x0, y0, x1, y1, level: int,
     of a pair is simply (max of the two gi0, max of the two gj0) — cheap
     enough to stay fast even when a downstream Python-UDF stage knocks
     the join out of whole-stage codegen."""
-    gi0, gi1 = _grid_i(x0, level), _grid_i(x1, level)
-    gj0, gj1 = _grid_j(y0, level), _grid_j(y1, level)
+    gi0, gi1 = zexpr.lon_cell(x0, level), zexpr.lon_cell(x1, level)
+    gj0, gj1 = zexpr.lat_cell(y0, level), zexpr.lat_cell(y1, level)
     return (df.withColumn(f"__{tag}gi0__", gi0)
               .withColumn(f"__{tag}gj0__", gj0)
               .withColumn("__gi__", F.explode(F.sequence(F.col(f"__{tag}gi0__"), gi1)))
@@ -234,8 +184,6 @@ def _cells_ij_of_geom(level: int = DEFAULT_LEVEL, expand_deg: float = 0.0,
         StructField("bx1", DoubleType()),
         StructField("by1", DoubleType()),
     ])
-    shift = 31 - level
-
     @pandas_udf(schema)
     def cover(s: pd.Series) -> pd.DataFrame:
         n = len(s)
@@ -268,10 +216,7 @@ def _cells_ij_of_geom(level: int = DEFAULT_LEVEL, expand_deg: float = 0.0,
         elif expand_deg:
             xmin, xmax = xmin - expand_deg, xmax + expand_deg
             ymin, ymax = ymin - expand_deg, ymax + expand_deg
-        ix0 = (_LON.normalize(np.clip(xmin, -180.0, 180.0)) >> shift).astype(np.int64)
-        ix1 = (_LON.normalize(np.clip(xmax, -180.0, 180.0)) >> shift).astype(np.int64)
-        iy0 = (_LAT.normalize(np.clip(ymin, -90.0, 90.0)) >> shift).astype(np.int64)
-        iy1 = (_LAT.normalize(np.clip(ymax, -90.0, 90.0)) >> shift).astype(np.int64)
+        ix0, ix1, iy0, iy1 = _grid_of_bbox(xmin, ymin, xmax, ymax, level)
         gis, gjs = [], []
         for k in range(n):
             if null[k]:
@@ -577,7 +522,6 @@ def pip_join(
     broadcast_polys: bool | None = None,
     salt: int | None = None,
     project_polys: bool = True,
-    fuse_refine: bool = False,
 ) -> DataFrame:
     """Point-in-polygon join: points(x, y) x polys(wkb geometry).
 
@@ -609,7 +553,7 @@ def pip_join(
     elif level is None:
         level = 10
 
-    pts = points.withColumn("__cell__", cell_expr_of_points(point_x, point_y, level))
+    pts = with_point_cell(points, point_x, point_y, level)
 
     if salt and salt > 1:
         salt_pt = F.pmod(F.xxhash64(F.col(point_x), F.col(point_y)), F.lit(salt))
@@ -624,13 +568,7 @@ def pip_join(
         if salt and salt > 1:
             pls_k = pls_k.withColumn("__salt__", salt_pl)
         cand = pts.join(F.broadcast(pls_k), on=join_keys, how="inner")
-        if fuse_refine and prepared.any_full:
-            # single JVM pass: every candidate crosses Arrow, flagged rows
-            # skip the kernel (trades Arrow volume for one fewer scan+probe)
-            refine_f = _pip_refine_by_pid_udf(predicate, prepared.bmap, with_flag=True)
-            out = cand.filter(refine_f(F.col(point_x), F.col(point_y),
-                                       F.col("__pid__"), F.col("__full__")))
-        elif prepared.any_full:
+        if prepared.any_full:
             # interior candidates never cross the Arrow boundary
             refine = _pip_refine_by_pid_udf(predicate, prepared.bmap)
             interior = cand.filter(F.col("__full__"))
@@ -678,7 +616,7 @@ def recommend_salt(points: DataFrame, x: str, y: str,
     plans.checkpoint (cell_histogram) so production runs can reuse it
     without a rescan. AQE skew-join remains the runtime backstop.
     """
-    cells = points.select(cell_expr_of_points(x, y, level).alias("c")).limit(sample_rows)
+    cells = zexpr.with_z2(points, "c", x, y, level).select("c").limit(sample_rows)
     hist = cells.groupBy("c").count()
     row = hist.agg(F.max("count").alias("mx"), F.avg("count").alias("avg")).collect()[0]
     if row["avg"] is None or row["avg"] == 0:
@@ -687,32 +625,20 @@ def recommend_salt(points: DataFrame, x: str, y: str,
     return max(1, min(max_salt, salt))
 
 
-def _pip_refine_by_pid_udf(predicate: str, bmap, with_flag: bool = False):
+def _pip_refine_by_pid_udf(predicate: str, bmap):
     """Refine via broadcast polygon dict (pid -> WKB): Arrow ships only ids.
 
     Rectangles refine with four vectorized comparisons; general polygons
     with the PIP rings kernel; other geometries with the exact DE-9IM
-    kernel per pair. ``with_flag`` adds a full-cell column: flagged rows
-    accept without touching the kernel (single-pass alternative to the
-    interior/boundary union — one JVM scan, all candidates cross Arrow).
+    kernel per pair.
     """
     accept_inside_only = predicate in ("st_contains", "st_within")
 
-    def _refine(xs, ys, pid, full=None) -> np.ndarray:
+    def _refine(xs, ys, pid) -> np.ndarray:
         out = np.zeros(len(xs), dtype=bool)
-        if full is not None:
-            out[full] = True
-            todo = np.where(~full)[0]
-            if len(todo) == 0:
-                return out
-            codes, uniques = pd.factorize(pid[todo])
-            base = todo
-        else:
-            codes, uniques = pd.factorize(pid)
-            base = np.arange(len(xs))
-        perm = np.argsort(codes, kind="stable")
-        order = base[perm]
-        sorted_codes = codes[perm]
+        codes, uniques = pd.factorize(pid)
+        order = np.argsort(codes, kind="stable")
+        sorted_codes = codes[order]
         starts = np.searchsorted(sorted_codes, np.arange(len(uniques)))
         ends = np.append(starts[1:], len(sorted_codes))
         pmap = bmap.value
@@ -742,18 +668,10 @@ def _pip_refine_by_pid_udf(predicate: str, bmap, with_flag: bool = False):
                     out[i] = fn(geom, Point(xs[i], ys[i]))
         return out
 
-    if with_flag:
-        @pandas_udf(BooleanType())
-        def refine(x: pd.Series, y: pd.Series, pid: pd.Series,
-                   full: pd.Series) -> pd.Series:
-            return pd.Series(_refine(x.to_numpy(np.float64), y.to_numpy(np.float64),
-                                     pid.to_numpy(np.int64),
-                                     full.fillna(False).to_numpy(bool)))
-    else:
-        @pandas_udf(BooleanType())
-        def refine(x: pd.Series, y: pd.Series, pid: pd.Series) -> pd.Series:
-            return pd.Series(_refine(x.to_numpy(np.float64), y.to_numpy(np.float64),
-                                     pid.to_numpy()))
+    @pandas_udf(BooleanType())
+    def refine(x: pd.Series, y: pd.Series, pid: pd.Series) -> pd.Series:
+        return pd.Series(_refine(x.to_numpy(np.float64), y.to_numpy(np.float64),
+                                 pid.to_numpy()))
 
     return refine
 
@@ -787,7 +705,7 @@ def dwithin_join_points(
         return pd.Series(cells_of_disk_arrays(xs, ys, rlon, rlat, level),
                          dtype=object)
 
-    l = left.withColumn("__cell__", cell_expr_of_points(lx, ly, level))
+    l = with_point_cell(left, lx, ly, level)
     r = right.withColumn("__cell__", F.explode(cover_pt(F.col(rx), F.col(ry))))
     rr = F.broadcast(r) if broadcast_right else r
     cand = l.join(rr, on="__cell__", how="inner").drop("__cell__")
@@ -843,7 +761,7 @@ def dwithin_join_rects(
         return pd.Series(cells_of_disk_arrays(cx, cy, rlon, rlat, level),
                          dtype=object)
 
-    p = points.withColumn("__cell__", cell_expr_of_points(px, py, level))
+    p = with_point_cell(points, px, py, level)
     r = rects.withColumn("__cell__", F.explode(
         cover_rect(F.col(rx0), F.col(ry0), F.col(rx1), F.col(ry1))))
     rr = F.broadcast(r) if broadcast_rects else r

@@ -43,13 +43,12 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..curves import zexpr
+
 __all__ = ["parse_stats", "run_stats", "enumerate_values", "z3_cell_exprs",
            "group_entropy"]
 
 _TERM_RE = re.compile(r"\s*([A-Za-z][A-Za-z0-9]*)\s*\(([^()]*(?:\([^()]*\))?)\s*\)\s*")
-
-_WEEK_S = 604800
-_Z3_BITS = 21
 
 
 def parse_stats(spec: str) -> list[tuple[str, list[str]]]:
@@ -66,36 +65,12 @@ def parse_stats(spec: str) -> list[tuple[str, list[str]]]:
     return out
 
 
-def z3_cell_exprs(x: str, y: str, t: str, level: int = 5):
-    """JVM-expression (week-bin, coarse z3 cell) pair — the Z3SFC index
-    truncated to ``level`` bits per dimension, entirely inside whole-stage
-    codegen (no Python). Matches curves Z3SFC.index_millis >> 3*(21-level)
-    for in-bounds points (the same arithmetic the z3_cells oracle mirrors)."""
-    shift = _Z3_BITS - level
-    top = F.lit((1 << _Z3_BITS) - 1)
-    bin_ = F.floor(F.col(t) / F.lit(_WEEK_S)).cast("long")
-    # clamp each normalized index into [0, 2^21 - 1] — the curve's
-    # BitNormalizedDimension maps the domain maximum (lon 180 / lat 90 /
-    # end-of-week instant) onto max_index, not past it (see curves/norm.py)
-    it = F.shiftright(
-        F.least(F.floor(F.pmod(F.col(t), F.lit(_WEEK_S)).cast("double")
-                        * F.lit(float(1 << _Z3_BITS) / _WEEK_S)).cast("long"),
-                top), shift)
-    cx = F.greatest(F.least(F.col(x), F.lit(180.0)), F.lit(-180.0))
-    cy = F.greatest(F.least(F.col(y), F.lit(90.0)), F.lit(-90.0))
-    ix = F.shiftright(
-        F.least(F.floor((cx + F.lit(180.0)) * F.lit(float(1 << _Z3_BITS) / 360.0))
-                 .cast("long"), top), shift)
-    iy = F.shiftright(
-        F.least(F.floor((cy + F.lit(90.0)) * F.lit(float(1 << _Z3_BITS) / 180.0))
-                 .cast("long"), top), shift)
-    cell = F.lit(0).cast("long")
-    for b in range(level):
-        cell = (cell
-                + F.shiftleft(F.shiftright(ix, b).bitwiseAND(F.lit(1)), 3 * b)
-                + F.shiftleft(F.shiftright(iy, b).bitwiseAND(F.lit(1)), 3 * b + 1)
-                + F.shiftleft(F.shiftright(it, b).bitwiseAND(F.lit(1)), 3 * b + 2))
-    return bin_, cell
+def z3_cell_exprs(df: DataFrame, x: str, y: str, t: str, level: int = 5):
+    """``df`` with its coarse z3 cell, and the (week-bin, cell) Column pair
+    over it: the Z3SFC index truncated to ``level`` bits per dimension,
+    inside whole-stage codegen (curves/zexpr.py, no Python)."""
+    name = f"__z3_{x}_{y}_{t}_{level}__"
+    return zexpr.with_z3(df, name, x, y, t, level), zexpr.week_bin(t), F.col(name)
 
 
 def enumerate_values(df: DataFrame, attr: str) -> DataFrame:
@@ -104,34 +79,35 @@ def enumerate_values(df: DataFrame, attr: str) -> DataFrame:
     return df.groupBy(attr).count()
 
 
-def _simple_aggs(name: str, args: list[str], label: str):
-    """Aggregate columns for one non-grouped term."""
+def _simple_aggs(df: DataFrame, name: str, args: list[str], label: str):
+    """(``df``, aggregate columns) for one non-grouped term; a term whose
+    aggregate reads a derived column adds it to ``df``."""
     if name == "Count":
-        return [F.count(F.lit(1)).alias(label)]
+        return df, [F.count(F.lit(1)).alias(label)]
     if name == "MinMax":
         (a,) = args
-        return [F.min(a).alias(f"{label}_min"), F.max(a).alias(f"{label}_max")]
+        return df, [F.min(a).alias(f"{label}_min"), F.max(a).alias(f"{label}_max")]
     if name == "Frequency":
         (a,) = args
-        return [F.count_min_sketch(F.col(a), F.lit(0.001), F.lit(0.99),
-                                   F.lit(42)).alias(label)]
+        return df, [F.count_min_sketch(F.col(a), F.lit(0.001), F.lit(0.99),
+                                       F.lit(42)).alias(label)]
     if name == "Cardinality":
         (a,) = args
-        return [F.approx_count_distinct(a).alias(label)]
+        return df, [F.approx_count_distinct(a).alias(label)]
     if name == "Z3Frequency":
         x, y, t = args[0], args[1], args[2]
         level = int(args[3]) if len(args) > 3 else 5
-        bin_, cell = z3_cell_exprs(x, y, t, level)
+        df, bin_, cell = z3_cell_exprs(df, x, y, t, level)
         key = F.shiftleft(bin_, 3 * level + 1) + cell
-        return [F.count_min_sketch(key, F.lit(0.001), F.lit(0.99),
-                                   F.lit(42)).alias(label)]
+        return df, [F.count_min_sketch(key, F.lit(0.001), F.lit(0.99),
+                                       F.lit(42)).alias(label)]
     if name == "DescriptiveStats":
         (a,) = args
-        return [F.count(a).alias(f"{label}_count"),
-                F.avg(a).alias(f"{label}_mean"),
-                F.stddev_samp(a).alias(f"{label}_stddev"),
-                F.min(a).alias(f"{label}_min"),
-                F.max(a).alias(f"{label}_max")]
+        return df, [F.count(a).alias(f"{label}_count"),
+                    F.avg(a).alias(f"{label}_mean"),
+                    F.stddev_samp(a).alias(f"{label}_stddev"),
+                    F.min(a).alias(f"{label}_min"),
+                    F.max(a).alias(f"{label}_max")]
     raise ValueError(f"unsupported stat: {name}")
 
 
@@ -186,8 +162,8 @@ def run_stats(df: DataFrame, spec: str, max_enum: int = 10_000) -> dict:
         elif name == "Z3Histogram":
             x, y, t = args[0], args[1], args[2]
             level = int(args[3]) if len(args) > 3 else 5
-            bin_, cell = z3_cell_exprs(x, y, t, level)
-            rows = (df.groupBy(bin_.alias("bin"), cell.alias("cell")).count()
+            zdf, bin_, cell = z3_cell_exprs(df, x, y, t, level)
+            rows = (zdf.groupBy(bin_.alias("bin"), cell.alias("cell")).count()
                       .orderBy(F.col("count").desc(), F.col("bin").asc(),
                                F.col("cell").asc())
                       .limit(max_enum).collect())
@@ -203,17 +179,18 @@ def run_stats(df: DataFrame, spec: str, max_enum: int = 10_000) -> dict:
             sub_name, sub_args = parse_stats(args[1])[0]
             sub_label = (f"{sub_name.lower()}_{sub_args[0]}"
                          if sub_args else sub_name.lower())
-            aggs = _simple_aggs(sub_name, sub_args, sub_label)
+            gdf, aggs = _simple_aggs(df, sub_name, sub_args, sub_label)
             # cap keeps the LARGEST groups (the docstring's most-frequent-
             # first contract) — ascending-key truncation would drop
             # exactly the hot groups a stats consumer wants
-            rows = (df.groupBy(key).agg(F.count("*").alias("__n__"), *aggs)
+            rows = (gdf.groupBy(key).agg(F.count("*").alias("__n__"), *aggs)
                       .orderBy(F.col("__n__").desc(), F.col(key).asc())
                       .limit(max_enum).collect())
             result[uniq(f"groupby_{key}_{sub_label}")] = {
                 r[0]: (r[2] if len(r) == 3 else tuple(r)[2:]) for r in rows}
         else:
-            simple.extend(_simple_aggs(name, args, label))
+            df, aggs = _simple_aggs(df, name, args, label)
+            simple.extend(aggs)
     if simple:
         row = df.agg(*simple).collect()[0]
         for field, value in zip(row.__fields__, row):

@@ -342,7 +342,7 @@ def co_travel(fixes: DataFrame, track_col: str, ts_col: str,
     addresses. Returns (track_a, track_b, n_hits, t_first, t_last)
     with t_first/t_last the hit window (least/greatest of fix times).
     """
-    from .spatial_join import cell_expr_of_points
+    from .spatial_join import with_point_cell
 
     eps_us = int(eps_s) * 1_000_000
     cover_pt = _disk_cover_udf(eps_deg, level)
@@ -353,7 +353,7 @@ def co_travel(fixes: DataFrame, track_col: str, ts_col: str,
                         F.col(ts_col).alias("ts"),
                         tus.alias("tu"))
     tbin = F.floor(F.col("tu") / F.lit(eps_us))
-    a = (base.withColumn("__cell__", cell_expr_of_points("x", "y", level))
+    a = (with_point_cell(base, "x", "y", level)
              .withColumn("__tb__", tbin)
              .select(F.col("tk").alias("ta"), F.col("x").alias("xa"),
                      F.col("y").alias("ya"), F.col("ts").alias("tsa"),
@@ -403,7 +403,7 @@ def convoys(fixes: DataFrame, track_col: str, ts_col: str,
     """
     from pyspark.sql import Window
 
-    from .spatial_join import cell_expr_of_points
+    from .spatial_join import with_point_cell
 
     bin_us = int(bin_s) * 1_000_000
     if min_len < 1:
@@ -414,7 +414,7 @@ def convoys(fixes: DataFrame, track_col: str, ts_col: str,
                         F.col(x_col).cast("double").alias("x"),
                         F.col(y_col).cast("double").alias("y"),
                         F.floor(tus / F.lit(bin_us)).alias("__tb__"))
-    a = (base.withColumn("__cell__", cell_expr_of_points("x", "y", level))
+    a = (with_point_cell(base, "x", "y", level)
              .select(F.col("tk").alias("ta"), F.col("x").alias("xa"),
                      F.col("y").alias("ya"), "__cell__", "__tb__"))
     b = (base.withColumn("__cell__",

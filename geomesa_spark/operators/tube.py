@@ -25,8 +25,7 @@ from pyspark.sql.types import ArrayType, LongType
 from ..geom.measures import EARTH_MEAN_RADIUS_M
 
 from .spatial_join import (
-    DEFAULT_LEVEL, cell_expr_of_points, cells_of_disk_arrays,
-    sphere_expand_degrees,
+    DEFAULT_LEVEL, cells_of_disk_arrays, sphere_expand_degrees, with_point_cell,
 )
 
 __all__ = ["tube_select"]
@@ -65,8 +64,7 @@ def tube_select(
               .select(F.col(tx).alias("__tx__"), F.col(ty).alias("__ty__"),
                       F.col(tts).alias("__tts__"), "__cell__", "__bucket__"))
 
-    d = (data.withColumn("__cell__", cell_expr_of_points(dx, dy, level))
-             .withColumn("__bucket__", bucket_d))
+    d = with_point_cell(data, dx, dy, level).withColumn("__bucket__", bucket_d)
 
     cand = d.join(F.broadcast(t), on=["__cell__", "__bucket__"], how="inner")
 

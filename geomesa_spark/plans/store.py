@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from ..curves import zexpr
 from ..curves.binnedtime import MAX_OFFSET
 from ..curves.s2 import MAX_LEVEL, cell_id_from_lonlat, region_coverer, s2_ranges
 from ..curves.sfc import Z2SFC, Z3SFC
@@ -72,18 +73,22 @@ _S2_MAX_CELLS = 64
 
 
 # ---------------------------------------------------------------------------
-# keys: numpy encoders behind one Arrow UDF, each returning the curve
-# codes already shifted into their hex key's bit position
+# keys: each adds the hex key column ``name`` to a DataFrame. Z2 and Z3
+# are JVM expressions (curves/zexpr.py); XZ2, XZ3 and S2 have no closed
+# form and run numpy encoders behind one Arrow UDF.
 
-def _z2_codes(x, y):
-    return np.asarray(_SFC.index(x, y, lenient=True), np.uint64) << np.uint64(2)
+def _z2_key(df: DataFrame, name: str, x: Column, y: Column) -> DataFrame:
+    """z << 2: 16 hex chars (Z2SFC.hexEncode)."""
+    df = zexpr.with_z2(df, name, x, y)
+    return df.withColumn(name, zexpr.hex_key(F.shiftleft(F.col(name), 2), 16))
 
 
-def _z3_codes(x, y, secs):
-    """(z << 1): 16 hex chars over the 63-bit z (the Z2SFC.hexEncode
-    trick at Z3's bit width); z interleaves the offset within the week."""
-    _, z = _Z3.index_millis(x, y, np.asarray(secs, np.int64) * 1000, lenient=True)
-    return np.asarray(z, np.uint64) << np.uint64(1)
+def _z3_key(df: DataFrame, name: str, x: Column, y: Column,
+            secs: Column) -> DataFrame:
+    """z << 1: 16 hex chars over the 63-bit z (the Z2SFC.hexEncode trick
+    at Z3's bit width); z interleaves the offset within the week."""
+    df = zexpr.with_z3(df, name, x, y, secs)
+    return df.withColumn(name, zexpr.hex_key(F.shiftleft(F.col(name), 1), 16))
 
 
 def _xz2_codes(x0, y0, x1, y1):
@@ -92,7 +97,11 @@ def _xz2_codes(x0, y0, x1, y1):
 
 
 def _xz3_codes(x0, y0, x1, y1, secs):
-    off = (np.asarray(secs, np.int64) % _WEEK_S).astype(np.float64)
+    """A null dtg (NaN in the batch) keys at offset 0; it lands in the
+    null week bin, which only full scans open."""
+    secs = np.asarray(secs, np.float64)
+    secs = np.where(np.isnan(secs), 0.0, secs).astype(np.int64)
+    off = (secs % _WEEK_S).astype(np.float64)
     z = _XZ3.index(x0, y0, off, x1, y1, off, lenient=True)
     return np.asarray(z, np.uint64) << np.uint64(_XZ3_OFF)
 
@@ -104,8 +113,9 @@ def _s2_codes(x, y):
 
 
 def _hex_udf(encode, width: int):
-    """pandas UDF: key columns -> ``width``-char hex of ``encode``'s codes
-    (fixed width, so lexicographic == numeric order)."""
+    """Key builder: ``width``-char hex of ``encode``'s codes of the key
+    columns, in a pandas UDF (fixed width, so lexicographic == numeric
+    order)."""
     fmt = f"0{width}x"
 
     @F.pandas_udf(StringType())
@@ -113,7 +123,7 @@ def _hex_udf(encode, width: int):
         codes = encode(*(c.to_numpy() for c in cols))
         return pd.Series([format(int(v), fmt) for v in codes])
 
-    return enc
+    return lambda df, name, *cols: df.withColumn(name, enc(*cols))
 
 
 def _envelope_cols_udf():
@@ -224,7 +234,7 @@ class KeySpace(NamedTuple):
     bin: str | None          # week-bin partition column, if any
     hex: str                 # curve key column the prefix truncates
     inputs: tuple            # key inputs: x, y, bx0..by1 (envelope), secs
-    encode: Callable         # numpy key inputs -> shifted curve codes
+    key: Callable            # (df, hex, *input Columns) -> df + hex key
     width: int               # hex chars of the key
     cells: Callable          # unchecked cover; call cover()
     extended: bool           # residual: envelope overlap, else point box
@@ -254,19 +264,21 @@ class KeySpace(NamedTuple):
 _ENV = ("bx0", "by0", "bx1", "by1")
 
 KEYSPACES: dict[str, KeySpace] = {
-    "z2": KeySpace(("z2_p",), None, "z2_hex", ("x", "y"), _z2_codes, 16,
+    "z2": KeySpace(("z2_p",), None, "z2_hex", ("x", "y"), _z2_key, 16,
                    _morton_cover(z2_encode, (_SFC.lon, _SFC.lat)), False),
-    "xz2": KeySpace(("xz2_p",), None, "xz2_hex", _ENV, _xz2_codes,
+    "xz2": KeySpace(("xz2_p",), None, "xz2_hex", _ENV,
+                    _hex_udf(_xz2_codes, _XZ2.hex_digits),
                     _XZ2.hex_digits, _xz2_cover, True),
     "z3": KeySpace(("z3_bin", "z3_p"), "z3_bin", "z3_hex", ("x", "y", "secs"),
-                   _z3_codes, 16,
+                   _z3_key, 16,
                    _morton_cover(z3_encode, (_Z3.lon, _Z3.lat, _Z3.time)), False),
     "xz3": KeySpace(("xz3_bin", "xz3_p"), "xz3_bin", "xz3_hex",
-                    _ENV + ("secs",), _xz3_codes, _XZ3_DIGITS, _xz3_cover, True),
-    "s2": KeySpace(("s2_p",), None, "s2_hex", ("x", "y"), _s2_codes, 16,
-                   _s2_cover, False),
+                    _ENV + ("secs",), _hex_udf(_xz3_codes, _XZ3_DIGITS),
+                    _XZ3_DIGITS, _xz3_cover, True),
+    "s2": KeySpace(("s2_p",), None, "s2_hex", ("x", "y"),
+                   _hex_udf(_s2_codes, 16), 16, _s2_cover, False),
     "s3": KeySpace(("s3_bin", "s3_p"), "s3_bin", "s2_hex", ("x", "y"),
-                   _s2_codes, 16, _s2_cover, False),
+                   _hex_udf(_s2_codes, 16), 16, _s2_cover, False),
 }
 
 # The attribute index's spatial tier: a z2 keyspace under an outer
@@ -327,10 +339,9 @@ def keyed(df: DataFrame, ks: KeySpace, digits: int = 2, *, x: str = "lon",
         df = (df.withColumn("__e__", _envelope_cols_udf()(F.col(geom)))
                 .select("*", *(f"__e__.{c}" for c in _ENV)).drop("__e__"))
     names = {"x": x, "y": y, "secs": secs}
-    enc = _hex_udf(ks.encode, ks.width)
-    df = df.withColumn(ks.hex, enc(*(F.col(names.get(c, c)) for c in ks.inputs)))
+    df = ks.key(df, ks.hex, *(F.col(names.get(c, c)) for c in ks.inputs))
     if ks.bin is not None:  # a null dtg lands in the null (default) bin
-        df = df.withColumn(ks.bin, F.floor(F.col(secs) / F.lit(_WEEK_S)).cast("int"))
+        df = df.withColumn(ks.bin, zexpr.week_bin(secs).cast("int"))
     return df.withColumn(ks.prefix, F.substring(ks.hex, 1, digits))
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .store import open_store
+
 __all__ = ["write_inverted_index", "append_inverted_index",
            "term_query", "phrase_query", "ranked_query"]
 
@@ -88,13 +90,12 @@ def term_query(spark, path: str, terms: list[str],
     if not terms:
         raise ValueError("term_query needs at least one term")
     lows = sorted({str(t).lower() for t in terms})
-    tdf = spark.createDataFrame([(t,) for t in lows], "term string")
-    pfx = [r["p"] for r in
-           tdf.select(_term_prefix(F.col("term"), digits).alias("p"))
-              .collect()]
-    df = spark.read.parquet(f"{path}/postings")
-    return (df.filter(F.col("term_p").isin(sorted(set(pfx)))
-                      & F.col("term").isin(lows))
+    # the prefixes as literal expressions, which the optimizer folds
+    # into the partition filter, and a reused store DataFrame: building
+    # the query starts no Spark job
+    pfx = [_term_prefix(F.lit(t), digits) for t in lows]
+    df = open_store(spark, f"{path}/postings")
+    return (df.filter(F.col("term_p").isin(*pfx) & F.col("term").isin(lows))
               .select("term", "doc_id", "tf", "first_pos", "positions"))
 
 

@@ -299,3 +299,83 @@ class TestGeoHash:
         xmin, ymin, xmax, ymax = geohash_decode_bbox(gh)
         assert xmin <= 100.0 <= xmax
         assert ymin <= -50.0 <= ymax
+
+
+class TestZExpr:
+    """curves/zexpr.py, the JVM key expressions, bit for bit against the
+    numpy encoders (Z2SFC/Z3SFC with lenient=True)."""
+
+    @staticmethod
+    def _inputs():
+        r = np.random.RandomState(2024)
+        n = 3000
+        x = list(r.uniform(-200.0, 200.0, n))      # some outside the world
+        y = list(r.uniform(-100.0, 100.0, n))
+        secs = list(r.randint(-3 * 604800, 2000 * 604800, n))
+        below = [np.nextafter(180.0, 0.0), np.nextafter(90.0, 0.0)]
+        x += [180.0, -180.0, below[0], -0.0, 0.0, 90.0, -90.0, 1e-300]
+        y += [90.0, -90.0, below[1], -0.0, 0.0, 180.0, -180.0, -1e-300]
+        secs += [0, 604799, 604800, -1, -604800, -604801, 604799 * 3, 1]
+        # the reference vectors: cell centres of the split-oracle and
+        # bit-layout indices, which must key to exactly those indices
+        ij = [(0xFFFFFF, 0), (0, 1), (1, 0), (1, 1), (0xC0F02, 0x802),
+              (2**31 - 1, 2**31 - 1), (0x802, 0xC0F02)]
+        cx, cy = Z2SFC().invert(z2_encode([i for i, _ in ij], [j for _, j in ij]))
+        x += list(cx)
+        y += list(cy)
+        secs += [0] * len(ij)
+        return np.array(x), np.array(y), np.array(secs, np.int64), ij
+
+    @staticmethod
+    def _frame(spark, x, y, secs):
+        rows = [(float(a), float(b), int(c)) for a, b, c in zip(x, y, secs)]
+        rows += [(None, 1.0, 1), (1.0, None, 1), (1.0, 1.0, None)]
+        return spark.createDataFrame(rows, "x double, y double, secs long")
+
+    def test_z2_z3_cells_match_numpy(self, spark):
+        from geomesa_spark.curves import zexpr
+
+        x, y, secs, ij = self._inputs()
+        df = self._frame(spark, x, y, secs).cache()
+        z2 = Z2SFC().index(x, y, lenient=True)
+        bins, z3 = Z3SFC("week").index_millis(x, y, secs * 1000, lenient=True)
+        n = len(x)
+        try:
+            for level in range(1, 32):
+                got = [r[0] for r in
+                       zexpr.with_z2(df, "c", "x", "y", level).select("c").collect()]
+                assert [c is None for c in got[n:]] == [True, True, False], level
+                assert got[:n] == (z2 >> (2 * (31 - level))).tolist(), level
+            for level in range(1, 22):
+                got = (zexpr.with_z3(df, "c", "x", "y", "secs", level)
+                       .select("c", zexpr.week_bin("secs")).collect())
+                assert all(c is None for c, _ in got[n:]), level
+                assert [c for c, _ in got[:n]] == (z3 >> (3 * (21 - level))).tolist(), level
+                assert [b for _, b in got[:n]] == bins.tolist()
+        finally:
+            df.unpersist()
+        # the reference vectors keyed to their own indices, bit layout
+        # y1x1y0x0 included
+        ref = z2[n - len(ij):]
+        assert ref.tolist() == [int(z2_encode(i, j)) for i, j in ij]
+        assert ref[1:4].tolist() == [2, 1, 3]
+
+    def test_store_hex_keys_match_numpy(self, spark):
+        from geomesa_spark.plans.store import KEYSPACES, keyed
+
+        x, y, secs, _ = self._inputs()
+        df = self._frame(spark, x, y, secs)
+        n = len(x)
+        got = (keyed(keyed(df, KEYSPACES["z2"], x="x", y="y"), KEYSPACES["z3"],
+                     x="x", y="y", secs="secs")
+               .select("z2_hex", "z3_hex", "z2_p", "z3_p").toPandas())
+        z2 = Z2SFC().index(x, y, lenient=True)
+        _, z3 = Z3SFC("week").index_millis(x, y, secs * 1000, lenient=True)
+        assert got["z2_hex"][:n].tolist() == list(Z2SFC().hex_encode(z2))
+        assert got["z3_hex"][:n].tolist() == [
+            format((int(z) << 1) & (2**64 - 1), "016x") for z in z3]
+        assert got["z2_p"][:n].tolist() == [h[:2] for h in got["z2_hex"][:n]]
+        # a null coordinate or dtg: a null key and prefix (the default
+        # hive partition)
+        assert got["z2_hex"][n:].isna().tolist() == [True, True, False]
+        assert got["z3_hex"][n:].isna().all() and got["z3_p"][n:].isna().all()

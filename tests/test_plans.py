@@ -500,6 +500,56 @@ def test_xz3_store_stbox_query(spark, tmp_path, pruned_on):
     assert 0 < len(pfx) < 256
 
 
+def test_xz3_key_of_null_dtg_is_deterministic():
+    """A null dtg (NaN in the Arrow batch) keys without numpy's invalid
+    cast warning, to the same key every time."""
+    import warnings
+
+    import pandas as pd
+
+    from geomesa_spark.plans.store import _xz3_codes
+
+    env = [np.array([v, v]) for v in (1.0, 2.0, 3.0, 4.0)]
+    secs = pd.Series([1_600_000_000, None]).to_numpy()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        a = _xz3_codes(*env, secs)
+        b = _xz3_codes(*env, secs)
+    assert np.array_equal(a, b)
+
+
+def _sql_plans(spark, run) -> list[str]:
+    """Physical plan descriptions of the SQL executions ``run`` starts."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    seq = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(30_000)
+    seen = {e.executionId() for e in seq(store.executionsList())}
+    run()
+    bus.waitUntilEmpty(30_000)
+    return [e.physicalPlanDescription() for e in seq(store.executionsList())
+            if e.executionId() not in seen]
+
+
+def test_z2_z3_store_writes_run_no_python(spark, tmp_path):
+    """The z2 and z3 store keys are JVM expressions: their writes hold no
+    Python evaluation node (the xz2 write, whose key has no closed form,
+    still does)."""
+    rows = [(i, -74.0 + i * 0.01, 40.0 + i * 0.01, 1_600_000_000 + i * 3600)
+            for i in range(50)]
+    df = spark.createDataFrame(rows, "pid long, lon double, lat double, secs long")
+    for name in ("z2", "z3"):
+        plans = _sql_plans(spark, lambda: write_store(
+            df, str(tmp_path / name), KEYSPACES[name]))
+        assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans), name
+        for p in plans:
+            assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, name
+    geoms = df.withColumn("geom", F.expr("st_asBinary(st_makePoint(lon, lat))"))
+    plans = _sql_plans(spark, lambda: write_store(
+        geoms, str(tmp_path / "xz2"), KEYSPACES["xz2"]))
+    assert any("ArrowEvalPython" in p for p in plans)
+
+
 def test_query_guard_rejects_unbounded(spark, tmp_path):
     from geomesa_spark.functions import register_functions
     from geomesa_spark.plans.store import plan_query, write_indexed
@@ -752,6 +802,19 @@ def test_inverted_index_store_query(spark, tmp_path, pruned_on):
         ("vector", 1): (1, 0, [0]),
     }
     pruned_on(out, "term_p")
+
+    # the term prefixes are folded literals: building the query starts
+    # no Spark job
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def job_ids():
+        bus.waitUntilEmpty(30_000)
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = job_ids()
+    term_query(spark, path, ["HASH", "vector"])
+    assert job_ids() == before
 
     import pytest
     with pytest.raises(ValueError, match="at least one term"):
