@@ -237,22 +237,21 @@ def q_knn(spark, sf_dir):
         tg.point_lon("n_nationkey", _q["mlon"], _q["olon"]).alias("qx"),
         tg.point_lat("n_nationkey", _q["mlat"], _q["olat"]).alias("qy"))
     d = _cust_points(spark, sf_dir)
-    # max_radius spans the degrees-domain diagonal so knn_join's
-    # completeness fallback makes the top-5 exact at ANY density
-    # (matching the unbounded oracle) — the fallback round never fires
-    # when the 4 growth rounds already find k=5
+    # max_radius spans the degrees-domain diagonal, so no neighbour is
+    # cut off: knn_join's count-seeded radius makes the top-5 exact at
+    # ANY density (matching the unbounded oracle) in one round
     out = knn_join(q, d, k=5, query_id="qid", qx="qx", qy="qy",
                    dx="lon", dy="lat", data_id="c_custkey",
-                   metric="degrees", initial_radius=20.0, max_radius=405.0,
-                   max_rounds=4)
+                   metric="degrees", max_radius=405.0)
     return out.select("qid", "c_custkey", "rank")
 
 
 def q_all_knn(spark, sf_dir):
     """All-kNN join (operators/knn.all_knn_join): the large x large
-    regime — nothing broadcast or collected; a phase-1 same-cell pass
-    seeds each query's exact kth-distance search radius and
-    expanding-disk shuffle rounds resolve the sparse-cell stragglers."""
+    regime — nothing broadcast; the only collect is the right side's
+    per-cell count map. Each left's exact search radius is the smaller
+    of its phase-1 same-cell kth distance and the count-map ring
+    radius, and one shuffle round joins the candidates."""
     from geomesa_spark.operators.knn import all_knn_join
 
     s = tg.SUPP
@@ -1323,15 +1322,13 @@ def q_knn_classify(spark, sf_dir):
         tg.point_lon("c_custkey").alias("lon"),
         tg.point_lat("c_custkey").alias("lat"))
     # max_radius=405 spans the lon/lat domain diagonal (~402.5 deg), so
-    # knn_join's completeness fallback makes the vote EXACT over the
-    # unbounded top-5 — matching the oracle at any SF/density, not just
-    # dense ones (the fallback round only ever fires for queries still
-    # short of k=5 after the 4 Liu/Lim/Ng growth rounds)
+    # the vote is EXACT over the unbounded top-5 — matching the oracle
+    # at any SF/density: knn_join's count-seeded radius always holds
+    # the 5 nearest
     return knn_classify(q, d, k=5, label_col="c_mktsegment",
                         query_id="qid", qx="qx", qy="qy",
                         dx="lon", dy="lat", data_id="c_custkey",
-                        metric="degrees", initial_radius=20.0,
-                        max_radius=405.0, max_rounds=4)
+                        metric="degrees", max_radius=405.0)
 
 
 def q_gini_hosts(spark, sf_dir):
@@ -1936,13 +1933,12 @@ def q_knn_sphere(spark, sf_dir):
         tg.point_lon("n_nationkey", _q["mlon"], _q["olon"]).alias("qx"),
         tg.point_lat("n_nationkey", _q["mlat"], _q["olat"]).alias("qy"))
     d = _cust_points(spark, sf_dir)
-    # max_radius > pi*R (antipodal bound ~20,015 km) — with the
-    # completeness fallback this makes the sphere-metric top-3 exact at
+    # max_radius > pi*R (antipodal bound ~20,015 km) cuts off no
+    # neighbour, so the count-seeded sphere-metric top-3 is exact at
     # any density, matching the unbounded oracle
     out = knn_join(q, d, k=3, query_id="qid", qx="qx", qy="qy",
                    dx="lon", dy="lat", data_id="c_custkey",
-                   metric="sphere", initial_radius=2_000_000.0,
-                   max_radius=20_100_000.0, max_rounds=4)
+                   metric="sphere", max_radius=20_100_000.0)
     return out.select("qid", "c_custkey", "rank")
 
 

@@ -1,32 +1,43 @@
-"""Grid-partitioned k-nearest-neighbors with border expansion.
+"""Grid-partitioned k-nearest-neighbors in one exact candidate round.
 
 Re-expresses the reference KNN process
-(geomesa-process/.../query/KNearestNeighborSearchProcess.scala:39-591) as
-iterative DataFrame rounds:
+(geomesa-process/.../query/KNearestNeighborSearchProcess.scala:39-591).
+The reference grows each query's window round by round with the
+Liu/Lim/Ng density guess (:292-302) until it holds k points. Here every
+query gets, before any candidate is joined, a search radius that
+provably holds its k nearest neighbours, so one round is exact:
 
-- Round: each live query point covers the cells of its current search-disk
-  bbox (the reference's expanding window query, :425-432); candidates come
-  from an equi-join on the data points' Z2 cell, distances computed
-  vectorized, kept iff <= radius.
-- Expansion (border re-join): queries with < k in-radius neighbors grow
-  their radius by the reference's Liu/Lim/Ng density rule (:292-302):
-  ``r*2`` when nothing was found, else ``sqrt(k / (pi*density))`` where
-  density = found / (2r)^2 (the reference estimates density over the
-  square query window), i.e. ``2r * sqrt(k/(pi*n))`` — always > r for
-  n < k; capped at ``max_radius``. The re-join re-queries the whole disk
-  and dedupes on (query, neighbor) — equivalent row set to the
-  reference's ring-shaped re-query (Envelope.minus:498-520). Queries
-  that exhaust ``max_rounds`` still short of k re-query once at exactly
-  ``max_radius`` (broadcast nested-loop + salted two-phase top-k), so
-  the result is exact whenever ``max_radius`` spans the domain.
+- Count map: the data rows inside the world (-180 <= x <= 180,
+  -90 <= y <= 90) are counted per Z2 cell at the seed level
+  ``min(level, DEFAULT_LEVEL)`` and collected. The collect holds one row
+  per non-empty cell, at most 4^8 = 65,536 rows, whatever the data size.
+  Rows outside the world are not counted: the cell key clamps them into
+  an edge cell whose rectangle does not hold them. They still join as
+  candidates.
+- Radius: on a 2-D prefix sum of the counts, each query binary-searches
+  the smallest m >= 0 such that the (2m+1)^2 block of seed cells around
+  its own cell, clipped to the world, holds >= k counted points. Its
+  radius is the distance to that block's farthest corner (degrees:
+  ``hypot``; sphere: ``R * (dphi + dlambda)``, the length of a
+  parallel-then-meridian path, which is >= the haversine), times
+  ``1 + 1e-9`` against rounding and capped at ``max_radius``; with no
+  such block it is ``max_radius``.
+- Exactness: the k counted points lie inside the radius, so the k-th
+  neighbour distance is <= the radius. The cell cover of
+  ``[x +- r, y +- r]`` holds every point within r, and candidates are
+  kept iff ``dist <= r``, so ties at the k-th distance are all present.
+  A data point has one cell and the cover lists a cell once, so the
+  round yields each (query, data) pair at most once.
 - Final: exact top-k per query via window ``row_number() over (partition
   by qid order by dist, neighbor id)`` — the reference's fixed-k
   farthest-replacement array (:314-399) as a declarative window.
 
-Scale shape: the query side is tiny (thousands) and broadcast; the data
-side keeps its one-cell-per-point key so each round is a broadcast join
-pruned to the covered cells — no data-side shuffle at any round. The only
-shuffle is the final window over candidate rows (#queries * ~k rows).
+Scale shape: the query side is tiny (thousands) and broadcast; one
+Arrow UDF on it computes the radius and the cell cover together, so the
+query side crosses into Python once. The data side keeps its
+one-cell-per-point key: one grouped count for the count map, then one
+broadcast join pruned to the covered cells. The only shuffle after the
+count is the final window over candidate rows.
 
 Metrics: 'degrees' (cartesian, matches st_distance) or 'sphere'
 (haversine meters, matches st_distanceSphere).
@@ -39,12 +50,15 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from .cache import attach_cached
 from .spatial_join import (
-    DEFAULT_LEVEL, cells_of_disk_arrays, sphere_expand_degrees, with_point_cell,
+    DEFAULT_LEVEL, _grid_of_bbox, cells_of_disk_arrays, sphere_expand_degrees,
+    with_point_cell,
 )
 
+from ..curves.zorder import z2_decode
 from ..geom.measures import EARTH_MEAN_RADIUS_M as EARTH_RADIUS_M
 
 
@@ -58,24 +72,99 @@ def _dist_expr(qx, qy, px, py, metric: str):
     raise ValueError(metric)
 
 
-def _query_cells(queries, qx: str, qy: str, radius_col: str, level: int,
-                 metric: str):
-    """Explode each query to the Z2 cells covering its search-disk bbox."""
-    from pyspark.sql.types import ArrayType, LongType
+def _count_prefix(data: DataFrame, x: str, y: str, level: int) -> np.ndarray:
+    """2-D prefix sum of the in-world rows of ``data`` per Z2 cell at the
+    seed level ``min(level, DEFAULT_LEVEL)``: ``c[j, i]`` counts the rows
+    in cells ``[0, i) x [0, j)``. Computed afresh on every call: a stale
+    count could give a radius too small to hold the k nearest
+    neighbours."""
+    level = min(level, DEFAULT_LEVEL)
+    inworld = data.filter(F.col(x).between(-180.0, 180.0)
+                          & F.col(y).between(-90.0, 90.0))
+    # one row per non-empty cell: at most 4^level <= 65,536 rows
+    rows = (with_point_cell(inworld.select(x, y), x, y, level)
+            .groupBy("__cell__").count().collect())
+    n = 1 << level
+    grid = np.zeros((n + 1, n + 1), dtype=np.int64)
+    if rows:
+        cells, counts = np.array([tuple(r) for r in rows], dtype=np.int64).T
+        i, j = z2_decode(cells)
+        grid[j + 1, i + 1] = counts
+    return grid.cumsum(0).cumsum(1)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(x: pd.Series, y: pd.Series, r: pd.Series) -> pd.Series:
-        xs = x.to_numpy(np.float64)
-        ys = y.to_numpy(np.float64)
-        rs = r.to_numpy(np.float64)
+
+def _ring_radius(xs, ys, k: int, csum: np.ndarray, metric: str) -> np.ndarray:
+    """Per query, the distance to the farthest corner of the smallest
+    square block of count-map cells around its own cell that holds >= k
+    counted points, times ``1 + 1e-9`` (an exact upper bound on the
+    k-th neighbour distance); inf where no block holds k."""
+    n = csum.shape[0] - 1
+    level = n.bit_length() - 1
+    ok = np.isfinite(xs) & np.isfinite(ys)
+    xs0, ys0 = np.where(ok, xs, 0.0), np.where(ok, ys, 0.0)
+    i, _, j, _ = _grid_of_bbox(xs0, ys0, xs0, ys0, level)
+
+    def block(m):
+        """Cell index bounds [i0, i1) x [j0, j1) of the (2m+1)^2 block."""
+        return (np.maximum(i - m, 0), np.minimum(i + m, n - 1) + 1,
+                np.maximum(j - m, 0), np.minimum(j + m, n - 1) + 1)
+
+    def holds_k(m):
+        i0, i1, j0, j1 = block(m)
+        return csum[j1, i1] - csum[j0, i1] - csum[j1, i0] + csum[j0, i0] >= k
+
+    # the block count grows with m: binary-search the smallest m per query
+    lo, hi = np.zeros_like(i), np.full_like(i, n - 1)
+    reach = holds_k(hi)
+    while np.any(lo < hi):
+        mid = (lo + hi) // 2
+        holds = holds_k(mid)
+        hi, lo = np.where(holds, mid, hi), np.where(holds, lo, mid + 1)
+    i0, i1, j0, j1 = block(lo)
+    cw, ch = 360.0 / n, 180.0 / n
+    ddx = np.maximum(np.abs(xs0 - (-180.0 + i0 * cw)), np.abs(xs0 - (-180.0 + i1 * cw)))
+    ddy = np.maximum(np.abs(ys0 - (-90.0 + j0 * ch)), np.abs(ys0 - (-90.0 + j1 * ch)))
+    if metric == "degrees":
+        r = np.hypot(ddx, ddy)
+    else:
+        r = EARTH_RADIUS_M * (np.radians(ddx) + np.radians(ddy))
+    return np.where(reach, r * (1.0 + 1e-9), np.inf)
+
+
+def _search_cells(df: DataFrame, x: str, y: str, bound, k: int,
+                  csum: np.ndarray, level: int, metric: str) -> DataFrame:
+    """``df`` plus its search radius ``__r__`` — the smaller of the
+    count-map ring radius and the per-row ``bound`` column — exploded to
+    one row per Z2 cell (``__cell__``, at ``level``) covering that disk.
+    One Arrow UDF computes both; a row with a null coordinate covers no
+    cell (cells_of_disk_arrays) and drops out."""
+    schema = StructType([StructField("r", DoubleType()),
+                         StructField("cells", ArrayType(LongType()))])
+
+    @F.pandas_udf(schema)
+    def seed(xv: pd.Series, yv: pd.Series, bv: pd.Series) -> pd.DataFrame:
+        xs = xv.to_numpy(np.float64)
+        ys = yv.to_numpy(np.float64)
+        r = np.fmin(_ring_radius(xs, ys, k, csum, metric), bv.to_numpy(np.float64))
         if metric == "sphere":  # meters -> conservative per-dim degrees
-            rlon, rlat = sphere_expand_degrees(ys, rs)
+            rlon, rlat = sphere_expand_degrees(ys, r)
         else:
-            rlat = rlon = rs
-        cells = cells_of_disk_arrays(xs, ys, rlon, rlat, level)
-        return pd.Series(cells, dtype=object)
+            rlat = rlon = r
+        return pd.DataFrame({"r": r,
+                             "cells": cells_of_disk_arrays(xs, ys, rlon, rlat, level)})
 
-    return queries.withColumn("__cells__", cover(F.col(qx), F.col(qy), F.col(radius_col)))
+    cols = df.columns
+    # coalesce: a nullable radius makes the join infer isnotnull(__r__),
+    # which the optimizer pushes below the UDF as a second UDF call
+    return (df.withColumn("__s__", seed(F.col(x), F.col(y), bound))
+              .select(*cols, F.coalesce(F.col("__s__.r"), F.lit(0.0)).alias("__r__"),
+                      F.explode("__s__.cells").alias("__cell__")))
+
+
+def _top_k(cand: DataFrame, key: str, data_id: str, k: int) -> DataFrame:
+    win = Window.partitionBy(key).orderBy(F.col("dist").asc(), F.col(data_id).asc())
+    return (cand.withColumn("rank", F.row_number().over(win))
+                .filter(F.col("rank") <= k))
 
 
 def knn_join(
@@ -97,109 +186,24 @@ def knn_join(
     """k nearest data points per query point.
 
     Returns (all query cols, all data cols, dist, rank 1..k). Deterministic
-    tie-break on (dist, data_id).
-    """
-    data_c = with_point_cell(data, dx, dy, level)
+    tie-break on (dist, data_id). No neighbour farther than ``max_radius``
+    is returned, so a query with fewer than k data points within it gets
+    fewer rows; a query with a null coordinate gets none.
 
-    live = queries.withColumn("__r__", F.lit(float(initial_radius)))
-    all_cand = None
-    cached = []
-    need = None
-    for rnd in range(max_rounds):
-        qc = _query_cells(live, qx, qy, "__r__", level, metric)
-        qe = qc.withColumn("__cell__", F.explode("__cells__")).drop("__cells__")
-        dist = _dist_expr(F.col(qx), F.col(qy), F.col(dx), F.col(dy), metric)
-        cand = (
-            F.broadcast(qe).join(data_c, on="__cell__", how="inner")
+    ``initial_radius`` and ``max_rounds`` are accepted for existing
+    callers and change neither the rows nor the plan: every query's
+    radius comes from the per-cell counts (module docstring).
+    """
+    csum = _count_prefix(data, dx, dy, level)
+    qe = _search_cells(queries, qx, qy, F.lit(float(max_radius)), k, csum,
+                       level, metric)
+    dist = _dist_expr(F.col(qx), F.col(qy), F.col(dx), F.col(dy), metric)
+    cand = (F.broadcast(qe).join(with_point_cell(data, dx, dy, level),
+                                 on="__cell__", how="inner")
              .withColumn("dist", dist)
              .filter(F.col("dist") <= F.col("__r__"))
-             .drop("__cell__")
-        )
-        # persist: this round's join feeds (a) the per-round count action,
-        # (b) the isEmpty check via `need`, and (c) the final union —
-        # without it round 1 re-executes once per later round
-        cand = cand.persist()
-        cached.append(cand)
-        all_cand = cand if all_cand is None else all_cand.unionByName(cand)
-        # which queries still need expansion? counted in EVERY round —
-        # the final round's survivors feed the completeness fallback below
-        counts = cand.groupBy(query_id).agg(F.count("*").alias("__n__"))
-        need = (live.join(counts, on=query_id, how="left")
-                    .fillna({"__n__": 0})
-                    .filter((F.col("__n__") < k)
-                            # already capped at max_radius: the window
-                            # cannot grow, so re-running the identical
-                            # cover/join/count every remaining round is
-                            # pure waste — retire the query with what it has
-                            & (F.col("__r__") < float(max_radius))))
-        if need.isEmpty():
-            need = None
-            break
-        if rnd == max_rounds - 1:
-            break
-        # Liu/Lim/Ng radius update (KNearestNeighborSearchProcess.scala:
-        # 292-302): density estimated over the SQUARE window (2r)^2, so
-        # new r = sqrt(k / (pi * n / (2r)^2)) = 2r * sqrt(k/(pi*n)) —
-        # always > r while n < k
-        new_r = F.when(F.col("__n__") == 0, F.col("__r__") * 2).otherwise(
-            F.lit(2.0) * F.col("__r__")
-            * F.sqrt(F.lit(float(k)) / (F.lit(math.pi) * F.col("__n__"))))
-        live = (need.withColumn("__r__", F.least(new_r, F.lit(float(max_radius))))
-                    .drop("__n__"))
-
-    if need is not None:
-        # Completeness fallback: the Liu/Lim/Ng growth is slow for
-        # 1 <= n < k (~1.26x/round at n=k-1), so a query can exhaust
-        # max_rounds with < k in-radius neighbors and a radius far below
-        # max_radius — its vote/top-k would then silently use a smaller
-        # neighbor set than the exact unbounded answer. Stragglers
-        # re-query ONCE at exactly max_radius against the FULL data side:
-        # no cell cover (a domain-wide window at `level` would explode to
-        # 4^level cells per query) — the straggler set is tiny by
-        # construction, so a broadcast nested-loop streams the data side
-        # map-only. A salted two-phase top-k bounds what reaches the
-        # final per-query window to <= 32*k rows per straggler even when
-        # the in-radius candidate set is the whole table, so no single
-        # (query) partition ever sees unbounded fan-in. With max_radius
-        # covering the metric's domain diameter (405 degrees / pi*R
-        # meters) the join is EXACT for every query.
-        strag = need.drop("__n__").withColumn(
-            "__r__", F.lit(float(max_radius)))
-        # Guard: the fallback broadcasts the stragglers and streams the
-        # FULL data side against them, which is only cheap while the
-        # straggler set is tiny (the normal case — a few sparse-region
-        # queries). A mis-parameterized call (k far above the local
-        # density everywhere, max_rounds too small) could route a large
-        # query fraction here and degrade into a near-cartesian job —
-        # make that visible instead of silent. The count is one cheap
-        # job over the already-persisted round frames, bounded so it
-        # never counts past the threshold.
-        if strag.limit(10_001).count() > 10_000:
-            import logging
-            logging.getLogger(__name__).warning(
-                "knn_join completeness fallback engaged for more than "
-                "10000 queries: the broadcast nested-loop re-query scans "
-                "the full data side per straggler batch. Consider raising "
-                "max_rounds or the initial radius, or lowering k.")
-        dist = _dist_expr(F.col(qx), F.col(qy), F.col(dx), F.col(dy), metric)
-        w1 = Window.partitionBy(query_id, "__salt__").orderBy(
-            F.col("dist").asc(), F.col(data_id).asc())
-        fcand = (data.crossJoin(F.broadcast(strag))
-                     .withColumn("dist", dist)
-                     .filter(F.col("dist") <= F.col("__r__"))
-                     .withColumn("__salt__",
-                                 F.pmod(F.hash(F.col(data_id)), F.lit(32)))
-                     .withColumn("__rk__", F.row_number().over(w1))
-                     .filter(F.col("__rk__") <= k)
-                     .drop("__salt__", "__rk__"))
-        all_cand = all_cand.unionByName(fcand)
-
-    dedup = all_cand.dropDuplicates([query_id, data_id])
-    win = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(data_id).asc())
-    out = (dedup.withColumn("rank", F.row_number().over(win))
-                .filter(F.col("rank") <= k)
-                .drop("__r__"))
-    return attach_cached(out, *cached)
+             .drop("__cell__", "__r__"))
+    return attach_cached(_top_k(cand, query_id, data_id, k))
 
 
 def all_knn_join(
@@ -214,7 +218,6 @@ def all_knn_join(
     ry: str,
     metric: str = "degrees",
     level: int = DEFAULT_LEVEL,
-    max_rounds: int | None = None,
     max_radius: float | None = None,
 ) -> DataFrame:
     """k nearest ``right`` points per ``left`` point — BOTH sides large.
@@ -222,23 +225,24 @@ def all_knn_join(
     :func:`knn_join` broadcasts the query side (the reference process's
     shape: thousands of queries against a big store). This is the other
     regime — an all-kNN join where neither side fits on one node — so
-    nothing is broadcast or collected:
+    nothing is broadcast, and the only collect is the count map of the
+    right side (one row per non-empty cell, at most 65,536 rows):
 
-    - Phase 1 (seed): both sides co-shuffle on their Z2 cell; the in-cell
-      kth distance is an EXACT per-left search-radius upper bound (the
-      true kth neighbor can only be closer). Lefts whose cell held < k
-      candidates seed from the cell diagonal instead.
-    - Rounds: each live left explodes to the cells covering its own disk
-      and shuffle-joins ``right`` on the cell (the same expanding-window
-      re-query as knn_join, minus the broadcast). A left retires when its
-      disk holds >= k candidates; otherwise its radius doubles (capped at
-      ``max_radius``, reference Liu/Lim/Ng growth,
-      KNearestNeighborSearchProcess.scala:292-302).
+    - Phase 1: both sides co-shuffle on their Z2 cell; where a left's
+      cell holds >= k right points, the in-cell kth distance is an
+      exact search-radius upper bound (the true kth neighbor can only
+      be closer). It keeps the radius tight in dense cells.
+    - Seed: each left's radius is the smaller of that bound and the
+      count-map ring radius over ``right`` (see the module docstring),
+      capped at ``max_radius``. Both are exact upper bounds.
+    - One round: each left explodes to the cells covering its disk and
+      shuffle-joins ``right`` on the cell (knn_join's round, minus the
+      broadcast).
 
-    Exactness: if disk(r) holds >= k candidates then the true kth
-    distance is <= r, the cell cover is a superset of the closed disk,
-    and the final window top-k over in-radius candidates is the true
-    top-k with deterministic (dist, right_id) tie-break.
+    Exactness: the disk holds the true top-k, the cell cover is a
+    superset of the closed disk, and the final window top-k over
+    in-radius candidates is the true top-k with deterministic
+    (dist, right_id) tie-break.
 
     Scale shape: shuffles carry (cell, id, x, y) rows only; hot cells are
     plain shuffle-join skew (AQE splits them). Pick ``level`` so the
@@ -248,21 +252,11 @@ def all_knn_join(
     """
     if max_radius is None:
         max_radius = 405.0 if metric == "degrees" else math.pi * EARTH_RADIUS_M
-    diag = math.hypot(360.0 / (1 << level), 180.0 / (1 << level))
-    seed_r = diag if metric == "degrees" else diag * 111_320.0
-    if max_rounds is None:
-        # enough doublings for the worst-case diagonal seed to reach
-        # max_radius (round r's disk is seed_r * 2^(r-1)); +2 covers the
-        # seed round and one final full-radius round. Converged queries
-        # retire via the isEmpty() check, so a generous bound costs
-        # nothing — a tight one silently returns < k rows.
-        max_rounds = max(
-            2, math.ceil(math.log2(max(max_radius / seed_r, 1.0))) + 2)
-
+    csum = _count_prefix(right, rx, ry, level)
     rc = with_point_cell(right, rx, ry, level)
     dist = _dist_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry), metric)
 
-    # phase 1: same-cell kth distance as the exact radius seed
+    # phase 1: same-cell kth distance, a bound wherever the cell holds k
     lc = with_point_cell(left, lx, ly, level)
     w0 = Window.partitionBy(left_id).orderBy(
         F.col("__d0__").asc(), F.col(right_id).asc())
@@ -273,43 +267,16 @@ def all_knn_join(
              .groupBy(left_id)
              .agg(F.max("__d0__").alias("__dk__"),
                   F.count("*").alias("__n0__")))
-    live = (left.join(kth, on=left_id, how="left")
-                .withColumn("__r__", F.when(F.col("__n0__") >= k, F.col("__dk__"))
-                                      .otherwise(F.lit(float(seed_r))))
-                .drop("__dk__", "__n0__"))
-
-    all_cand = None
-    cached = []
-    for rnd in range(max_rounds):
-        qc = _query_cells(live, lx, ly, "__r__", level, metric)
-        qe = qc.withColumn("__cell__", F.explode("__cells__")).drop("__cells__")
-        cand = (qe.join(rc, on="__cell__", how="inner")
-                  .withColumn("dist", dist)
-                  .filter(F.col("dist") <= F.col("__r__"))
-                  .drop("__cell__")
-                  .persist())
-        cached.append(cand)
-        all_cand = cand if all_cand is None else all_cand.unionByName(cand)
-        if rnd == max_rounds - 1:
-            break
-        counts = cand.groupBy(left_id).agg(F.count("*").alias("__n__"))
-        need = (live.join(counts, on=left_id, how="left")
-                    .fillna({"__n__": 0})
-                    .filter((F.col("__n__") < k)
-                            & (F.col("__r__") < float(max_radius))))
-        if need.isEmpty():
-            break
-        live = (need.withColumn(
-                    "__r__",
-                    F.least(F.col("__r__") * 2, F.lit(float(max_radius))))
-                    .drop("__n__"))
-
-    dedup = all_cand.dropDuplicates([left_id, right_id])
-    win = Window.partitionBy(left_id).orderBy(F.col("dist").asc(), F.col(right_id).asc())
-    out = (dedup.withColumn("rank", F.row_number().over(win))
-                .filter(F.col("rank") <= k)
-                .drop("__r__"))
-    return attach_cached(out, *cached)
+    # least() skips the null of a left whose cell holds < k
+    bound = F.least(F.when(F.col("__n0__") >= k, F.col("__dk__")),
+                    F.lit(float(max_radius)))
+    live = left.join(kth, on=left_id, how="left")
+    qe = _search_cells(live, lx, ly, bound, k, csum, level, metric)
+    cand = (qe.join(rc, on="__cell__", how="inner")
+              .withColumn("dist", dist)
+              .filter(F.col("dist") <= F.col("__r__"))
+              .drop("__cell__", "__r__", "__dk__", "__n0__"))
+    return attach_cached(_top_k(cand, left_id, right_id, k))
 
 
 def knn_classify(queries: DataFrame, data: DataFrame, k: int,
@@ -321,8 +288,8 @@ def knn_classify(queries: DataFrame, data: DataFrame, k: int,
     reference analog: the KNearestNeighborSearchProcess feeding a
     client-side vote).
 
-    Scale shape: knn_join's expanding-radius candidate machinery does
-    all the heavy lifting; the vote adds one combining (query, label)
+    Scale shape: knn_join's one count-seeded candidate round does all
+    the heavy lifting; the vote adds one combining (query, label)
     count and ONE combining struct-max per query (the peak_bucket
     argmax-without-a-window shape). Ties break on the LARGER label
     under binary string order — deterministic in any engine. Returns

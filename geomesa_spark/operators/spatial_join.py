@@ -77,10 +77,19 @@ def _grid_of_bbox(xmin, ymin, xmax, ymax, level: int):
 
 
 def cells_of_bbox_arrays(xmin, ymin, xmax, ymax, level: int):
-    """Vectorized bbox -> list of covering cell ids (python list per row)."""
-    ix0, ix1, iy0, iy1 = _grid_of_bbox(xmin, ymin, xmax, ymax, level)
+    """Vectorized bbox -> list of covering cell ids (python list per row).
+
+    A row with a non-finite bound (a null coordinate or radius arrives
+    as NaN in an Arrow batch) covers no cell: cast to int64 it would
+    land in arbitrary cells."""
+    box = [np.asarray(v, dtype=np.float64) for v in (xmin, ymin, xmax, ymax)]
+    ok = np.logical_and.reduce([np.isfinite(v) for v in box])
+    ix0, ix1, iy0, iy1 = _grid_of_bbox(*(np.where(ok, v, 0.0) for v in box), level)
     out = []
-    for a, b, c, d in zip(ix0, ix1, iy0, iy1):
+    for good, a, b, c, d in zip(ok, ix0, ix1, iy0, iy1):
+        if not good:
+            out.append([])
+            continue
         xs = np.arange(a, b + 1, dtype=np.int64)
         ys = np.arange(c, d + 1, dtype=np.int64)
         gx, gy = np.meshgrid(xs, ys)

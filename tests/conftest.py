@@ -24,12 +24,10 @@ def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
 
 
-def _partition_filters(df) -> list[list[str]]:
-    """The PartitionFilters of every file scan in ``df``'s executed plan,
-    one list of predicate strings per scan. Read from the scan nodes
-    rather than the plan string, which cuts each scan field at
-    spark.sql.maxMetadataStringLength characters."""
-    todo, out = [df._jdf.queryExecution().executedPlan()], []
+def _plan_nodes(df):
+    """The operators of ``df``'s executed plan, through the adaptive
+    plan and its query stages (the final plan once an action ran)."""
+    todo = [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
         name = node.getClass().getSimpleName()
@@ -39,12 +37,28 @@ def _partition_filters(df) -> list[list[str]]:
         if name.endswith("QueryStageExec"):
             todo.append(node.plan())
             continue
-        if name == "FileSourceScanExec":
-            fs = node.partitionFilters()
-            out.append([fs.apply(i).toString() for i in range(fs.size())])
+        yield node
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _partition_filters(df) -> list[list[str]]:
+    """The PartitionFilters of every file scan in ``df``'s executed plan,
+    one list of predicate strings per scan. Read from the scan nodes
+    rather than the plan string, which cuts each scan field at
+    spark.sql.maxMetadataStringLength characters."""
+    out = []
+    for node in _plan_nodes(df):
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            fs = node.partitionFilters()
+            out.append([fs.apply(i).toString() for i in range(fs.size())])
     return out
+
+
+@pytest.fixture
+def plan_node_names():
+    """The class names of a DataFrame's executed plan operators."""
+    return lambda df: [n.getClass().getSimpleName() for n in _plan_nodes(df)]
 
 
 @pytest.fixture

@@ -58,11 +58,10 @@ def test_knn_fewer_points_than_k(spark):
 
 
 def test_knn_completeness_fallback_sparse_data(spark):
-    """A query whose Liu/Lim/Ng growth can't reach k neighbors inside
-    max_rounds must still return the EXACT top-k via the final
-    max_radius fallback round (neighbors at 1, 150 and 200 degrees with
-    a 0.5-degree seed: growth at n=1 is ~1.4x/round, so 3 rounds end
-    near 1.4 degrees — only the fallback can see the far two)."""
+    """A query whose k neighbors are spread across the world (at 1, 150
+    and 200 degrees) gets the EXACT top-k: its count-seeded radius
+    reaches the block of cells holding all three, whatever the
+    ``initial_radius``/``max_rounds`` it passes."""
     from geomesa_spark.operators.knn import knn_join
 
     q = spark.createDataFrame([(0, 0.0, 0.0)], "qid long, qx double, qy double")

@@ -1,10 +1,16 @@
-"""all_knn_join (large x large kNN join): brute-force equivalence.
+"""knn_join and all_knn_join: brute-force equivalence.
 
-The broadcast-side knn_join is covered by the driver oracle (q_knn /
-q_knn_sphere); this file proves the shuffle-based all-kNN join — phase-1
-in-cell kth-distance seeding + expanding-disk rounds — returns exactly
-the brute-force top-k with the (dist, right_id) tie-break, across both
-metrics, sparse/dense levels, and a right side smaller than k.
+Both joins seed every query's search radius from per-cell counts and run
+one candidate round. These tests prove they return exactly the
+brute-force top-k with the (dist, id) tie-break, across both metrics:
+
+- knn_join (broadcast query side) on clustered and uniform data, hot and
+  rural queries, ties at the k-th distance, the antimeridian, data
+  outside the world or with null coordinates, a null query, a
+  ``max_radius`` below the k-th distance; plus a pin on its plan and
+  Spark jobs.
+- all_knn_join (shuffle both sides; phase-1 in-cell kth distance) on
+  sparse/dense levels, a right side smaller than k and coincident points.
 """
 
 from __future__ import annotations
@@ -12,12 +18,14 @@ from __future__ import annotations
 import math
 import os
 import sys
+from collections import Counter
 
 import numpy as np
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from geomesa_spark.operators.knn import all_knn_join  # noqa: E402
+from geomesa_spark.operators.knn import all_knn_join, knn_join  # noqa: E402
 
 
 def _mk_points(n, salt):
@@ -27,17 +35,22 @@ def _mk_points(n, salt):
     return ids, lon, lat
 
 
-def _brute(lids, llon, llat, rids, rlon, rlat, k, metric):
+def _brute(lids, llon, llat, rids, rlon, rlat, k, metric, max_radius=math.inf):
+    """(left id, right id, rank) of the top-k within ``max_radius``; a
+    NaN coordinate (a null) on either side matches nothing."""
     out = set()
     for i, qid in enumerate(lids):
+        # the engine's own spellings (knn._dist_expr, measures.haversine_col)
         if metric == "degrees":
-            d = np.hypot(llon[i] - rlon, llat[i] - rlat)
+            ddx, ddy = llon[i] - rlon, llat[i] - rlat
+            d = np.sqrt(ddx * ddx + ddy * ddy)
         else:
             la1, la2 = np.radians(llat[i]), np.radians(rlat)
-            dla, dlo = (la2 - la1) / 2, np.radians(rlon - llon[i]) / 2
+            dla, dlo = (la2 - la1) / 2, (np.radians(rlon) - np.radians(llon[i])) / 2
             a = np.sin(dla) ** 2 + np.cos(la1) * np.cos(la2) * np.sin(dlo) ** 2
             d = 2 * 6371008.7714 * np.arcsin(np.sqrt(a))
-        order = sorted(range(len(rids)), key=lambda j: (d[j], rids[j]))
+        within = [j for j in range(len(rids)) if d[j] <= max_radius]
+        order = sorted(within, key=lambda j: (d[j], rids[j]))
         for rank, j in enumerate(order[:k], start=1):
             out.add((int(qid), int(rids[j]), rank))
     return out
@@ -98,3 +111,121 @@ def test_all_knn_duplicate_coords_zero_radius(spark):
                        right_id="rid", rx="rlon", ry="rlat", level=4)
     got = {(r["rid"], r["rank"]) for r in out.collect()}
     assert got == {(1, 1), (2, 2)}
+
+
+# ---------------------------------------------------------------------------
+# knn_join (broadcast query side)
+
+_DUP = (40.0, 20.3)       # seven data points share this coordinate
+_SYM = (100.0, -50.0)     # data at exactly +-1 degree of longitude from it
+
+
+def _knn_inputs():
+    """Clustered + uniform data with duplicate coordinates, symmetric
+    ties, points outside the world and null coordinates; hot, rural,
+    antimeridian, polar, tie and null queries."""
+    rng = np.random.default_rng(5)
+    xs, ys = [], []
+    for cx, cy in ((10.0, 45.0), (-74.0, 40.7), (179.8, -17.0)):
+        xs.append(cx + rng.normal(0, 0.05, 60))
+        ys.append(cy + rng.normal(0, 0.03, 60))
+    xs.append(rng.uniform(-180, 180, 150))
+    ys.append(rng.uniform(-90, 90, 150))
+    extra = ([_DUP] * 7
+             + [(_SYM[0] + 1.0, _SYM[1]), (_SYM[0] - 1.0, _SYM[1])]
+             + [(181.0, 10.0), (185.0, -20.0), (-180.5, 30.0),
+                (50.0, 90.5), (60.0, -91.0)]
+             + [(math.nan, 5.0), (7.0, math.nan), (math.nan, math.nan)])
+    dx = np.concatenate(xs + [np.array([p[0] for p in extra])])
+    dy = np.concatenate(ys + [np.array([p[1] for p in extra])])
+    dids = np.arange(len(dx), dtype=np.int64) * 3 + 11
+    qx = np.concatenate([
+        np.array([10.0, 10.05, -74.02, 179.95, -179.9, -179.99,
+                  _DUP[0], _SYM[0], 180.0, -179.8, 55.0, 0.0, math.nan]),
+        rng.uniform(-180, 180, 12)])
+    qy = np.concatenate([
+        np.array([45.0, 44.98, 40.7, -17.0, -17.1, 10.0,
+                  _DUP[1] - 0.4, _SYM[1], 10.0, 30.0, 89.5, -89.0, 0.0]),
+        rng.uniform(-90, 90, 12)])
+    qids = np.arange(len(qx), dtype=np.int64)
+    return qids, qx, qy, dids, dx, dy
+
+
+def _none(v):
+    return None if math.isnan(v) else float(v)
+
+
+def _knn_frames(spark):
+    qids, qx, qy, dids, dx, dy = _knn_inputs()
+    q = spark.createDataFrame(
+        [(int(i), _none(x), _none(y)) for i, x, y in zip(qids, qx, qy)],
+        "qid long, qx double, qy double")
+    d = spark.createDataFrame(
+        [(int(i), _none(x), _none(y)) for i, x, y in zip(dids, dx, dy)],
+        "did long, lon double, lat double")
+    return q, d, (qids, qx, qy, dids, dx, dy)
+
+
+def _knn_rows(out):
+    return {(r["qid"], r["did"], r["rank"]) for r in out.collect()}
+
+
+@pytest.mark.parametrize("metric,max_radius", [("degrees", 405.0),
+                                               ("sphere", 20_100_000.0)])
+def test_knn_join_matches_brute_force(spark, metric, max_radius):
+    """Every query's top-k equals numpy brute force, whatever the
+    (initial_radius, max_rounds) setting: those no longer change rows."""
+    q, d, arrays = _knn_frames(spark)
+    want = _brute(*arrays, 5, metric)
+    got = []
+    for initial, rounds in ((0.01, 1), (30.0, 6)):
+        if metric == "sphere":
+            initial *= 111_000.0
+        out = knn_join(q, d, 5, metric=metric, initial_radius=initial,
+                       max_rounds=rounds, max_radius=max_radius)
+        got.append(_knn_rows(out))
+    assert got[0] == want
+    assert got[1] == got[0]
+    qids, qx, _, dids, dx, dy = arrays
+    per_q = Counter(qid for qid, _, _ in want)
+    assert set(per_q) == set(qids[~np.isnan(qx)])  # the null query: no rows
+    assert set(per_q.values()) == {5}
+    # the k-th distance ties among the duplicates break on the lowest ids
+    dup_ids = sorted(dids[(dx == _DUP[0]) & (dy == _DUP[1])])
+    dup_q = qids[qx == _DUP[0]][0]
+    assert {did for qid, did, _ in want if qid == dup_q} == set(dup_ids[:5])
+
+
+@pytest.mark.parametrize("metric,max_radius", [("degrees", 2.0),
+                                               ("sphere", 200_000.0)])
+def test_knn_join_max_radius_below_kth_distance(spark, metric, max_radius):
+    """No neighbour farther than max_radius: rural queries get < k rows."""
+    q, d, arrays = _knn_frames(spark)
+    want = _brute(*arrays, 5, metric, max_radius=max_radius)
+    got = _knn_rows(knn_join(q, d, 5, metric=metric, max_radius=max_radius))
+    assert got == want
+    per_q = Counter(qid for qid, _, _ in want)
+    counts = [per_q[qid] for qid in arrays[0]]
+    assert 5 in counts and min(counts) < 5
+
+
+def test_knn_join_one_round_plan(spark, plan_node_names):
+    """Building knn_join runs only the count-map job(s); its executed
+    plan is one broadcast cell join with one Python stage and no
+    nested-loop fallback, even for rural queries."""
+    q, d, _ = _knn_frames(spark)
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def job_ids():
+        bus.waitUntilEmpty(30_000)
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = job_ids()
+    out = knn_join(q, d, 5, initial_radius=0.01, max_rounds=1, max_radius=405.0)
+    assert 1 <= len(job_ids() - before) <= 2
+    out.collect()
+    names = plan_node_names(out)
+    assert "BroadcastNestedLoopJoinExec" not in names
+    assert names.count("ArrowEvalPythonExec") == 1
+    assert names.count("BroadcastHashJoinExec") == 1

@@ -561,3 +561,29 @@ def test_convex_intersects_plan_has_no_python(spark):
     plan2 = spatial_join(left, concave, "st_intersects",
                          **kw)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" in plan2       # kernel refine fallback engaged
+
+
+def test_cover_of_non_finite_rows_is_empty():
+    """A null coordinate or radius reaches the numpy covers as NaN: the
+    row covers no cell (no int64 cast of NaN, no arbitrary cells) while
+    finite rows of the same batch keep their cells."""
+    import warnings
+
+    from geomesa_spark.operators.spatial_join import (
+        cells_of_bbox_arrays, cells_of_disk_arrays)
+
+    nan, inf = float("nan"), float("inf")
+    xs = np.array([10.0, nan, 20.0, 179.9, 30.0])
+    ys = np.array([45.0, 5.0, nan, 0.0, 0.0])
+    r = np.array([0.5, 0.5, 0.5, 0.5, nan])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        disk = cells_of_disk_arrays(xs, ys, r, r, 8)
+        # an infinite bound is no cover either
+        ymax = ys + np.array([0.5, 0.5, 0.5, 0.5, inf])
+        box = cells_of_bbox_arrays(xs - 0.5, ys - 0.5, xs + 0.5, ymax, 8)
+    assert [len(c) > 0 for c in disk] == [True, False, False, True, False]
+    assert [len(c) > 0 for c in box] == [True, False, False, True, False]
+    # the finite rows keep the cover they had on their own
+    assert disk[0] == cells_of_disk_arrays(xs[:1], ys[:1], r[:1], r[:1], 8)[0]
+    assert disk[3] == cells_of_disk_arrays(xs[3:4], ys[3:4], r[3:4], r[3:4], 8)[0]
