@@ -159,7 +159,6 @@ def q_rect_intersects(spark, sf_dir):
     r = (_region_rects(spark, sf_dir).select("r_regionkey", "geom")
          .withColumnRenamed("geom", "rgeom"))
     out = spatial_join(l, r, "st_intersects", left_geom="geom", right_geom="rgeom",
-                       left_id="n_nationkey", right_id="r_regionkey",
                        broadcast_right=True)
     return out.select("n_nationkey", "r_regionkey")
 

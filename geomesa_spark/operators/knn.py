@@ -13,7 +13,10 @@ provably holds its k nearest neighbours, so one round is exact:
   per non-empty cell, at most 4^8 = 65,536 rows, whatever the data size.
   Rows outside the world are not counted: the cell key clamps them into
   an edge cell whose rectangle does not hold them. They still join as
-  candidates.
+  candidates. The sphere metric instead keys (and counts) a longitude
+  outside +-180 from its wrapped value, which is where the haversine
+  puts it, and centres each query's cover on its wrapped longitude;
+  distances stay haversine on the raw columns.
 - Radius: on a 2-D prefix sum of the counts, each query binary-searches
   the smallest m >= 0 such that the (2m+1)^2 block of seed cells around
   its own cell, clipped to the world, holds >= k counted points. Its
@@ -55,7 +58,7 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, Stru
 from .cache import attach_cached
 from .spatial_join import (
     DEFAULT_LEVEL, _grid_of_bbox, cells_of_disk_arrays, sphere_expand_degrees,
-    with_point_cell,
+    with_point_cell, wrapped_lon,
 )
 
 from ..curves.zorder import z2_decode
@@ -72,17 +75,21 @@ def _dist_expr(qx, qy, px, py, metric: str):
     raise ValueError(metric)
 
 
-def _count_prefix(data: DataFrame, x: str, y: str, level: int) -> np.ndarray:
+def _count_prefix(data: DataFrame, x: str, y: str, level: int,
+                  metric: str) -> np.ndarray:
     """2-D prefix sum of the in-world rows of ``data`` per Z2 cell at the
     seed level ``min(level, DEFAULT_LEVEL)``: ``c[j, i]`` counts the rows
     in cells ``[0, i) x [0, j)``. Computed afresh on every call: a stale
     count could give a radius too small to hold the k nearest
-    neighbours."""
+    neighbours. The sphere metric counts every finite longitude, in the
+    cell of its wrapped value."""
     level = min(level, DEFAULT_LEVEL)
-    inworld = data.filter(F.col(x).between(-180.0, 180.0)
+    sphere = metric == "sphere"
+    lon_lo, lon_hi = (-math.inf, math.inf) if sphere else (-180.0, 180.0)
+    inworld = data.filter(F.col(x).between(lon_lo, lon_hi)
                           & F.col(y).between(-90.0, 90.0))
     # one row per non-empty cell: at most 4^level <= 65,536 rows
-    rows = (with_point_cell(inworld.select(x, y), x, y, level)
+    rows = (with_point_cell(inworld.select(x, y), x, y, level, wrap_lon=sphere)
             .groupBy("__cell__").count().collect())
     n = 1 << level
     grid = np.zeros((n + 1, n + 1), dtype=np.int64)
@@ -137,7 +144,8 @@ def _search_cells(df: DataFrame, x: str, y: str, bound, k: int,
     count-map ring radius and the per-row ``bound`` column — exploded to
     one row per Z2 cell (``__cell__``, at ``level``) covering that disk.
     One Arrow UDF computes both; a row with a null coordinate covers no
-    cell (cells_of_disk_arrays) and drops out."""
+    cell (cells_of_disk_arrays) and drops out. The sphere metric centres
+    the disk on the wrapped longitude, where its data cells are keyed."""
     schema = StructType([StructField("r", DoubleType()),
                          StructField("cells", ArrayType(LongType()))])
 
@@ -156,7 +164,8 @@ def _search_cells(df: DataFrame, x: str, y: str, bound, k: int,
     cols = df.columns
     # coalesce: a nullable radius makes the join infer isnotnull(__r__),
     # which the optimizer pushes below the UDF as a second UDF call
-    return (df.withColumn("__s__", seed(F.col(x), F.col(y), bound))
+    cx = wrapped_lon(F.col(x)) if metric == "sphere" else F.col(x)
+    return (df.withColumn("__s__", seed(cx, F.col(y), bound))
               .select(*cols, F.coalesce(F.col("__s__.r"), F.lit(0.0)).alias("__r__"),
                       F.explode("__s__.cells").alias("__cell__")))
 
@@ -194,12 +203,12 @@ def knn_join(
     callers and change neither the rows nor the plan: every query's
     radius comes from the per-cell counts (module docstring).
     """
-    csum = _count_prefix(data, dx, dy, level)
+    csum = _count_prefix(data, dx, dy, level, metric)
     qe = _search_cells(queries, qx, qy, F.lit(float(max_radius)), k, csum,
                        level, metric)
     dist = _dist_expr(F.col(qx), F.col(qy), F.col(dx), F.col(dy), metric)
-    cand = (F.broadcast(qe).join(with_point_cell(data, dx, dy, level),
-                                 on="__cell__", how="inner")
+    keyed = with_point_cell(data, dx, dy, level, wrap_lon=metric == "sphere")
+    cand = (F.broadcast(qe).join(keyed, on="__cell__", how="inner")
              .withColumn("dist", dist)
              .filter(F.col("dist") <= F.col("__r__"))
              .drop("__cell__", "__r__"))
@@ -252,12 +261,13 @@ def all_knn_join(
     """
     if max_radius is None:
         max_radius = 405.0 if metric == "degrees" else math.pi * EARTH_RADIUS_M
-    csum = _count_prefix(right, rx, ry, level)
-    rc = with_point_cell(right, rx, ry, level)
+    sphere = metric == "sphere"
+    csum = _count_prefix(right, rx, ry, level, metric)
+    rc = with_point_cell(right, rx, ry, level, wrap_lon=sphere)
     dist = _dist_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry), metric)
 
     # phase 1: same-cell kth distance, a bound wherever the cell holds k
-    lc = with_point_cell(left, lx, ly, level)
+    lc = with_point_cell(left, lx, ly, level, wrap_lon=sphere)
     w0 = Window.partitionBy(left_id).orderBy(
         F.col("__d0__").asc(), F.col(right_id).asc())
     kth = (lc.join(rc, on="__cell__", how="inner")

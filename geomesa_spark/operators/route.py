@@ -229,7 +229,7 @@ def geofence_sequence(fixes: DataFrame, zones: DataFrame,
                       zone_id: str = "zone_id", zone_geom: str = "geom",
                       order_col: str | None = None,
                       level: int | None = None,
-                      broadcast_zones: bool | None = True) -> DataFrame:
+                      broadcast_zones: bool = True) -> DataFrame:
     """Geofencing: per (track, zone) visit intervals — enter fix, exit
     fix, dwell — from a fix stream and a polygon zone layer. Returns::
 
@@ -258,9 +258,10 @@ def geofence_sequence(fixes: DataFrame, zones: DataFrame,
     neighbor fixes and is out of scope). A visit of one fix has dwell 0.
 
     Scale shape: the PIP join is the engine's scale-safe cell join
-    (broadcast zones by default — fence layers are small; set
-    broadcast_zones=None for the auto plan-size rule), then one window +
-    one combining agg keyed (track, zone) over member rows only.
+    (broadcast zones by default — fence layers are small;
+    broadcast_zones=False takes the shuffle cell join for a zone layer
+    too large to broadcast), then one window + one combining agg keyed
+    (track, zone) over member rows only.
     """
     from pyspark.sql import Window
 
@@ -304,7 +305,7 @@ def od_matrix(fixes: DataFrame, zones: DataFrame,
               zone_id: str = "zone_id", zone_geom: str = "geom",
               order_col: str | None = None,
               level: int | None = None,
-              broadcast_zones: bool | None = True) -> DataFrame:
+              broadcast_zones: bool = True) -> DataFrame:
     """Origin-destination flow matrix: trip counts between consecutive
     zone visits per track. Returns (from_zone, to_zone, n_trips).
 
@@ -340,7 +341,7 @@ def zone_paths(fixes: DataFrame, zones: DataFrame,
                zone_id: str = "zone_id", zone_geom: str = "geom",
                order_col: str | None = None,
                level: int | None = None,
-               broadcast_zones: bool | None = True,
+               broadcast_zones: bool = True,
                min_count: int = 1) -> DataFrame:
     """Frequent k-length zone paths (travel-pattern mining): counts of
     every k-gram of consecutive zone visits across all tracks — the

@@ -12,9 +12,13 @@ as idiomatic DataFrame ops:
    covering their (expanded) bbox. The equi-join on the cell key is the
    prefilter — Catalyst plans a shuffled hash join (or broadcast when the
    polygon side is small), AQE handles skewed cells at runtime.
-3. An Arrow-batched refine evaluates the exact predicate per candidate pair,
-   decoding each distinct polygon once per batch and running the vectorized
-   PIP kernel over all its candidate points (zero per-row Python).
+3. One Arrow-batched refine (``_refine_udf``) evaluates the exact
+   predicate per candidate pair for every join. Per batch it decodes each
+   distinct right geometry once (shipped as WKB, or as a pid resolved
+   through a broadcast dict), groups the rows by it and picks a vectorized
+   test from the left kind (point, declared rect or WKB), the right shape
+   and the predicate: PIP for points, rect/SAT/box-vs-rings for rects.
+   Only concave or multi-part survivors reach the per-pair DE-9IM kernel.
 
 Pair dedup: a point occupies one cell, so point-joins produce each pair at
 most once (no dedup shuffle needed — unlike the reference, which duplicates
@@ -32,7 +36,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType, BooleanType, DoubleType, LongType, StructField, StructType,
@@ -52,7 +56,8 @@ _LON = normalized_lon(31)
 _LAT = normalized_lat(31)
 
 
-def with_point_cell(df: DataFrame, x: str, y: str, level: int) -> DataFrame:
+def with_point_cell(df: DataFrame, x: str, y: str, level: int,
+                    wrap_lon: bool = False) -> DataFrame:
     """The point side of a cell equi-join: ``df`` plus the Z2 cell of
     (``x``, ``y``) at ``level`` as ``__cell__`` (curves/zexpr.py, inside
     whole-stage codegen).
@@ -61,10 +66,21 @@ def with_point_cell(df: DataFrame, x: str, y: str, level: int) -> DataFrame:
     is dropped. The cell is then keyed from coalesced coordinates, which
     makes it non-nullable: a nullable join key gets an inferred
     ``isnotnull`` filter that the optimizer pushes down through the
-    key's projections, inlining its normalization 2^steps times."""
+    key's projections, inlining its normalization 2^steps times.
+    ``wrap_lon`` keys the cell from :func:`wrapped_lon` of ``x``, inside
+    the coalesce for the same reason (its CASE is nullable)."""
     keep = df.filter(F.col(x).isNotNull() & F.col(y).isNotNull())
-    return zexpr.with_z2(keep, "__cell__", F.coalesce(F.col(x), F.lit(0.0)),
+    kx = F.coalesce(wrapped_lon(F.col(x)) if wrap_lon else F.col(x), F.lit(0.0))
+    return zexpr.with_z2(keep, "__cell__", kx,
                          F.coalesce(F.col(y), F.lit(0.0)), level)
+
+
+def wrapped_lon(x: Column) -> Column:
+    """A longitude outside +-180 wrapped into the world,
+    ``((x + 180) mod 360) - 180``: on the sphere lon 250 is lon -110,
+    where clamping would key it into the +180 edge column."""
+    return F.when((x < -180.0) | (x > 180.0),
+                  F.pmod(x + 180.0, F.lit(360.0)) - 180.0).otherwise(x)
 
 
 def _grid_of_bbox(xmin, ymin, xmax, ymax, level: int):
@@ -177,8 +193,7 @@ def _explode_bbox_ij(df: DataFrame, x0, y0, x1, y1, level: int,
               .withColumn("__gj__", F.explode(F.sequence(F.col(f"__{tag}gj0__"), gj1))))
 
 
-def _cells_ij_of_geom(level: int = DEFAULT_LEVEL, expand_deg: float = 0.0,
-                      expand_m: float | None = None):
+def _cells_ij_of_geom(level: int = DEFAULT_LEVEL, expand_m: float | None = None):
     """pandas UDF: WKB geometry -> (gi, gj) covering grid-pair arrays
     + the range minima + the (expanded) envelope, for geometry sides
     without envelope sidecars. ``expand_m`` expands per row with the
@@ -222,9 +237,6 @@ def _cells_ij_of_geom(level: int = DEFAULT_LEVEL, expand_deg: float = 0.0,
             wrap = (xmin < -180.0) | (xmax > 180.0)
             xmin = np.where(wrap, -180.0, xmin)
             xmax = np.where(wrap, 180.0, xmax)
-        elif expand_deg:
-            xmin, xmax = xmin - expand_deg, xmax + expand_deg
-            ymin, ymax = ymin - expand_deg, ymax + expand_deg
         ix0, ix1, iy0, iy1 = _grid_of_bbox(xmin, ymin, xmax, ymax, level)
         gis, gjs = [], []
         for k in range(n):
@@ -394,60 +406,6 @@ def _auto_level(wkbs, target_cells_across: float = 16.0,
     return lvl
 
 
-def _pip_refine_udf(predicate: str, with_flag: bool = False):
-    """Refine candidates: vectorized PIP per distinct polygon in the batch.
-
-    Sort-based grouping (argsort on factorized polygon codes) keeps the
-    batch cost O(n log n) instead of O(uniques * n); rows whose cell was
-    flagged fully-contained bypass the kernel entirely.
-    """
-    accept_inside_only = predicate in ("st_contains", "st_within")
-
-    def _refine_arrays(xs, ys, poly_wkb, full=None) -> np.ndarray:
-        out = np.zeros(len(xs), dtype=bool)
-        codes, uniques = pd.factorize(poly_wkb)
-        todo = np.arange(len(xs)) if full is None else np.where(~full)[0]
-        if full is not None:
-            out[full] = True
-        if len(todo) == 0:
-            return out
-        sub = codes[todo]
-        order = todo[np.argsort(sub, kind="stable")]
-        sorted_codes = codes[order]
-        starts = np.searchsorted(sorted_codes, np.arange(len(uniques)))
-        ends = np.append(starts[1:], len(sorted_codes))
-        for u_idx, wkb in enumerate(uniques):
-            idx = order[starts[u_idx]:ends[u_idx]]
-            if wkb is None or len(idx) == 0:
-                continue
-            geom = wkb_read(bytes(wkb))
-            rings = geom.rings if isinstance(geom, Polygon) else None
-            if rings is not None:
-                loc = K.pip_rings(xs[idx], ys[idx], rings)
-                out[idx] = (loc == 1) if accept_inside_only else (loc >= 0)
-            else:
-                # non-polygon right side: exact kernel per pair (rare path)
-                fn = K.contains if accept_inside_only else K.intersects
-                for i in idx:
-                    out[i] = fn(geom, Point(xs[i], ys[i]))
-        return out
-
-    if with_flag:
-        @pandas_udf(BooleanType())
-        def refine(x: pd.Series, y: pd.Series, poly_wkb: pd.Series,
-                   full: pd.Series) -> pd.Series:
-            return pd.Series(_refine_arrays(
-                x.to_numpy(np.float64), y.to_numpy(np.float64), poly_wkb,
-                full.fillna(False).to_numpy(bool)))
-    else:
-        @pandas_udf(BooleanType())
-        def refine(x: pd.Series, y: pd.Series, poly_wkb: pd.Series) -> pd.Series:
-            return pd.Series(_refine_arrays(
-                x.to_numpy(np.float64), y.to_numpy(np.float64), poly_wkb))
-
-    return refine
-
-
 class PreparedPipPolys:
     """Broadcast-side PIP index built once and reused across joins.
 
@@ -528,9 +486,8 @@ def pip_join(
     poly_geom: str,
     predicate: str = "st_contains",
     level: int | None = None,
-    broadcast_polys: bool | None = None,
+    broadcast_polys: bool = False,
     salt: int | None = None,
-    project_polys: bool = True,
 ) -> DataFrame:
     """Point-in-polygon join: points(x, y) x polys(wkb geometry).
 
@@ -577,24 +534,17 @@ def pip_join(
         if salt and salt > 1:
             pls_k = pls_k.withColumn("__salt__", salt_pl)
         cand = pts.join(F.broadcast(pls_k), on=join_keys, how="inner")
+        refine = _refine_udf(predicate, "point", right_bmap=prepared.bmap)
+        test = refine(F.col(point_x), F.col(point_y), F.col("__pid__"))
         if prepared.any_full:
             # interior candidates never cross the Arrow boundary
-            refine = _pip_refine_by_pid_udf(predicate, prepared.bmap)
-            interior = cand.filter(F.col("__full__"))
-            boundary = (cand.filter(~F.col("__full__"))
-                            .filter(refine(F.col(point_x), F.col(point_y), F.col("__pid__"))))
-            out = interior.unionByName(boundary)
+            out = cand.filter(F.col("__full__")).unionByName(
+                cand.filter(~F.col("__full__")).filter(test))
         else:
-            refine = _pip_refine_by_pid_udf(predicate, prepared.bmap)
-            out = cand.filter(refine(F.col(point_x), F.col(point_y), F.col("__pid__")))
-        if project_polys:
-            # restore the polygon attribute columns (skippable projection
-            # pushdown: callers that only keep point columns avoid the
-            # join-back entirely)
-            out = (out.join(F.broadcast(prepared.geoms_df), on="__pid__", how="inner")
-                      .drop("__pid__", "__full__"))
-        else:
-            out = out.drop("__pid__", "__full__")
+            out = cand.filter(test)
+        # restore the polygon attribute columns
+        out = (out.join(F.broadcast(prepared.geoms_df), on="__pid__", how="inner")
+                  .drop("__pid__", "__full__"))
         return out.drop("__cell__", "__salt__") if salt else out.drop("__cell__")
 
     cover = cells_of_geom_flagged(level)
@@ -606,7 +556,7 @@ def pip_join(
         pls = pls.withColumn("__salt__", salt_pl)
 
     cand = pts.join(pls, on=join_keys, how="inner")
-    refine = _pip_refine_udf(predicate, with_flag=True)
+    refine = _refine_udf(predicate, "point")
     out = cand.filter(refine(F.col(point_x), F.col(point_y), F.col(poly_geom),
                              F.col("__full__")))
     out = out.drop("__full__")
@@ -632,57 +582,6 @@ def recommend_salt(points: DataFrame, x: str, y: str,
         return 1
     salt = int(row["mx"] / (4.0 * row["avg"])) + 1
     return max(1, min(max_salt, salt))
-
-
-def _pip_refine_by_pid_udf(predicate: str, bmap):
-    """Refine via broadcast polygon dict (pid -> WKB): Arrow ships only ids.
-
-    Rectangles refine with four vectorized comparisons; general polygons
-    with the PIP rings kernel; other geometries with the exact DE-9IM
-    kernel per pair.
-    """
-    accept_inside_only = predicate in ("st_contains", "st_within")
-
-    def _refine(xs, ys, pid) -> np.ndarray:
-        out = np.zeros(len(xs), dtype=bool)
-        codes, uniques = pd.factorize(pid)
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        starts = np.searchsorted(sorted_codes, np.arange(len(uniques)))
-        ends = np.append(starts[1:], len(sorted_codes))
-        pmap = bmap.value
-        for u_idx, p in enumerate(uniques):
-            idx = order[starts[u_idx]:ends[u_idx]]
-            if len(idx) == 0:
-                continue
-            wkb = pmap.get(p)
-            if wkb is None:
-                continue
-            geom = wkb_read(wkb)
-            rect = _is_axis_rect(geom)
-            if rect is not None:
-                px, py = xs[idx], ys[idx]
-                if accept_inside_only:
-                    out[idx] = ((px > rect[0]) & (px < rect[2])
-                                & (py > rect[1]) & (py < rect[3]))
-                else:
-                    out[idx] = ((px >= rect[0]) & (px <= rect[2])
-                                & (py >= rect[1]) & (py <= rect[3]))
-            elif isinstance(geom, Polygon):
-                loc = K.pip_rings(xs[idx], ys[idx], geom.rings)
-                out[idx] = (loc == 1) if accept_inside_only else (loc >= 0)
-            else:
-                fn = K.contains if accept_inside_only else K.intersects
-                for i in idx:
-                    out[i] = fn(geom, Point(xs[i], ys[i]))
-        return out
-
-    @pandas_udf(BooleanType())
-    def refine(x: pd.Series, y: pd.Series, pid: pd.Series) -> pd.Series:
-        return pd.Series(_refine(x.to_numpy(np.float64), y.to_numpy(np.float64),
-                                 pid.to_numpy()))
-
-    return refine
 
 
 def dwithin_join_points(
@@ -947,103 +846,7 @@ def _ring_area2(rings: list[np.ndarray]) -> float:
     return tot
 
 
-def _rect_refine_by_pid_udf(predicate: str, bmap, with_flag: bool = False):
-    """Refine for a DECLARED-rectangle left layer against right geometries:
-    Arrow ships only the left envelope doubles + the right pid (broadcast
-    path, ``bmap`` resolves pid -> WKB; no geometry bytes cross at all) or
-    + the right WKB itself (shuffle path, ``bmap=None``; parsed once per
-    distinct geometry per batch). Exact for intersects/disjoint
-    (vectorized box-vs-rings test; SAT for convex rings) and
-    contains/covers (envelope containment; see _geom_refine_udf's
-    rect x poly notes). With ``with_flag`` (st_intersects only) the extra
-    series is the full-cell flag: flagged rows accept without touching
-    the kernel — the canonical cell is inside the right polygon and
-    overlaps the left rect."""
-
-    def _body(x0, y0, x1, y1, pid, flag) -> pd.Series:
-        n = len(pid)
-        out = np.zeros(n, dtype=bool)
-        env = np.column_stack([x0.to_numpy(np.float64), y0.to_numpy(np.float64),
-                               x1.to_numpy(np.float64), y1.to_numpy(np.float64)])
-        if flag is not None and predicate == "st_intersects":
-            fl = flag.to_numpy(dtype=bool)
-            if fl.all():
-                return pd.Series(np.ones(n, dtype=bool))
-        else:
-            fl = None
-        codes, uniq = pd.factorize(pid)
-        if fl is not None:
-            out[fl] = True  # full-cell accept; kernel only for the rest
-        order = np.argsort(codes, kind="stable")
-        starts = np.searchsorted(codes[order], np.arange(len(uniq)))
-        ends = np.append(starts[1:], len(order))
-        pmap = bmap.value if bmap is not None else None
-        for u, p in enumerate(uniq):
-            wkb = pmap.get(p) if pmap is not None else (
-                None if p is None else bytes(p))
-            if wkb is None:
-                continue
-            g = wkb_read(wkb)
-            idx = order[starts[u]:ends[u]]
-            if fl is not None:
-                idx = idx[~fl[idx]]
-                if not len(idx):
-                    continue
-            if predicate in ("st_intersects", "st_disjoint"):
-                rect = _is_axis_rect(g)
-                if rect is not None:
-                    eb = np.tile(np.asarray(rect, dtype=np.float64), (len(idx), 1))
-                    out[idx] = _rect_rect_vec(predicate, env[idx], eb)
-                    continue
-                rings = _rings_of(g)
-                if rings is None:  # non-polygonal right: exact kernel per pair
-                    fn = K.intersects if predicate == "st_intersects" else K.disjoint
-                    for i in idx:
-                        a = env[i]
-                        ring = np.array([[a[0], a[1]], [a[0], a[3]], [a[2], a[3]],
-                                         [a[2], a[1]], [a[0], a[1]]])
-                        out[i] = bool(fn(Polygon(ring), g))
-                    continue
-                sat = _convex_sat_of(g)
-                if sat is not None:  # convex: SAT, ~4x fewer element ops
-                    hit = _box_convex_intersects_vec(env[idx], sat)
-                else:
-                    hit = _rect_poly_intersects_vec(env[idx], rings)
-                out[idx] = hit if predicate == "st_intersects" else ~hit
-            else:  # st_contains / st_covers: envelope containment
-                e = g.envelope()
-                ok = ((env[idx, 0] <= e[0]) & (e[2] <= env[idx, 2])
-                      & (env[idx, 1] <= e[1]) & (e[3] <= env[idx, 3]))
-                if predicate == "st_contains":
-                    rings = _rings_of(g)
-                    if rings is None or _ring_area2(rings) <= 0.0:
-                        fn = K.contains
-                        for j, i in enumerate(idx):
-                            if not ok[j]:
-                                continue
-                            a = env[i]
-                            ring = np.array([[a[0], a[1]], [a[0], a[3]], [a[2], a[3]],
-                                             [a[2], a[1]], [a[0], a[1]]])
-                            ok[j] = bool(fn(Polygon(ring), g))
-                out[idx] = ok
-        return pd.Series(out)
-
-    if with_flag:
-        @pandas_udf(BooleanType())
-        def refine(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
-                   pid: pd.Series, flag: pd.Series) -> pd.Series:
-            return _body(x0, y0, x1, y1, pid, flag)
-    else:
-        @pandas_udf(BooleanType())
-        def refine(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
-                   pid: pd.Series) -> pd.Series:
-            return _body(x0, y0, x1, y1, pid, None)
-
-    return refine
-
-
-_RECT_FAST_PREDS = frozenset(
-    ("st_intersects", "st_disjoint", "st_contains", "st_covers"))
+_RECT_FAST_PREDS = frozenset(("st_intersects", "st_contains", "st_covers"))
 
 
 class _SideCache:
@@ -1078,10 +881,32 @@ class _SideCache:
         self.rect = (rect5 & (self.env[:, 0] < self.env[:, 2])
                      & (self.env[:, 1] < self.env[:, 3]))
 
+    @classmethod
+    def of_boxes(cls, env: np.ndarray) -> "_SideCache":
+        """A declared-rect side read from its (n, 4) envelope doubles,
+        one unique per row. Every row is a polygon and an axis rect,
+        degenerate (zero width or height) ones included, so those resolve
+        in the vectorized rect arms like any other rect; the box polygon
+        is built only for a row that reaches a kernel."""
+        side = cls.__new__(cls)
+        nu = len(env)
+        side.bufs, side.env = None, env
+        side.notnull = ~np.isnan(env).any(axis=1)
+        side.rect = side.is_poly = np.ones(nu, dtype=bool)
+        side._geoms = [None] * nu
+        side._rings = [False] * nu
+        return side
+
     def geom(self, u: int):
         g = self._geoms[u]
         if g is None:
-            g = self._geoms[u] = wkb_read(self.bufs[u])
+            if self.bufs is None:
+                x0, y0, x1, y1 = self.env[u]
+                g = Polygon(np.array([[x0, y0], [x0, y1], [x1, y1],
+                                      [x1, y0], [x0, y0]]))
+            else:
+                g = wkb_read(self.bufs[u])
+            self._geoms[u] = g
         return g
 
     def rings(self, u: int):
@@ -1091,168 +916,216 @@ class _SideCache:
         return r
 
 
-def _geom_refine_udf(predicate: str, meters: float | None = None,
-                     right_bmap=None, with_flag: bool = False):
-    """General candidate refine with the exact DE-9IM kernel.
+_PRED_FNS = {
+    "st_contains": K.contains,
+    "st_within": K.within,
+    "st_covers": K.covers,
+    "st_coveredBy": K.covered_by,
+    "st_intersects": K.intersects,
+    "st_overlaps": K.overlaps,
+    "st_touches": K.touches,
+    "st_crosses": K.crosses,
+    "st_equals": K.equals,
+    "st_disjoint": K.disjoint,
+}
 
-    Vectorized per Arrow batch: geometries parse ONCE per unique WKB
-    (pd.factorize), envelopes reject in one numpy pass, rect x rect pairs
-    (the reference's generatePolys workloads) resolve with pure coordinate
-    comparisons, convex polygons take the SAT kernel — only genuinely
-    concave/multi-ring survivors reach the per-pair DE-9IM kernel (mirrors
-    GeoMesaJoinRelation.scala:41-91's sweepline-then-refine split). With
-    ``right_bmap`` the right series carries pids resolved through the
-    broadcast dict (Arrow ships 8-byte ints, not WKB). With ``with_flag``
-    the third series is the right cover's per-cell FULL flag (cell
-    strictly inside the right polygon): for st_intersects a flagged pair
-    whose LEFT geometry is an axis rect accepts with zero kernel work —
-    the pair's canonical cell overlaps the left rect and lies inside the
-    right polygon (the Z2IndexKeySpace.scala:129-141 loose-bbox accept,
-    per pair)."""
-    pred_fn = {
-        "st_contains": K.contains,
-        "st_within": K.within,
-        "st_covers": K.covers,
-        "st_coveredBy": K.covered_by,
-        "st_intersects": K.intersects,
-        "st_overlaps": K.overlaps,
-        "st_touches": K.touches,
-        "st_crosses": K.crosses,
-        "st_equals": K.equals,
-        "st_disjoint": K.disjoint,
-    }.get(predicate)
 
-    def _body(l: pd.Series, r: pd.Series, flag) -> pd.Series:
-        n = len(l)
-        out = np.zeros(n, dtype=bool)
-        lcodes, luniq = pd.factorize(l)
+def _groups(codes: np.ndarray, rows: np.ndarray):
+    """(code, rows) per distinct code among ``rows``: one stable sort,
+    never a scan of the batch per group."""
+    if not len(rows):
+        return
+    rc = codes[rows]
+    order = np.argsort(rc, kind="stable")
+    srt = rc[order]
+    cuts = np.r_[0, np.where(srt[1:] != srt[:-1])[0] + 1, len(srt)]
+    for s, e in zip(cuts[:-1], cuts[1:]):
+        yield srt[s], rows[order[s:e]]
+
+
+def _refine_udf(predicate: str, left: str, right_bmap=None,
+                meters: float | None = None):
+    """The candidate refine of every spatial join: one Arrow-batched
+    ``refine(*left_cols, right_key[, full])`` -> exact predicate per
+    candidate pair (the refine half of GeoMesaJoinRelation.scala:41-91's
+    sweepline-then-refine split).
+
+    ``left`` names what the left columns hold: ``"point"`` (x, y),
+    ``"rect"`` (xmin, ymin, xmax, ymax of a declared-rect left, so no
+    left WKB crosses at all) or ``"geom"`` (WKB). The right key is a pid
+    resolved through the broadcast dict ``right_bmap`` (Arrow ships
+    8-byte ints, not WKB), or else the right WKB. A missing pid or a
+    null geometry answers False.
+
+    ``full`` is the right cover's per-cell flag: the pair's (canonical)
+    cell lies strictly inside the right polygon. A flagged point is
+    inside; a flagged axis-rect left overlaps that cell, so it
+    intersects (the Z2IndexKeySpace.scala:129-141 loose-bbox accept,
+    per pair). Flagged rows accept with zero kernel work, so callers
+    pass ``full`` for point predicates and for st_intersects only.
+
+    Per batch, each side parses once per unique geometry
+    (pd.factorize + :class:`_SideCache`). Points group by right
+    geometry: an axis rect takes 4 comparisons, a polygon the
+    vectorized PIP kernel, anything else the exact kernel per pair;
+    st_contains/st_within are strict, st_covers/st_intersects closed.
+    Rect and geometry lefts take an envelope reject in one numpy pass,
+    then rect x rect comparisons, SAT (convex) or the box-vs-rings test
+    per unique polygon, envelope containment, and the per-pair DE-9IM
+    kernel only for what remains. ``meters`` is st_dwithin."""
+    n_left = {"point": 2, "rect": 4, "geom": 1}[left]  # Arrow columns per kind
+    pred_fn = _PRED_FNS.get(predicate)
+
+    @pandas_udf(BooleanType())
+    def refine(*cols: pd.Series) -> pd.Series:
+        r = cols[n_left]
+        out = np.zeros(len(r), dtype=bool)
         rcodes, runiq = pd.factorize(r)
-        lbufs = [None if v is None else bytes(v) for v in luniq]
         if right_bmap is not None:
             pm = right_bmap.value
             rbufs = [pm.get(v) for v in runiq]
         else:
             rbufs = [None if v is None else bytes(v) for v in runiq]
-        lside, rside = _SideCache(lbufs), _SideCache(rbufs)
-        valid = ((lcodes >= 0) & (rcodes >= 0)
-                 & np.r_[rside.notnull, True][rcodes])  # null-in -> False out
-        if not valid.any():  # e.g. an Arrow batch of all-null geometries:
+        rside = _SideCache(rbufs)
+        # null-in -> False out (-1 codes index the appended True)
+        todo = (rcodes >= 0) & np.r_[rside.notnull, True][rcodes]
+        if left == "point":
+            lcodes = lside = None
+        else:
+            if left == "rect":
+                env = np.column_stack([c.to_numpy(np.float64) for c in cols[:4]])
+                lcodes, lside = np.arange(len(env)), _SideCache.of_boxes(env)
+            else:
+                lcodes, luniq = pd.factorize(cols[0])
+                lside = _SideCache([None if v is None else bytes(v) for v in luniq])
+            todo &= (lcodes >= 0) & np.r_[lside.notnull, True][lcodes]
+        if not todo.any():  # e.g. an Arrow batch of all-null geometries:
             return pd.Series(out)  # empty uniq arrays can't be indexed below
-
-        if meters is not None:
-            from ..geom.measures import translate as _shift
-            for i in np.where(valid)[0]:
-                lu, ru = lcodes[i], rcodes[i]
-                lg, rg = lside.geom(lu), rside.geom(ru)
-                le, re_ = lside.env[lu], rside.env[ru]
-                # pair straddling the antimeridian: bring the right
-                # geometry into the left's local frame (planar
-                # nearest-point math is local; a 359.98-deg planar gap
-                # is really 0.02 deg)
-                if le[0] - re_[2] > 180.0:
-                    rg = _shift(rg, 360.0, 0.0)
-                elif re_[0] - le[2] > 180.0:
-                    rg = _shift(rg, -360.0, 0.0)
-                out[i] = dwithin_geoms(lg, rg, meters)
-            return pd.Series(out)
-
-        ea, eb = lside.env[lcodes], rside.env[rcodes]
-        env_hit = ((ea[:, 0] <= eb[:, 2]) & (eb[:, 0] <= ea[:, 2])
-                   & (ea[:, 1] <= eb[:, 3]) & (eb[:, 1] <= ea[:, 3]))
-        todo = valid.copy()
-        if predicate in _ENV_REJECT_PREDS:
-            todo &= env_hit  # rejected rows stay False
-        elif predicate == "st_disjoint":
-            miss = todo & ~env_hit
-            out[miss] = True  # envelope miss proves disjointness
-            todo &= env_hit
-
-        l_rect, r_rect = lside.rect, rside.rect
-        if flag is not None and predicate == "st_intersects":
-            # full-cell fast accept: canonical cell ⊆ right polygon and
-            # (left is an axis rect) ⟹ left ∩ cell ≠ ∅ ⟹ intersects
-            facc = todo & flag.to_numpy(dtype=bool) & l_rect[lcodes]
-            out[facc] = True
-            todo &= ~facc
-        # rect x rect resolves vectorized (degenerate rects -> kernel)
-        both_rect = todo & l_rect[lcodes] & r_rect[rcodes]
-        idx = np.where(both_rect)[0]
-        if len(idx):
-            out[idx] = _rect_rect_vec(predicate, ea[idx], eb[idx])
-            todo &= ~both_rect
-
-        # rect x polygon: vectorize per unique polygon (the many-rects x
-        # few-polygons join is the reference's generateTestData shape)
-        if predicate in ("st_intersects", "st_disjoint"):
-            want = predicate == "st_intersects"
-            for rect_on_left in (True, False):
-                if rect_on_left:
-                    mask = todo & l_rect[lcodes] & rside.is_poly[rcodes]
-                    grp_codes, env_rows, poly_side = rcodes, ea, rside
-                else:
-                    mask = todo & r_rect[rcodes] & lside.is_poly[lcodes]
-                    grp_codes, env_rows, poly_side = lcodes, eb, lside
-                rows = np.where(mask)[0]
-                if not len(rows):
-                    continue
-                rc = grp_codes[rows]
-                order = np.argsort(rc, kind="stable")
-                srt = rc[order]
-                cuts = np.r_[0, np.where(srt[1:] != srt[:-1])[0] + 1, len(srt)]
-                for s, e in zip(cuts[:-1], cuts[1:]):
-                    sub = rows[order[s:e]]
-                    sat = _convex_sat_of(poly_side.geom(srt[s]))
-                    if sat is not None:  # convex: SAT fast path
-                        hit = _box_convex_intersects_vec(env_rows[sub], sat)
-                    else:
-                        hit = _rect_poly_intersects_vec(env_rows[sub],
-                                                        poly_side.rings(srt[s]))
-                    out[sub] = hit if want else ~hit
-                todo &= ~mask
-        elif predicate in ("st_covers", "st_contains"):
-            # covers(rect, B) == env(B) inside the closed rect (exact: a
-            # box is convex and env is tight); contains additionally needs
-            # interior overlap — guaranteed when B has positive area
-            if predicate == "st_contains":
-                has_area = np.fromiter(
-                    (rside.is_poly[u] and _ring_area2(rside.rings(u)) > 0.0
-                     for u in range(len(rbufs))), dtype=bool, count=len(rbufs))
-            else:
-                has_area = rside.is_poly
-            mask = todo & l_rect[lcodes] & (rside.is_poly & has_area)[rcodes]
-            idx = np.where(mask)[0]
-            if len(idx):
-                out[idx] = ((ea[idx, 0] <= eb[idx, 0]) & (eb[idx, 2] <= ea[idx, 2])
-                            & (ea[idx, 1] <= eb[idx, 1]) & (eb[idx, 3] <= ea[idx, 3]))
-                todo &= ~mask
-        elif predicate in ("st_coveredBy", "st_within"):
-            if predicate == "st_within":
-                has_area = np.fromiter(
-                    (lside.is_poly[u] and _ring_area2(lside.rings(u)) > 0.0
-                     for u in range(len(lbufs))), dtype=bool, count=len(lbufs))
-            else:
-                has_area = lside.is_poly
-            mask = todo & r_rect[rcodes] & (lside.is_poly & has_area)[lcodes]
-            idx = np.where(mask)[0]
-            if len(idx):
-                out[idx] = ((eb[idx, 0] <= ea[idx, 0]) & (ea[idx, 2] <= eb[idx, 2])
-                            & (eb[idx, 1] <= ea[idx, 1]) & (ea[idx, 3] <= eb[idx, 3]))
-                todo &= ~mask
-
-        for i in np.where(todo)[0]:
-            out[i] = bool(pred_fn(lside.geom(lcodes[i]), rside.geom(rcodes[i])))
+        if len(cols) > n_left + 1:
+            acc = todo & cols[n_left + 1].fillna(False).to_numpy(bool)
+            if lside is not None:
+                acc &= lside.rect[lcodes]
+            out[acc] = True
+            todo &= ~acc
+        if left == "point":
+            _refine_points(out, todo, cols[0].to_numpy(np.float64),
+                           cols[1].to_numpy(np.float64), rcodes, rside,
+                           strict=predicate in ("st_contains", "st_within"))
+        elif meters is not None:
+            _refine_dwithin(out, todo, lcodes, lside, rcodes, rside, meters)
+        else:
+            _refine_pairs(out, todo, lcodes, lside, rcodes, rside, predicate,
+                          pred_fn)
         return pd.Series(out)
 
-    if with_flag:
-        @pandas_udf(BooleanType())
-        def refine(l: pd.Series, r: pd.Series, flag: pd.Series) -> pd.Series:
-            return _body(l, r, flag)
-    else:
-        @pandas_udf(BooleanType())
-        def refine(l: pd.Series, r: pd.Series) -> pd.Series:
-            return _body(l, r, None)
-
     return refine
+
+
+def _refine_points(out, todo, xs, ys, rcodes, rside: _SideCache, strict: bool):
+    """Point left: the rows of each right geometry in one vectorized
+    test."""
+    fn = K.contains if strict else K.intersects
+    for u, idx in _groups(rcodes, np.where(todo)[0]):
+        px, py = xs[idx], ys[idx]
+        if rside.rect[u]:
+            x0, y0, x1, y1 = rside.env[u]
+            if strict:
+                out[idx] = (px > x0) & (px < x1) & (py > y0) & (py < y1)
+            else:
+                out[idx] = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+            continue
+        g = rside.geom(u)
+        if isinstance(g, Polygon):
+            loc = K.pip_rings(px, py, g.rings)
+            out[idx] = (loc == 1) if strict else (loc >= 0)
+        else:  # non-polygon right side: exact kernel per pair (rare path)
+            for i, x, y in zip(idx, px, py):
+                out[i] = fn(g, Point(x, y))
+
+
+def _refine_dwithin(out, todo, lcodes, lside, rcodes, rside, meters: float):
+    """st_dwithin: the exact distance test per pair."""
+    from ..geom.measures import translate as _shift
+    for i in np.where(todo)[0]:
+        lu, ru = lcodes[i], rcodes[i]
+        lg, rg = lside.geom(lu), rside.geom(ru)
+        le, re_ = lside.env[lu], rside.env[ru]
+        # pair straddling the antimeridian: bring the right
+        # geometry into the left's local frame (planar
+        # nearest-point math is local; a 359.98-deg planar gap
+        # is really 0.02 deg)
+        if le[0] - re_[2] > 180.0:
+            rg = _shift(rg, 360.0, 0.0)
+        elif re_[0] - le[2] > 180.0:
+            rg = _shift(rg, -360.0, 0.0)
+        out[i] = dwithin_geoms(lg, rg, meters)
+
+
+def _refine_pairs(out, todo, lcodes, lside, rcodes, rside, predicate: str,
+                  pred_fn):
+    """Rect or geometry left: vectorized arms first, the exact DE-9IM
+    kernel per pair for what they leave (only genuinely concave or
+    multi-ring survivors)."""
+    ea, eb = lside.env[lcodes], rside.env[rcodes]
+    env_hit = ((ea[:, 0] <= eb[:, 2]) & (eb[:, 0] <= ea[:, 2])
+               & (ea[:, 1] <= eb[:, 3]) & (eb[:, 1] <= ea[:, 3]))
+    if predicate in _ENV_REJECT_PREDS:
+        todo &= env_hit  # rejected rows stay False
+    elif predicate == "st_disjoint":
+        miss = todo & ~env_hit
+        out[miss] = True  # envelope miss proves disjointness
+        todo &= env_hit
+
+    l_rect, r_rect = lside.rect, rside.rect
+    # rect x rect resolves vectorized (degenerate WKB rects -> kernel)
+    both_rect = todo & l_rect[lcodes] & r_rect[rcodes]
+    idx = np.where(both_rect)[0]
+    if len(idx):
+        out[idx] = _rect_rect_vec(predicate, ea[idx], eb[idx])
+        todo &= ~both_rect
+
+    # rect x polygon: vectorize per unique polygon (the many-rects x
+    # few-polygons join is the reference's generateTestData shape)
+    if predicate in ("st_intersects", "st_disjoint"):
+        want = predicate == "st_intersects"
+        for rect_on_left in (True, False):
+            if rect_on_left:
+                mask = todo & l_rect[lcodes] & rside.is_poly[rcodes]
+                grp_codes, env_rows, poly_side = rcodes, ea, rside
+            else:
+                mask = todo & r_rect[rcodes] & lside.is_poly[lcodes]
+                grp_codes, env_rows, poly_side = lcodes, eb, lside
+            for u, sub in _groups(grp_codes, np.where(mask)[0]):
+                sat = _convex_sat_of(poly_side.geom(u))
+                if sat is not None:  # convex: SAT fast path
+                    hit = _box_convex_intersects_vec(env_rows[sub], sat)
+                else:
+                    hit = _rect_poly_intersects_vec(env_rows[sub], poly_side.rings(u))
+                out[sub] = hit if want else ~hit
+            todo &= ~mask
+    elif predicate in ("st_covers", "st_contains", "st_coveredBy", "st_within"):
+        # covers(rect, B) == env(B) inside the closed rect (exact: a
+        # box is convex and env is tight); contains additionally needs
+        # interior overlap — guaranteed when B has positive area.
+        # coveredBy/within are the same test with the sides swapped.
+        sides = ((lside, lcodes, ea), (rside, rcodes, eb))
+        if predicate in ("st_coveredBy", "st_within"):
+            sides = sides[::-1]
+        (box, bcodes, be), (inner, icodes, ie) = sides
+        polys = inner.is_poly
+        if predicate in ("st_contains", "st_within"):
+            polys = np.fromiter(
+                (polys[u] and _ring_area2(inner.rings(u)) > 0.0
+                 for u in range(len(polys))), dtype=bool, count=len(polys))
+        mask = todo & box.rect[bcodes] & polys[icodes]
+        idx = np.where(mask)[0]
+        if len(idx):
+            out[idx] = ((be[idx, 0] <= ie[idx, 0]) & (ie[idx, 2] <= be[idx, 2])
+                        & (be[idx, 1] <= ie[idx, 1]) & (ie[idx, 3] <= be[idx, 3]))
+            todo &= ~mask
+
+    for i in np.where(todo)[0]:
+        out[i] = bool(pred_fn(lside.geom(lcodes[i]), rside.geom(rcodes[i])))
 
 
 def _jvm_convex_intersects(cand: DataFrame, pmap: dict, lenv_cols,
@@ -1295,14 +1168,133 @@ def _jvm_convex_intersects(cand: DataFrame, pmap: dict, lenv_cols,
                      how="left_anti")
 
 
+def _cover_ij(df: DataFrame, geom_col: str, env_cols, level: int, tag: str,
+              expand_m: float | None = None) -> DataFrame:
+    """Explode one side to (gi, gj) rows; also emit that side's
+    (expanded) envelope as __{tag}x0__..__{tag}y1__ sidecars so the
+    candidate join can envelope-reject in pure JVM. ``expand_m``
+    (meters, dwithin) expands per ROW with the latitude-aware
+    degree equivalent (sphere_expand_degrees semantics) — a flat
+    worst-case factor would under-cover above ~48 deg latitude."""
+    if env_cols is not None:
+        x0, y0, x1, y1 = (F.col(c) for c in env_cols)
+        if expand_m is not None:
+            rlat = F.lit(expand_m / 110_540.0)
+            # pole-safe: clamp phi at 90 (cos(radians(90)) is a
+            # positive ~6e-17 in doubles, so the division is
+            # finite) and cap the window at the full wrap —
+            # clamping phi below 90 under-covers near the poles
+            phi = F.least(F.greatest(F.abs(y0), F.abs(y1)) + rlat,
+                          F.lit(90.0))
+            rlon = F.least(rlat / F.cos(F.radians(phi)), F.lit(180.0))
+            x0, y0, x1, y1 = x0 - rlon, y0 - rlat, x1 + rlon, y1 + rlat
+            # antimeridian-crossing window: widen to the full lon
+            # range (contiguous cover for the report-once rule;
+            # the refine resolves the +-360 shift exactly)
+            wrap = (x0 < F.lit(-180.0)) | (x1 > F.lit(180.0))
+            x0 = F.when(wrap, F.lit(-180.0)).otherwise(x0)
+            x1 = F.when(wrap, F.lit(180.0)).otherwise(x1)
+        out = _explode_bbox_ij(df, x0, y0, x1, y1, level, tag)
+        return (out.withColumn(f"__{tag}x0__", x0)
+                   .withColumn(f"__{tag}y0__", y0)
+                   .withColumn(f"__{tag}x1__", x1)
+                   .withColumn(f"__{tag}y1__", y1))
+    cov = _cells_ij_of_geom(level, expand_m=expand_m)
+    return (df.withColumn("__ce__", cov(F.col(geom_col)))
+              .withColumn(f"__{tag}gi0__", F.col("__ce__.gi0"))
+              .withColumn(f"__{tag}gj0__", F.col("__ce__.gj0"))
+              .withColumn(f"__{tag}x0__", F.col("__ce__.bx0"))
+              .withColumn(f"__{tag}y0__", F.col("__ce__.by0"))
+              .withColumn(f"__{tag}x1__", F.col("__ce__.bx1"))
+              .withColumn(f"__{tag}y1__", F.col("__ce__.by1"))
+              .withColumn("__zz__", F.explode(F.arrays_zip(
+                  F.col("__ce__.gis").alias("gi"),
+                  F.col("__ce__.gjs").alias("gj"))))
+              .withColumn("__gi__", F.col("__zz__.gi"))
+              .withColumn("__gj__", F.col("__zz__.gj"))
+              .drop("__ce__", "__zz__"))
+
+
+def _report_once(l: DataFrame, r: DataFrame, env_reject: bool) -> DataFrame:
+    """Candidate pairs of two exploded sides, each kept only in its
+    canonical cell: by monotonicity that cell's grid pair is (max of
+    the two range minima) — four integer comparisons, cheap even when a
+    Python-UDF stage disables whole-stage codegen.
+
+    ``env_reject`` adds a pure-JVM envelope-overlap reject ahead of any
+    Python: cell-sharing pairs with disjoint envelopes can't satisfy an
+    intersection-requiring predicate (for dwithin the right envelope is
+    already expanded, so the test stays a necessary condition), and
+    killing them here, not in the refine, lets the join run a COARSER
+    grid — fewer exploded probe rows — without paying for the extra
+    false candidates in Arrow traffic. The sidecars are dropped."""
+    cand = (l.join(r, on=["__gi__", "__gj__"], how="inner")
+             .filter((F.col("__gi__") == F.greatest("__lgi0__", "__rgi0__"))
+                     & (F.col("__gj__") == F.greatest("__lgj0__", "__rgj0__")))
+             .drop("__gi__", "__gj__", "__lgi0__", "__lgj0__",
+                   "__rgi0__", "__rgj0__"))
+    if env_reject:
+        cand = cand.filter((F.col("__lx0__") <= F.col("__rx1__"))
+                           & (F.col("__rx0__") <= F.col("__lx1__"))
+                           & (F.col("__ly0__") <= F.col("__ry1__"))
+                           & (F.col("__ry0__") <= F.col("__ly1__")))
+    return cand.drop("__lx0__", "__ly0__", "__lx1__", "__ly1__",
+                     "__rx0__", "__ry0__", "__rx1__", "__ry1__")
+
+
+def _bnlj_candidates(left: DataFrame, pmap: dict, left_env) -> DataFrame:
+    """TINY right side: skip the cell grid entirely — a
+    BroadcastNestedLoopJoin on the 4-comparison envelope condition
+    evaluates |L|x|R| pairs in whole-stage codegen faster than exploding
+    the left to cells and hash-joining (measured: 0.73 s vs 1.08 s for
+    1M x 200 at ~1.8M candidates) and needs no report-once dedup.
+    O(|L|*|R|) only works because |R| is bounded; the grid path takes
+    over beyond the cutoff. One renv row per UNIQUE geometry (pid):
+    duplicate-geometry right rows get their multiplicity from the
+    rows_back join, exactly once."""
+    renv_rows = [(pid, *[float(v) for v in wkb_read(w).envelope()])
+                 for pid, w in pmap.items()]
+    renv = left.sparkSession.createDataFrame(
+        renv_rows, "__rpid__ long, __rx0__ double, __ry0__ double, "
+                   "__rx1__ double, __ry1__ double")
+    x0, y0, x1, y1 = (F.col(c) for c in left_env)
+    cond = ((x0 <= F.col("__rx1__")) & (F.col("__rx0__") <= x1)
+            & (y0 <= F.col("__ry1__")) & (F.col("__ry0__") <= y1))
+    return (left.join(F.broadcast(renv), cond, "inner")
+                .drop("__rx0__", "__ry0__", "__rx1__", "__ry1__"))
+
+
+def _pid_grid_candidates(left: DataFrame, left_geom: str, left_env,
+                         pmap: dict, level: int, env_reject: bool) -> DataFrame:
+    """The broadcast grid: the right side collapses to a driver-built
+    (pid, gi, gj, full) cell table with an envelope sidecar — a
+    LocalTableScan with NO Python operator, so the probe-side join stays
+    in whole-stage codegen (the PreparedPipPolys shape)."""
+    from ..curves.zorder import z2_decode
+    recs = []
+    for pid, w in pmap.items():
+        arr, full = _flagged_cover_of_wkb(w, level)
+        e = wkb_read(w).envelope()
+        gis, gjs = z2_decode(arr)
+        gi0, gj0 = int(gis.min()), int(gjs.min())
+        ex = tuple(float(v) for v in e)  # meters is None on this path
+        for gi, gj, fl in zip(gis.tolist(), gjs.tolist(), full.tolist()):
+            recs.append((pid, gi, gj, gi0, gj0, bool(fl), *ex))
+    rcells = left.sparkSession.createDataFrame(
+        recs, "__rpid__ long, __gi__ long, __gj__ long, "
+              "__rgi0__ long, __rgj0__ long, __rfull__ boolean, "
+              "__rx0__ double, __ry0__ double, "
+              "__rx1__ double, __ry1__ double")
+    l = _cover_ij(left, left_geom, left_env, level, "l")
+    return _report_once(l, F.broadcast(rcells), env_reject)
+
+
 def spatial_join(
     left: DataFrame,
     right: DataFrame,
     predicate: str,
     left_geom: str = "geom",
     right_geom: str = "geom",
-    left_id: str | None = None,
-    right_id: str | None = None,
     level: int | None = None,
     meters: float | None = None,
     broadcast_right: bool | str = "auto",
@@ -1343,14 +1335,18 @@ def spatial_join(
     broadcast/LocalTableScan path, a large one the shuffle grid join.
     Pass True/False to force.
 
-    Broadcast joins key the right side by geometry hash and resolve WKB
-    through a Spark broadcast inside the refine workers, so Arrow ships
-    8-byte pids instead of geometry blobs per candidate (the
-    PreparedPipPolys traffic shape). ``left_rects=True`` additionally
+    Every path builds its candidates and then runs one refine
+    (:func:`_refine_udf`). Broadcast joins key the right side by
+    geometry hash and resolve WKB through a Spark broadcast inside the
+    refine workers, so Arrow ships 8-byte pids instead of geometry blobs
+    per candidate (the PreparedPipPolys traffic shape); on the pid grid
+    an st_intersects refine also reads the right cover's full-cell flag
+    and accepts flagged rect lefts without a kernel. ``left_rects=True``
     declares every left geometry an axis rect equal to its envelope
-    (requires left_env): for intersects/disjoint/contains/covers the
-    refine then reads ONLY the envelope doubles — no WKB anywhere on the
-    hot path.
+    (requires left_env): for intersects/contains/covers the refine then
+    reads ONLY the envelope doubles — no left WKB anywhere on the hot
+    path — and a broadcast st_intersects against an all-convex right
+    runs no Python at all (:func:`_jvm_convex_intersects`).
     """
     if broadcast_right == "auto":
         # the same statistic Spark's own broadcast-join planning reads:
@@ -1359,206 +1355,14 @@ def spatial_join(
         # (the pid-keyed LocalTableScan path — the fast plan whenever it
         # fits); above it, the shuffle grid join.
         broadcast_right = _plan_size_bytes(right) <= auto_broadcast_bytes
-    report_once = predicate != "st_disjoint"
-    if report_once:
-        def _ij_side(df, geom_col, env_cols, tag, expand_m):
-            """Explode one side to (gi, gj) rows; also emit that side's
-            (expanded) envelope as __{tag}x0__..__{tag}y1__ sidecars so the
-            candidate join can envelope-reject in pure JVM. ``expand_m``
-            (meters, dwithin) expands per ROW with the latitude-aware
-            degree equivalent (sphere_expand_degrees semantics) — a flat
-            worst-case factor would under-cover above ~48 deg latitude."""
-            if env_cols is not None:
-                x0, y0, x1, y1 = (F.col(c) for c in env_cols)
-                if expand_m is not None:
-                    rlat = F.lit(expand_m / 110_540.0)
-                    # pole-safe: clamp phi at 90 (cos(radians(90)) is a
-                    # positive ~6e-17 in doubles, so the division is
-                    # finite) and cap the window at the full wrap —
-                    # clamping phi below 90 under-covers near the poles
-                    phi = F.least(F.greatest(F.abs(y0), F.abs(y1)) + rlat,
-                                  F.lit(90.0))
-                    rlon = F.least(rlat / F.cos(F.radians(phi)), F.lit(180.0))
-                    x0, y0, x1, y1 = x0 - rlon, y0 - rlat, x1 + rlon, y1 + rlat
-                    # antimeridian-crossing window: widen to the full lon
-                    # range (contiguous cover for the report-once rule;
-                    # the refine resolves the +-360 shift exactly)
-                    wrap = (x0 < F.lit(-180.0)) | (x1 > F.lit(180.0))
-                    x0 = F.when(wrap, F.lit(-180.0)).otherwise(x0)
-                    x1 = F.when(wrap, F.lit(180.0)).otherwise(x1)
-                out = _explode_bbox_ij(df, x0, y0, x1, y1, level, tag)
-                return (out.withColumn(f"__{tag}x0__", x0)
-                           .withColumn(f"__{tag}y0__", y0)
-                           .withColumn(f"__{tag}x1__", x1)
-                           .withColumn(f"__{tag}y1__", y1))
-            cov = _cells_ij_of_geom(level, expand_m=expand_m)
-            return (df.withColumn("__ce__", cov(F.col(geom_col)))
-                      .withColumn(f"__{tag}gi0__", F.col("__ce__.gi0"))
-                      .withColumn(f"__{tag}gj0__", F.col("__ce__.gj0"))
-                      .withColumn(f"__{tag}x0__", F.col("__ce__.bx0"))
-                      .withColumn(f"__{tag}y0__", F.col("__ce__.by0"))
-                      .withColumn(f"__{tag}x1__", F.col("__ce__.bx1"))
-                      .withColumn(f"__{tag}y1__", F.col("__ce__.by1"))
-                      .withColumn("__zz__", F.explode(F.arrays_zip(
-                          F.col("__ce__.gis").alias("gi"),
-                          F.col("__ce__.gjs").alias("gj"))))
-                      .withColumn("__gi__", F.col("__zz__.gi"))
-                      .withColumn("__gj__", F.col("__zz__.gj"))
-                      .drop("__ce__", "__zz__"))
-
-        lenv_cols = [F.col(c) for c in left_env] if left_env is not None else None
-        use_pid = broadcast_right and meters is None
-        if use_pid:
-            # broadcast path: the right side collapses to a driver-built
-            # (pid, gi, gj) cell table with an envelope sidecar — a
-            # LocalTableScan with NO Python operator, so the probe-side
-            # join stays in whole-stage codegen (the PreparedPipPolys
-            # shape). Candidates carry an 8-byte pid; geometry reaches the
-            # refine workers once via a Spark broadcast; right attribute
-            # rows come back via a pid join against a second driver-built
-            # literal at the end (per ROW, so duplicate-geometry right rows
-            # keep their multiplicity — and a LocalTableScan build side
-            # keeps the multi-million-row join-back probe in codegen too).
-            spark = left.sparkSession
-            pls = (right.filter(F.col(right_geom).isNotNull())
-                        .withColumn("__rpid__", F.xxhash64(F.col(right_geom))))
-            prows = pls.collect()
-            rows_back = spark.createDataFrame(prows, pls.schema)
-            pmap = {row["__rpid__"]: bytes(row[right_geom]) for row in prows}
-            if (len(prows) <= 512 and left_env is not None
-                    and predicate in _ENV_REJECT_PREDS):
-                # TINY right side: skip the cell grid entirely — a
-                # BroadcastNestedLoopJoin on the 4-comparison envelope
-                # condition evaluates |L|x|R| pairs in whole-stage codegen
-                # faster than exploding the left to cells and hash-joining
-                # (measured: 0.73 s vs 1.08 s for 1M x 200 at ~1.8M
-                # candidates) and needs no report-once dedup.
-                # O(|L|*|R|) only works because |R| is bounded here; the
-                # grid path takes over beyond the cutoff. One renv row per
-                # UNIQUE geometry (pid): duplicate-geometry right rows get
-                # their multiplicity from the rows_back join, exactly once.
-                renv_rows = [
-                    (pid, *[float(v) for v in wkb_read(w).envelope()])
-                    for pid, w in pmap.items()]
-                renv = spark.createDataFrame(
-                    renv_rows, "__rpid__ long, __rx0__ double, __ry0__ double, "
-                               "__rx1__ double, __ry1__ double")
-                x0, y0, x1, y1 = (F.col(c) for c in left_env)
-                bmap = spark.sparkContext.broadcast(pmap)
-                cond = ((x0 <= F.col("__rx1__")) & (F.col("__rx0__") <= x1)
-                        & (y0 <= F.col("__ry1__")) & (F.col("__ry0__") <= y1))
-                cand = (left.join(F.broadcast(renv), cond, "inner")
-                            .drop("__rx0__", "__ry0__", "__rx1__", "__ry1__"))
-                lenv_cols = [F.col(c) for c in left_env]
-                out = None
-                if left_rects and predicate == "st_intersects":
-                    out = _jvm_convex_intersects(cand, pmap, lenv_cols, spark)
-                if out is None and left_rects and predicate in _RECT_FAST_PREDS:
-                    refine = _rect_refine_by_pid_udf(predicate, bmap)
-                    out = cand.filter(refine(*lenv_cols, F.col("__rpid__")))
-                elif out is None:
-                    refine = _geom_refine_udf(predicate, right_bmap=bmap)
-                    out = cand.filter(refine(F.col(left_geom), F.col("__rpid__")))
-                return (out.join(F.broadcast(rows_back), on="__rpid__",
-                                 how="inner")
-                           .drop("__rpid__"))
-            if level is None:
-                level = DEFAULT_LEVEL
-            bmap = spark.sparkContext.broadcast(pmap)
-            from ..curves.zorder import z2_decode
-            recs = []
-            for pid, w in pmap.items():
-                arr, full = _flagged_cover_of_wkb(w, level)
-                e = wkb_read(w).envelope()
-                gis, gjs = z2_decode(arr)
-                gi0, gj0 = int(gis.min()), int(gjs.min())
-                ex = tuple(float(v) for v in e)  # meters is None on this path
-                for gi, gj, fl in zip(gis.tolist(), gjs.tolist(), full.tolist()):
-                    recs.append((pid, gi, gj, gi0, gj0, bool(fl), *ex))
-            rcells = spark.createDataFrame(
-                recs, "__rpid__ long, __gi__ long, __gj__ long, "
-                      "__rgi0__ long, __rgj0__ long, __rfull__ boolean, "
-                      "__rx0__ double, __ry0__ double, "
-                      "__rx1__ double, __ry1__ double")
-            l = _ij_side(left, left_geom, left_env, "l", None)
-            cand = (l.join(F.broadcast(rcells), on=["__gi__", "__gj__"], how="inner")
-                     .filter((F.col("__gi__") == F.greatest("__lgi0__", "__rgi0__"))
-                             & (F.col("__gj__") == F.greatest("__lgj0__", "__rgj0__")))
-                     .drop("__gi__", "__gj__", "__lgi0__", "__lgj0__",
-                           "__rgi0__", "__rgj0__"))
-            if predicate in _ENV_REJECT_PREDS:
-                # JVM envelope reject before any Python: cell-sharing pairs
-                # with disjoint envelopes can't satisfy the predicate, and
-                # killing them here (not in the refine) lets the join run a
-                # COARSER grid — fewer exploded probe rows — without paying
-                # for the extra false candidates in Arrow traffic
-                cand = cand.filter((F.col("__lx0__") <= F.col("__rx1__"))
-                                   & (F.col("__rx0__") <= F.col("__lx1__"))
-                                   & (F.col("__ly0__") <= F.col("__ry1__"))
-                                   & (F.col("__ry0__") <= F.col("__ly1__")))
-            cand = cand.drop("__rx0__", "__ry0__", "__rx1__", "__ry1__",
-                             "__lx0__", "__ly0__", "__lx1__", "__ly1__")
-            if (left_rects and left_env is not None
-                    and predicate in _RECT_FAST_PREDS):
-                if predicate == "st_intersects":
-                    # all-convex right: SAT as a codegen anti-join, no
-                    # Python; otherwise the flagged kernel refine — the
-                    # full-cell flag rides into the refine and those rows
-                    # skip the kernel (single pass; a filter-split + union
-                    # would scan the candidate join twice)
-                    out = _jvm_convex_intersects(
-                        cand.drop("__rfull__"), pmap, lenv_cols, spark)
-                    if out is None:
-                        refine = _rect_refine_by_pid_udf(predicate, bmap,
-                                                         with_flag=True)
-                        out = cand.filter(refine(*lenv_cols, F.col("__rpid__"),
-                                                 F.col("__rfull__")))
-                else:
-                    refine = _rect_refine_by_pid_udf(predicate, bmap)
-                    out = cand.filter(refine(*lenv_cols, F.col("__rpid__")))
-            elif predicate == "st_intersects":
-                # generic left: the refine reads the flag and fast-accepts
-                # flagged pairs whose left geometry is an axis rect
-                refine = _geom_refine_udf(predicate, right_bmap=bmap,
-                                          with_flag=True)
-                out = cand.filter(refine(F.col(left_geom), F.col("__rpid__"),
-                                         F.col("__rfull__")))
-            else:
-                refine = _geom_refine_udf(predicate, right_bmap=bmap)
-                out = cand.filter(refine(F.col(left_geom), F.col("__rpid__")))
-            return (out.drop("__rfull__")
-                       .join(F.broadcast(rows_back), on="__rpid__", how="inner")
-                       .drop("__rpid__"))
-        if level is None:
-            level = DEFAULT_LEVEL
-        l = _ij_side(left, left_geom, left_env, "l", None)
-        r = _ij_side(right, right_geom, right_env, "r", meters)
-        rr = F.broadcast(r) if broadcast_right else r
-        # report-once: the canonical cell's grid pair is (max of the two
-        # range minima) by monotonicity — four integer comparisons, cheap
-        # even when a Python-UDF stage disables whole-stage codegen
-        cand = (l.join(rr, on=["__gi__", "__gj__"], how="inner")
-                 .filter((F.col("__gi__") == F.greatest("__lgi0__", "__rgi0__"))
-                         & (F.col("__gj__") == F.greatest("__lgj0__", "__rgj0__")))
-                 .drop("__gi__", "__gj__", "__lgi0__", "__lgj0__",
-                       "__rgi0__", "__rgj0__"))
-        if predicate in _ENV_REJECT_PREDS or meters is not None:
-            # JVM envelope reject (for dwithin the right envelope is
-            # already expanded, so the overlap test remains a necessary
-            # condition): the refine sees only plausibly-matching pairs
-            cand = cand.filter((F.col("__lx0__") <= F.col("__rx1__"))
-                               & (F.col("__rx0__") <= F.col("__lx1__"))
-                               & (F.col("__ly0__") <= F.col("__ry1__"))
-                               & (F.col("__ry0__") <= F.col("__ly1__")))
-        cand = cand.drop("__lx0__", "__ly0__", "__lx1__", "__ly1__",
-                         "__rx0__", "__ry0__", "__rx1__", "__ry1__")
-        if (left_rects and left_env is not None and meters is None
-                and predicate in _RECT_FAST_PREDS):
-            # declared-rect left: the refine reads the envelope doubles +
-            # the right WKB (parsed once per distinct geometry per batch)
-            refine = _rect_refine_by_pid_udf(predicate, None)
-            return cand.filter(refine(*lenv_cols, F.col(right_geom)))
-    else:
+    if level is None:
+        level = DEFAULT_LEVEL
+    rect_left = (left_rects and left_env is not None and meters is None
+                 and predicate in _RECT_FAST_PREDS)
+    lcols = [F.col(c) for c in left_env] if rect_left else [F.col(left_geom)]
+    rkey, full = F.col(right_geom), []
+    pmap = bmap = rows_back = None
+    if predicate == "st_disjoint":
         # st_disjoint selects every pair whose geometries share NO point —
         # the complement of an intersection join. Pairs in non-overlapping
         # cells are disjoint too, so a cell prefilter cannot enumerate the
@@ -1567,6 +1371,49 @@ def spatial_join(
         # row (no geometry dedup). The refine fast-accepts envelope-miss
         # pairs without touching the kernel.
         cand = left.crossJoin(F.broadcast(right) if broadcast_right else right)
+    elif broadcast_right and meters is None:
+        # broadcast path: candidates carry an 8-byte pid; geometry reaches
+        # the refine workers once via a Spark broadcast; right attribute
+        # rows come back via a pid join against a driver-built literal at
+        # the end (per ROW, so duplicate-geometry right rows keep their
+        # multiplicity — and a LocalTableScan build side keeps the
+        # multi-million-row join-back probe in codegen too).
+        spark = left.sparkSession
+        pls = (right.filter(F.col(right_geom).isNotNull())
+                    .withColumn("__rpid__", F.xxhash64(F.col(right_geom))))
+        prows = pls.collect()
+        rows_back = spark.createDataFrame(prows, pls.schema)
+        pmap = {row["__rpid__"]: bytes(row[right_geom]) for row in prows}
+        bmap = spark.sparkContext.broadcast(pmap)
+        rkey = F.col("__rpid__")
+        if (len(prows) <= 512 and left_env is not None
+                and predicate in _ENV_REJECT_PREDS):
+            cand = _bnlj_candidates(left, pmap, left_env)
+        else:
+            cand = _pid_grid_candidates(left, left_geom, left_env, pmap, level,
+                                        predicate in _ENV_REJECT_PREDS)
+            if predicate == "st_intersects":
+                # the flag rides into the refine and flagged rows skip the
+                # kernel (single pass; a filter-split + union would scan
+                # the candidate join twice)
+                full = [F.col("__rfull__")]
+    else:
+        l = _cover_ij(left, left_geom, left_env, level, "l")
+        r = _cover_ij(right, right_geom, right_env, level, "r", meters)
+        cand = _report_once(l, F.broadcast(r) if broadcast_right else r,
+                            predicate in _ENV_REJECT_PREDS or meters is not None)
 
-    refine = _geom_refine_udf(predicate, meters=meters)
-    return cand.filter(refine(F.col(left_geom), F.col(right_geom)))
+    out = None
+    if rect_left and predicate == "st_intersects" and pmap is not None:
+        # all-convex right: SAT as a codegen anti-join, no Python
+        out = _jvm_convex_intersects(cand.drop("__rfull__"), pmap, lcols,
+                                     left.sparkSession)
+    if out is None:
+        refine = _refine_udf(predicate, "rect" if rect_left else "geom",
+                             right_bmap=bmap, meters=meters)
+        out = cand.filter(refine(*lcols, rkey, *full))
+    if pmap is None:
+        return out
+    return (out.drop("__rfull__")
+               .join(F.broadcast(rows_back), on="__rpid__", how="inner")
+               .drop("__rpid__"))

@@ -229,3 +229,49 @@ def test_knn_join_one_round_plan(spark, plan_node_names):
     assert "BroadcastNestedLoopJoinExec" not in names
     assert names.count("ArrowEvalPythonExec") == 1
     assert names.count("BroadcastHashJoinExec") == 1
+
+
+# ---------------------------------------------------------------------------
+# sphere metric: longitudes outside the world
+
+def test_sphere_knn_finds_out_of_world_longitude(spark):
+    """Lon 250 is lon -110 on the sphere (222 km from the query), nearer
+    than lon -100 (1,334 km): both joins must find it though its raw
+    longitude lies outside the world."""
+    q = spark.createDataFrame([(0, -112.0, 0.0)], "qid long, qx double, qy double")
+    d = spark.createDataFrame([(1, 250.0, 0.0), (2, -100.0, 0.0)],
+                              "did long, lon double, lat double")
+    out = knn_join(q, d, 1, metric="sphere", max_radius=20_100_000.0)
+    assert [(r["lon"], r["lat"]) for r in out.collect()] == [(250.0, 0.0)]
+    out = all_knn_join(q, d, 1, "qid", "qx", "qy", "did", "lon", "lat",
+                       metric="sphere")
+    assert [(r["lon"], r["lat"]) for r in out.collect()] == [(250.0, 0.0)]
+    # the wrapped key stays non-nullable: a nullable join key gets an
+    # inferred isnotnull filter that inlines the cell normalization
+    # 2^steps times, past the JVM's generated-method size limit
+    from geomesa_spark.operators.spatial_join import with_point_cell
+    keyed = with_point_cell(d, "lon", "lat", 8, wrap_lon=True)
+    assert not keyed.schema["__cell__"].nullable
+
+
+@pytest.mark.parametrize("join", ["knn_join", "all_knn_join"])
+def test_sphere_knn_out_of_world_matches_brute_force(spark, join):
+    """Seeded data and queries with longitudes up to +-540: the sphere
+    top-k equals the haversine brute force on the raw coordinates."""
+    rng = np.random.default_rng(23)
+    dx, dy = rng.uniform(-540.0, 540.0, 300), rng.uniform(-80.0, 80.0, 300)
+    qx = np.r_[rng.uniform(-400.0, 400.0, 30), [-112.0, 190.0, -181.0]]
+    qy = np.r_[rng.uniform(-80.0, 80.0, 30), [0.0, 10.0, -5.0]]
+    qids, dids = np.arange(len(qx)), np.arange(len(dx)) * 3 + 11
+    q = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, x, y in zip(qids, qx, qy)],
+        "qid long, qx double, qy double")
+    d = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, x, y in zip(dids, dx, dy)],
+        "did long, lon double, lat double")
+    if join == "knn_join":
+        out = knn_join(q, d, 4, metric="sphere", max_radius=20_100_000.0)
+    else:
+        out = all_knn_join(q, d, 4, "qid", "qx", "qy", "did", "lon", "lat",
+                           metric="sphere", level=4)
+    assert _knn_rows(out) == _brute(qids, qx, qy, dids, dx, dy, 4, "sphere")

@@ -81,8 +81,7 @@ class TestGeneralSpatialJoin:
                          "xmin", "ymin", "xmax", "ymax").limit(60).cache()
         b = polys.select(F.col("poly_id").alias("rid"), F.col("geom").alias("rgeom")) \
                  .filter(F.col("rid") >= 60).cache()
-        joined = spatial_join(a, b, "st_intersects", left_geom="lgeom", right_geom="rgeom",
-                              left_id="lid", right_id="rid")
+        joined = spatial_join(a, b, "st_intersects", left_geom="lgeom", right_geom="rgeom")
         got = {(r.lid, r.rid) for r in joined.select("lid", "rid").collect()}
 
         ap = a.toPandas()
@@ -587,3 +586,268 @@ def test_cover_of_non_finite_rows_is_empty():
     # the finite rows keep the cover they had on their own
     assert disk[0] == cells_of_disk_arrays(xs[:1], ys[:1], r[:1], r[:1], 8)[0]
     assert disk[3] == cells_of_disk_arrays(xs[3:4], ys[3:4], r[3:4], r[3:4], 8)[0]
+
+
+# ---------------------------------------------------------------------------
+# Refine parity matrix: every candidate path of spatial_join and pip_join
+# against a driver-side brute force running the exact geom.kernels
+# predicate per pair.
+
+_SJ_PREDS = {"st_intersects": "intersects", "st_contains": "contains",
+             "st_covers": "covers", "st_within": "within",
+             "st_coveredBy": "covered_by"}
+_LEFT_RECTS = [
+    (0.0, 0.0, 2.0, 2.0),      # overlaps the rect R1
+    (0.8, 0.8, 3.2, 3.2),      # contains R1
+    (3.0, 1.0, 4.0, 2.0),      # equals R3, shares an edge with R1
+    (1.0, 1.0, 3.0, 3.0),      # equals R1 (and its duplicate)
+    (1.2, 1.2, 1.8, 1.8),      # within R1
+    (4.8, 4.8, 5.2, 5.2),      # within the concave star
+    (5.4, 5.4, 8.6, 8.6),      # contains the octagon, crosses the star
+    (1.0, 7.5, 1.0, 9.0),      # zero width: crosses the line string
+    (1.6, 4.9, 2.4, 5.6),      # inside the hole
+    (0.0, 3.8, 4.0, 7.0),      # contains the holed polygon
+    (7.9, 0.9, 9.6, 4.1),      # contains the multipolygon
+    (5.8, 7.9, 8.2, 10.0),     # around the zero-area polygon
+    (0.0, 8.0, 4.5, 10.0),     # contains the line string
+    (20.0, 20.0, 21.0, 21.0),  # far from everything
+]
+
+
+def _wkb(geom):
+    from geomesa_spark.geom.wkb import wkb_write
+    return bytearray(wkb_write(geom))
+
+
+def _ring(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x0, y1], [x1, y1], [x1, y0], [x0, y0]],
+                    dtype=np.float64)
+
+
+def _right_geoms():
+    """(rid, WKB or None): axis rects, convex n-gons, a concave star, a
+    holed polygon, a multipolygon, zero-area polygons, a line string, a
+    null and a duplicate geometry."""
+    from geomesa_spark.geom.wkb import LineString, MultiPolygon, Polygon
+    r1 = _rect_wkb(1.0, 1.0, 3.0, 3.0)
+    return [
+        (1, r1), (2, r1),                                    # duplicates
+        (3, _rect_wkb(3.0, 1.0, 4.0, 2.0)),
+        (4, _rect_wkb(4.0, 0.5, 6.0, 2.5)),
+        (5, _ngon_wkb(7.0, 7.0, 1.5, n=8)),
+        (6, _ngon_wkb(2.0, 7.0, 1.0, n=5)),
+        (7, _ngon_wkb(5.0, 5.0, 2.0, n=12, star=True)),
+        (8, _wkb(Polygon(_ring(0.5, 4.0, 3.5, 6.5), [_ring(1.5, 4.8, 2.5, 5.7)]))),
+        (9, _wkb(MultiPolygon([Polygon(_ring(8.0, 1.0, 9.0, 2.0)),
+                               Polygon(_ring(8.5, 3.0, 9.5, 4.0))]))),
+        (10, _wkb(Polygon(np.array([[6.0, 8.5], [7.0, 9.0], [8.0, 9.5],
+                                    [6.0, 8.5]])))),       # collinear ring
+        (11, _rect_wkb(9.5, 6.0, 9.5, 8.0)),                 # zero-width rect
+        (12, _wkb(LineString(np.array([[0.5, 8.0], [4.0, 9.5]])))),
+        (13, None),
+    ]
+
+
+def _sj_frames(spark, pad: int):
+    """The left rects (WKB + envelope columns) and the right layer,
+    padded with ``pad`` far-away rects that no left row reaches."""
+    left = _mk_left(spark, _LEFT_RECTS)
+    rows = _right_geoms() + [
+        (100 + i, _rect_wkb(100.0 + (i % 40), -60.0 + (i // 40) * 0.5,
+                            100.2 + (i % 40), -59.8 + (i // 40) * 0.5))
+        for i in range(pad)]
+    right = spark.createDataFrame(rows, "rid long, rgeom binary")
+    return left, right, rows
+
+
+def _sj_brute(rows, predicate: str) -> set:
+    from geomesa_spark.geom import kernels as K
+    from geomesa_spark.geom.wkb import wkb_read
+
+    fn = getattr(K, _SJ_PREDS[predicate])
+    lgeoms = [wkb_read(bytes(_rect_wkb(*r))) for r in _LEFT_RECTS]
+    out = set()
+    for rid, w in rows:
+        if w is None:
+            continue
+        g = wkb_read(bytes(w))
+        e = g.envelope()
+        for lid, (lg, r) in enumerate(zip(lgeoms, _LEFT_RECTS)):
+            # every predicate here needs the envelopes to meet
+            if r[0] <= e[2] and e[0] <= r[2] and r[1] <= e[3] and e[1] <= r[3]:
+                if fn(lg, g):
+                    out.add((lid, rid))
+    return out
+
+
+_SJ_PATHS = {"bnlj": (True, 0), "pid_grid": (True, 520), "shuffle_grid": (False, 0)}
+
+
+@pytest.mark.parametrize("path", list(_SJ_PATHS))
+def test_spatial_join_refine_parity_matrix(spark, path):
+    """Declared-rect and generic left layers through the tiny-right
+    nested-loop join, the broadcast pid grid and the shuffle grid: every
+    predicate's row set equals the per-pair kernel brute force."""
+    broadcast, pad = _SJ_PATHS[path]
+    left, right, rows = _sj_frames(spark, pad)
+    kw = dict(left_geom="geom", right_geom="rgeom", broadcast_right=broadcast,
+              left_env=("xmin", "ymin", "xmax", "ymax"))
+    cases = [(p, False) for p in _SJ_PREDS]
+    cases += [(p, True) for p in ("st_intersects", "st_contains", "st_covers")]
+    # one collect for the whole matrix: the cases as a tagged union
+    got = _collect_cases({
+        (predicate, rects): spatial_join(left, right, predicate, left_rects=rects,
+                                         **kw).select("lid", "rid")
+        for predicate, rects in cases})
+    for predicate, rects in cases:
+        want = _sj_brute(rows, predicate)
+        assert got[(predicate, rects)] == sorted(want), (path, predicate, rects)
+        assert want, predicate  # every predicate has matches here
+
+
+def _collect_cases(frames: dict) -> dict:
+    """Collect each case's rows (sorted tuples) through one union."""
+    from functools import reduce
+    keys = list(frames)
+    tagged = [df.select(F.lit(i).alias("__case__"), *df.columns)
+              for i, df in enumerate(frames.values())]
+    got = {k: [] for k in keys}
+    for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
+        got[keys[r[0]]].append(tuple(r[1:]))
+    return {k: sorted(v) for k, v in got.items()}
+
+
+def _pip_polys():
+    """(poly_id, WKB): edge-sharing rects, a concave star, a holed
+    polygon, a multipolygon, a line string and a zero-width rect."""
+    from geomesa_spark.geom.wkb import LineString, MultiPolygon, Polygon
+    return [
+        (1, _rect_wkb(0.0, 0.0, 4.0, 4.0)),
+        (2, _rect_wkb(4.0, 0.0, 6.0, 2.0)),
+        (3, _ngon_wkb(10.0, 10.0, 3.0, n=10, star=True)),
+        (4, _wkb(Polygon(_ring(0.0, 10.0, 6.0, 16.0), [_ring(2.0, 12.0, 4.0, 14.0)]))),
+        (5, _wkb(MultiPolygon([Polygon(_ring(20.0, 0.0, 22.0, 2.0)),
+                               Polygon(_ring(23.0, 0.0, 25.0, 2.0))]))),
+        (6, _wkb(LineString(np.array([[30.0, 0.0], [34.0, 4.0]])))),
+        (7, _rect_wkb(40.0, 0.0, 40.0, 4.0)),
+    ]
+
+
+_PIP_EDGE_POINTS = [
+    (0.0, 0.0), (4.0, 4.0), (4.0, 1.0), (2.0, 0.0), (5.0, 2.0), (6.0, 1.0),
+    (2.0, 13.0), (3.0, 12.0), (4.0, 14.0), (0.0, 12.0), (13.0, 10.0),
+    (21.0, 2.0), (22.0, 1.0), (24.0, 0.0), (31.0, 1.0), (32.0, 2.0),
+    (30.0, 0.0), (34.0, 4.0), (40.0, 1.0), (40.0, 0.0), (40.0, 4.0),
+    (40.0001, 1.0),
+]
+
+
+def _pip_points():
+    rng = np.random.default_rng(17)
+    xs = np.r_[rng.uniform(-1.0, 41.0, 500), [p[0] for p in _PIP_EDGE_POINTS]]
+    ys = np.r_[rng.uniform(-1.0, 17.0, 500), [p[1] for p in _PIP_EDGE_POINTS]]
+    return xs, ys
+
+
+def _pip_brute(predicate: str) -> set:
+    from geomesa_spark.geom import kernels as K
+    from geomesa_spark.geom.wkb import Point, wkb_read
+
+    fn = K.contains if predicate in ("st_contains", "st_within") else K.intersects
+    xs, ys = _pip_points()
+    out = set()
+    for poly_id, w in _pip_polys():
+        g = wkb_read(bytes(w))
+        e = g.envelope()
+        for i, (x, y) in enumerate(zip(xs, ys)):
+            if e[0] <= x <= e[2] and e[1] <= y <= e[3] and fn(g, Point(x, y)):
+                out.add((i, poly_id))
+    return out
+
+
+_PIP_PATHS = {"prepared": dict(broadcast_polys=True),
+              "shuffle": dict(),
+              "salted": dict(salt=3)}
+
+
+@pytest.mark.parametrize("path", list(_PIP_PATHS))
+def test_pip_join_refine_parity_matrix(spark, path):
+    """The prepared, shuffle and salted pip_join paths: every predicate's
+    row set, boundary points included, equals the per-pair kernel brute
+    force (strict for contains/within, closed for covers/intersects)."""
+    xs, ys = _pip_points()
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "pt long, lon double, lat double")
+    polys = spark.createDataFrame(_pip_polys(), "poly_id long, geom binary")
+    preds = ("st_contains", "st_within", "st_covers", "st_intersects")
+    got = _collect_cases({
+        predicate: pip_join(pts, polys, "lon", "lat", "geom", predicate=predicate,
+                            **_PIP_PATHS[path]).select("pt", "poly_id")
+        for predicate in preds})
+    for predicate in preds:
+        want = _pip_brute(predicate)
+        assert got[predicate] == sorted(want), (path, predicate)
+        assert {p for _, p in want} == set(range(1, 8)) - (
+            {7} if predicate in ("st_contains", "st_within") else set())
+
+
+# ---------------------------------------------------------------------------
+# Arrow traffic of the refine: the exact UDF name and input columns.
+
+def _python_udfs(df) -> list[str]:
+    """The UDF calls of every Python evaluation node in ``df``'s executed
+    plan, attribute ids stripped: ``refine(lon, lat, __pid__)``."""
+    import re
+
+    from conftest import _plan_nodes
+    out = []
+    for node in _plan_nodes(df):
+        if node.getClass().getSimpleName() in ("ArrowEvalPythonExec",
+                                                "BatchEvalPythonExec"):
+            udfs = node.udfs()
+            out += [re.sub(r"#\d+L?", "", udfs.apply(i).toString())
+                    for i in range(udfs.size())]
+    return out
+
+
+def test_refine_arrow_inputs_are_pinned(spark):
+    """The refine ships exactly these columns across the Arrow boundary,
+    under the UDF name ``refine``: a refactor that adds a column or
+    renames the UDF fails here."""
+    # prepared pip_join: only the boundary leg runs Python
+    xs, ys = _pip_points()
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "pt long, lon double, lat double")
+    polys = spark.createDataFrame(_pip_polys()[:4], "poly_id long, geom binary")
+    out = pip_join(pts, polys, "lon", "lat", "geom", broadcast_polys=True)
+    out.collect()
+    assert _python_udfs(out) == ["refine(lon, lat, __pid__)"]
+
+    # broadcast pid grid: left geometry or envelope, pid, full-cell flag
+    left, right, rows = _sj_frames(spark, 520)
+    env = ("xmin", "ymin", "xmax", "ymax")
+    kw = dict(left_geom="geom", right_geom="rgeom", broadcast_right=True,
+              left_env=env)
+    out = spatial_join(left, right, "st_intersects", **kw)
+    out.collect()
+    assert _python_udfs(out) == ["refine(geom, __rpid__, __rfull__)"]
+    out = spatial_join(left, right, "st_intersects", left_rects=True, **kw)
+    out.collect()
+    assert _python_udfs(out) == [
+        "refine(xmin, ymin, xmax, ymax, __rpid__, __rfull__)"]
+
+    # the perfbench ``joins`` shape: shuffle grid, declared-rect left
+    from geomesa_spark.geom.wkb import wkb_read
+    renv = spark.createDataFrame(
+        [(rid, w, *(map(float, wkb_read(bytes(w)).envelope()) if w else (None,) * 4))
+         for rid, w in rows],
+        "rid long, rgeom binary, rx0 double, ry0 double, rx1 double, ry1 double")
+    out = spatial_join(left, renv, "st_intersects", left_geom="geom",
+                       right_geom="rgeom", left_env=env,
+                       right_env=("rx0", "ry0", "rx1", "ry1"), left_rects=True,
+                       broadcast_right=False)
+    out.collect()
+    assert _python_udfs(out) == [
+        "refine(xmin, ymin, xmax, ymax, rgeom)"]
