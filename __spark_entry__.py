@@ -2879,7 +2879,11 @@ def q_store_plan_st(spark, sf_dir):
     the z3 index cheapest (covered (bin, prefix) fraction with bin
     pruning beats the z2 prefix fraction; the attr index does not
     support the filter at all). Raises unless z3 is chosen AND the attr
-    index was never even costed; oracle = plain bbox+time filter."""
+    index was never even costed; oracle = plain bbox+time filter. The
+    z2 and z3 stores are written with 2-hex-char prefixes: at the
+    1-char default a z3 prefix holds one bit each of x and y, and for
+    this box the decider rightly prices z2 lower (0.375 vs 0.45). The
+    planner reads each store's width from its directories."""
     import os
 
     from geomesa_spark.plans.planner import planned_query
@@ -2893,8 +2897,8 @@ def q_store_plan_st(spark, sf_dir):
         F.unix_timestamp("ts").alias("secs"))
     base = _store_tmp(sf_dir, "planst")
     stores = {k: os.path.join(base, k) for k in ("z2", "z3", "attr")}
-    write_indexed(ev, stores["z2"])
-    write_indexed_z3(ev, stores["z3"])
+    write_indexed(ev, stores["z2"], digits=2)
+    write_indexed_z3(ev, stores["z3"], digits=2)
     write_indexed_attr(ev, stores["attr"], "event_type")
     x0, y0, x1, y1, t0, t1 = _STBOX
     plan, df = planned_query(
@@ -2999,6 +3003,31 @@ def q_store_plan_t(spark, sf_dir):
     return df.select("event_id", "lon", "lat", "secs")
 
 
+def _await_sink_rows(spark, q, name: str, n: int, timeout: float) -> None:
+    """Poll the memory sink ``name`` of the streaming query ``q`` until it
+    holds ``n`` rows or ``timeout`` seconds pass. Only a not-yet-registered
+    sink table is waited out; a query that has died raises its own
+    exception at once instead of spinning to the deadline."""
+    import time
+
+    from pyspark.errors import AnalysisException
+
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        try:
+            if spark.table(name).count() >= n:
+                return
+        except AnalysisException as e:
+            if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
+        if not q.isActive:
+            err = q.exception()
+            if err is not None:
+                raise err
+            return
+        time.sleep(0.5)
+
+
 def q_stream_upsert(spark, sf_dir):
     """Streaming upsert feature cache driven to completion
     (streaming/upsert.upsert_cache — the reference KafkaFeatureCache's
@@ -3016,7 +3045,6 @@ def q_stream_upsert(spark, sf_dir):
     import glob
     import os
     import shutil
-    import time
     import uuid
 
     from geomesa_spark.streaming.upsert import upsert_cache
@@ -3055,14 +3083,7 @@ def q_stream_upsert(spark, sf_dir):
             .outputMode("append").trigger(availableNow=True).start())
     # stateful availableNow never self-terminates: wait for the change
     # feed to reach one-output-per-input, then stop
-    deadline = time.time() + 300
-    while time.time() < deadline:
-        try:
-            if spark.table(name).count() >= n_in:
-                break
-        except Exception:
-            pass  # sink table not registered yet
-        time.sleep(0.5)
+    _await_sink_rows(spark, q, name, n_in, timeout=300)
     q.stop()
     res = spark.table(name)
     if res.count() != n_in:

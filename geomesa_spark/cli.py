@@ -64,7 +64,8 @@ def cmd_ingest(args) -> int:
     spark = _session(args.cpus)
     spec = json.loads(open(args.spec).read()) if args.spec else {"fields": {}}
     df = _read_source(spark, args.format, args.input, spec)
-    write_indexed(df, args.out, x=args.x, y=args.y, digits=args.digits)
+    width = {} if args.digits is None else {"digits": args.digits}
+    write_indexed(df, args.out, x=args.x, y=args.y, **width)
     n = spark.read.parquet(args.out).count()
     print(json.dumps({"ingested": n, "store": args.out}))
     return 0
@@ -157,7 +158,9 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--spec", default=None,
                     help="JSON file: {fields, required, error_mode, "
                          "reader_options}")
-    sp.add_argument("--digits", type=int, default=2)
+    sp.add_argument("--digits", type=int, default=None,
+                    help="hex chars of the partition prefix "
+                         "(default: the store default, plans/store.DIGITS)")
     sp.add_argument("--cpus", type=int, default=None)
     sp.add_argument("--x", default="lon")
     sp.add_argument("--y", default="lat")

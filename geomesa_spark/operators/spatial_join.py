@@ -478,6 +478,9 @@ def prepare_pip_polys(polys: DataFrame, poly_geom: str = "geom",
     return PreparedPipPolys(spark, pmap, level, cells_df, geoms_df, any_full)
 
 
+_PIP_PREDICATES = ("st_contains", "st_within", "st_covers", "st_intersects")
+
+
 def pip_join(
     points: DataFrame,
     polys: DataFrame | PreparedPipPolys,
@@ -509,7 +512,14 @@ def pip_join(
     candidates (full=true) bypass Python entirely; only boundary-cell
     candidates cross the Arrow boundary. This is the shape that scales:
     Arrow traffic ~25 bytes/candidate instead of the full WKB.
+
+    Any other predicate raises ValueError: the refine answers only the
+    point-in-polygon test (strict or closed), so e.g. st_disjoint would
+    return the covered points.
     """
+    if predicate not in _PIP_PREDICATES:
+        raise ValueError(f"pip_join predicate must be one of "
+                         f"{', '.join(_PIP_PREDICATES)}, got {predicate!r}")
     prepared = polys if isinstance(polys, PreparedPipPolys) else None
     if prepared is not None:
         level = prepared.level

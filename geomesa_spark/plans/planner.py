@@ -12,7 +12,9 @@ Cost model: all stores index the SAME rows (the reference's model —
 one feature type, many indexes), so cost == estimated fraction of
 hive partitions the pruned scan must open. Every store named after a
 ``KEYSPACES`` entry is costed by one function, :func:`store_cost`, from
-its keyspace's cover:
+its keyspace's cover at the store's own prefix width, read from its
+partition directories (``digits`` = 1 for a default-written store, so
+16 prefixes per bin; a store written at 2 is priced over 256):
 
 - unbinned (z2, xz2, s2): covered prefixes / 16^digits, if the query
   has a bbox. A temporal predicate stays a residual row filter, so a
@@ -51,19 +53,22 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from .store import (
-    _WEEK_S, _WORLD, ATTR, KEYSPACES, KeySpace, attr_query, bin_windows,
-    open_store, residual, scan_store,
+    _WEEK_S, _WORLD, ATTR, KEYSPACES, KeySpace, _local_widths, attr_query,
+    bin_windows, open_store, prefix_digits, residual, scan_store,
 )
 
 __all__ = ["choose_strategy", "planned_query", "store_cost"]
 
 
 def store_cost(ks: KeySpace, path: str, bbox, interval,
-               digits: int) -> float | None:
+               digits: int | None = None) -> float | None:
     """Estimated fraction of the ``ks`` store's partitions at ``path``
     that its pruned scan opens, or None if the store can't help (see
     the module doc: no bbox for an unbinned store; no interval, or no
-    dated bin on disk, for a binned one)."""
+    dated bin on disk, for a binned one). ``digits`` is the store's
+    prefix width, read from a local store's directories when None
+    (:func:`~geomesa_spark.plans.store.prefix_digits`)."""
+    digits = prefix_digits(_local_widths(path), ks.prefix, digits)
     total = 16 ** digits
     if ks.bin is None:
         if bbox is None:
@@ -89,8 +94,10 @@ def store_cost(ks: KeySpace, path: str, bbox, interval,
 
 
 def choose_strategy(stores: dict[str, str], *, bbox=None, interval=None,
-                    attr_eq=None, z2_digits: int = 2, z3_digits: int = 2,
-                    attr_digits: int = 1, max_buckets: int = 256) -> dict:
+                    attr_eq=None, z2_digits: int | None = None,
+                    z3_digits: int | None = None,
+                    attr_digits: int | None = None,
+                    max_buckets: int = 256) -> dict:
     """Rank every supporting index by estimated scanned-partition
     fraction and return ``{"chosen": name, "costs": {name: cost}}``.
 
@@ -99,8 +106,9 @@ def choose_strategy(stores: dict[str, str], *, bbox=None, interval=None,
     extended-geometry stores — offer one family per call, they index
     different row types) to store paths; ``bbox=(x0, y0, x1, y1)``,
     ``interval=(t0, t1)`` epoch seconds half-open,
-    ``attr_eq=(column, value)``. Binned keyspaces use ``z3_digits``,
-    unbinned ones ``z2_digits``.
+    ``attr_eq=(column, value)``. Each store is priced at its own prefix
+    width; ``z3_digits`` (binned keyspaces), ``z2_digits`` (unbinned)
+    and ``attr_digits``, when given, are checked against the stores.
     """
     costs: dict[str, float] = {}
     for name, path in stores.items():
@@ -127,8 +135,9 @@ def choose_strategy(stores: dict[str, str], *, bbox=None, interval=None,
 def planned_query(spark, stores: dict[str, str], *, bbox=None,
                   interval=None, attr_eq=None, x: str = "lon",
                   y: str = "lat", secs: str = "secs",
-                  z2_digits: int = 2, z3_digits: int = 2,
-                  attr_digits: int = 1,
+                  z2_digits: int | None = None,
+                  z3_digits: int | None = None,
+                  attr_digits: int | None = None,
                   max_buckets: int = 256) -> tuple[dict, DataFrame]:
     """Choose the cheapest index, run its pruned scan, and apply EVERY
     predicate as an exact residual — the row set is independent of the

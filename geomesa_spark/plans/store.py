@@ -21,8 +21,15 @@ covering cells. Queries open the store through :func:`open_store`,
 which reuses the DataFrame (and with it Spark's partition discovery)
 while the store's files are unchanged.
 
-At 10^12 rows only the partition count changes (digits knob: 16^d
-prefixes per bin); the covers depend on the window, not on the data.
+The prefix width is a property of the store, as in the reference's
+partition scheme: writers take ``digits`` (default :data:`DIGITS`, one
+hex char, 16 partitions per bin) and every reader takes the width from
+the store's own partition directories (``digits=None``). A reader given
+a width the store does not hold, or a store holding two widths, raises
+ValueError rather than pruning on prefixes no directory has.
+
+At 10^12 rows only the partition count changes (16^digits prefixes per
+bin); the covers depend on the window, not on the data.
 """
 
 from __future__ import annotations
@@ -49,8 +56,9 @@ from ..curves.zorder import z2_encode, z3_encode
 # not called here; perfbench/tracing.py wraps these names on this module
 from ..curves.zranges import z2_ranges, z3_ranges  # noqa: F401
 
-__all__ = ["KeySpace", "KEYSPACES", "ATTR", "keyed", "write_store",
+__all__ = ["DIGITS", "KeySpace", "KEYSPACES", "ATTR", "keyed", "write_store",
            "scan_store", "bin_windows", "residual", "open_store",
+           "prefix_digits",
            "write_indexed", "read_indexed", "bbox_query", "z2_keyed",
            "plan_query", "query_store", "write_indexed_xz2",
            "bbox_query_xz2", "write_indexed_z3", "stbox_query_z3",
@@ -66,6 +74,9 @@ _XZ3_NLZ = 64 - _XZ3_MAXZ.bit_length()
 _XZ3_OFF = _XZ3_NLZ % 4
 _XZ3_DIGITS = (64 - _XZ3_NLZ) // 4 + (0 if _XZ3_OFF == 0 else 1)
 _WEEK_S = 604_800
+# hex chars of every writer's partition prefix unless it is told otherwise
+DIGITS = 1
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 _WORLD = (-180.0, -90.0, 180.0, 90.0)
 # range-search budgets of the XZ and S2 covers
 _XZ_MAX_RANGES = 2000
@@ -329,7 +340,7 @@ def bin_windows(t0: int, t1: int, bins=None) -> dict[tuple, list[int]]:
     return out
 
 
-def keyed(df: DataFrame, ks: KeySpace, digits: int = 2, *, x: str = "lon",
+def keyed(df: DataFrame, ks: KeySpace, digits: int = DIGITS, *, x: str = "lon",
           y: str = "lat", geom: str = "geom", secs: str = "secs") -> DataFrame:
     """Attach ``ks``'s key and partition columns. ``x``/``y`` name the
     point columns, ``geom`` the WKB column of extended geometries (whose
@@ -345,28 +356,30 @@ def keyed(df: DataFrame, ks: KeySpace, digits: int = 2, *, x: str = "lon",
     return df.withColumn(ks.prefix, F.substring(ks.hex, 1, digits))
 
 
-def write_store(df: DataFrame, path: str, ks: KeySpace, digits: int = 2,
+def write_store(df: DataFrame, path: str, ks: KeySpace, digits: int = DIGITS,
                 **cols) -> None:
-    """Write ``df`` as a ``ks``-partitioned parquet store (up to 16^digits
-    prefixes per bin); ``cols`` as for :func:`keyed`."""
+    """Write ``df`` as a ``ks``-partitioned parquet store (at most
+    16^digits prefixes per bin); ``cols`` as for :func:`keyed`."""
     keyed(df, ks, digits, **cols).write.mode("overwrite") \
         .partitionBy(*ks.partitions).parquet(path)
 
 
 def scan_store(spark, path: str, ks: KeySpace, bbox=None, interval=None,
-               digits: int = 2, *, x: str = "lon", y: str = "lat",
+               digits: int | None = None, *, x: str = "lon", y: str = "lat",
                secs: str = "secs") -> DataFrame:
     """Planned scan of a ``ks`` store: partition pruning + the exact
     pushed residual. ``bbox=(x0, y0, x1, y1)``, ``interval=(t0, t1)``
-    epoch seconds half-open; ``digits``/``x``/``y``/``secs`` must match
-    the write.
+    epoch seconds half-open; ``x``/``y``/``secs`` must match the write.
+    ``digits`` is the store's prefix width, read from the store when
+    None (see :func:`prefix_digits`).
 
     A binned store with an interval prunes per group of week bins
     sharing a within-bin window (:func:`bin_windows`), each group with
     its own cover (the whole world stands in for a missing bbox).
     Otherwise the bbox's cover prunes the prefix column.
     """
-    df = open_store(spark, path)
+    df, widths = _open(spark, path)
+    digits = prefix_digits(widths, ks.prefix, digits)
     if interval is not None and interval[1] <= interval[0]:
         return df.filter(F.lit(False))  # empty half-open interval
     conds = residual(ks.extended, bbox, interval, x, y, secs)
@@ -387,9 +400,9 @@ def scan_store(spark, path: str, ks: KeySpace, bbox=None, interval=None,
 # ---------------------------------------------------------------------------
 # opening a store
 
-# (session, absolute path) -> (file listing, DataFrame), least recently
-# used first; bounded so a process that opens many stores keeps only the
-# recent ones alive
+# (session, absolute path) -> (file listing, DataFrame, prefix widths),
+# least recently used first; bounded so a process that opens many stores
+# keeps only the recent ones alive
 _OPENED: OrderedDict = OrderedDict()
 _OPENED_MAX = 64
 _OPENED_LOCK = threading.Lock()
@@ -411,6 +424,79 @@ def _listing(root: str) -> tuple:
     return tuple(out)
 
 
+def _hidden(name: str) -> bool:
+    """A path component Spark's partition discovery skips (e.g. the
+    ``_staging`` directory of streaming ingest)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _widths(dirs) -> dict[str, set]:
+    """``{partition column: the lengths of its values}`` over the hive
+    ``col=value`` components of ``dirs`` (each a sequence of directory
+    names); the null partition has no width."""
+    out: dict[str, set] = {}
+    for parts in dirs:
+        for part in parts:
+            col, eq, val = part.partition("=")
+            if eq and val != _NULL_PART:
+                out.setdefault(col, set()).add(len(val))
+    return out
+
+
+def _listing_widths(listing: tuple) -> dict[str, set]:
+    """Partition value widths of a local store's :func:`_listing`."""
+    dirs = (rel.split(os.sep)[:-1] for rel, _, _ in listing)
+    return _widths(d for d in dirs if not any(map(_hidden, d)))
+
+
+def _local_widths(path: str) -> dict[str, set]:
+    """Partition value widths of the store at a local ``path``, read
+    from its directory names (no Spark); empty for any other path."""
+    root = os.path.abspath(path)
+    return _listing_widths(_listing(root)) if os.path.isdir(root) else {}
+
+
+def prefix_digits(widths: dict, column: str, digits: int | None = None) -> int:
+    """The prefix width a reader of ``column`` uses: the one width the
+    store holds (:data:`DIGITS` for a store without such directories,
+    whose prefix filter can match nothing at any width). An explicit
+    ``digits`` is checked against the store; a mismatch, or a store
+    holding two widths, raises ValueError instead of pruning on prefixes
+    no directory has."""
+    held = widths.get(column, ())
+    if len(held) > 1:
+        raise ValueError(f"store holds {column} prefixes of {sorted(held)} "
+                         "hex chars; rewrite it at one width")
+    if digits is None:
+        return next(iter(held), DIGITS)
+    if held and digits not in held:
+        raise ValueError(f"digits={digits}, but the store's {column} "
+                         f"prefixes have {next(iter(held))} hex chars")
+    return digits
+
+
+def _open(spark, path: str) -> tuple[DataFrame, dict]:
+    """:func:`open_store` plus the store's partition value widths."""
+    root = os.path.abspath(path)
+    if not os.path.isdir(root):
+        df = spark.read.parquet(path)
+        return df, _widths(f.split("/")[:-1] for f in df.inputFiles())
+    key = (spark, root)
+    listing = _listing(root)
+    with _OPENED_LOCK:
+        hit = _OPENED.get(key)
+        if hit is not None and hit[0] == listing:
+            _OPENED.move_to_end(key)
+            return hit[1], hit[2]
+    df, widths = spark.read.parquet(path), _listing_widths(listing)
+    with _OPENED_LOCK:
+        _OPENED[key] = (listing, df, widths)
+        _OPENED.move_to_end(key)
+        while len(_OPENED) > _OPENED_MAX:
+            _OPENED.popitem(last=False)
+    return df, widths
+
+
 def open_store(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, reused while the store is unchanged.
 
@@ -421,25 +507,10 @@ def open_store(spark, path: str) -> DataFrame:
     of its files (relative path, size, mtime_ns) has not changed; any
     write, published file or compaction changes the listing, so the next
     open reads the store afresh. A path that is not a local directory is
-    always read afresh.
+    always read afresh. The same listing (``df.inputFiles()`` for any
+    other path) gives the readers the store's prefix width.
     """
-    root = os.path.abspath(path)
-    if not os.path.isdir(root):
-        return spark.read.parquet(path)
-    key = (spark, root)
-    listing = _listing(root)
-    with _OPENED_LOCK:
-        hit = _OPENED.get(key)
-        if hit is not None and hit[0] == listing:
-            _OPENED.move_to_end(key)
-            return hit[1]
-    df = spark.read.parquet(path)
-    with _OPENED_LOCK:
-        _OPENED[key] = (listing, df)
-        _OPENED.move_to_end(key)
-        while len(_OPENED) > _OPENED_MAX:
-            _OPENED.popitem(last=False)
-    return df
+    return _open(spark, path)[0]
 
 
 def read_indexed(spark, path: str) -> DataFrame:
@@ -450,20 +521,20 @@ def read_indexed(spark, path: str) -> DataFrame:
 # named entry points of the z2, xz2 and z3 stores
 
 def z2_keyed(df: DataFrame, x: str = "lon", y: str = "lat",
-             digits: int = 2) -> DataFrame:
+             digits: int = DIGITS) -> DataFrame:
     """The z2 key columns (z2_hex + z2_p), shared by the batch writer and
     streaming ingest so the two write paths can never drift."""
     return keyed(df, KEYSPACES["z2"], digits, x=x, y=y)
 
 
 def write_indexed(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                  digits: int = 2) -> None:
-    """Point rows -> z2 store (up to 16^digits partitions)."""
+                  digits: int = DIGITS) -> None:
+    """Point rows -> z2 store (at most 16^digits partitions)."""
     write_store(df, path, KEYSPACES["z2"], digits, x=x, y=y)
 
 
 def bbox_query(spark, path: str, xmin: float, ymin: float, xmax: float,
-               ymax: float, digits: int = 2,
+               ymax: float, digits: int | None = None,
                x: str = "lon", y: str = "lat") -> DataFrame:
     """Planned bbox scan of a z2 store (``x``/``y`` as written)."""
     return scan_store(spark, path, KEYSPACES["z2"], (xmin, ymin, xmax, ymax),
@@ -471,13 +542,13 @@ def bbox_query(spark, path: str, xmin: float, ymin: float, xmax: float,
 
 
 def write_indexed_xz2(df: DataFrame, path: str, geom: str = "geom",
-                      digits: int = 2) -> None:
+                      digits: int = DIGITS) -> None:
     """Extended geometries (WKB ``geom``) -> xz2 store (XZ2Scheme)."""
     write_store(df, path, KEYSPACES["xz2"], digits, geom=geom)
 
 
 def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
-                   ymax: float, digits: int = 2) -> DataFrame:
+                   ymax: float, digits: int | None = None) -> DataFrame:
     """Planned bbox scan of an xz2 store: rows whose ENVELOPE meets the
     window; exact geometry refine is the caller's predicate (the
     reference's residual-CQL split)."""
@@ -486,13 +557,13 @@ def bbox_query_xz2(spark, path: str, xmin: float, ymin: float, xmax: float,
 
 
 def write_indexed_z3(df: DataFrame, path: str, x: str = "lon", y: str = "lat",
-                     secs: str = "secs", digits: int = 2) -> None:
+                     secs: str = "secs", digits: int = DIGITS) -> None:
     """Points with an epoch-seconds dtg -> (z3_bin, z3_p) store."""
     write_store(df, path, KEYSPACES["z3"], digits, x=x, y=y, secs=secs)
 
 
 def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
-                   ymax: float, t0: int, t1: int, digits: int = 2,
+                   ymax: float, t0: int, t1: int, digits: int | None = None,
                    x: str = "lon", y: str = "lat", secs: str = "secs") -> DataFrame:
     """Planned box x [t0, t1) epoch-seconds scan of a z3 store."""
     return scan_store(spark, path, KEYSPACES["z3"], (xmin, ymin, xmax, ymax),
@@ -502,7 +573,7 @@ def stbox_query_z3(spark, path: str, xmin: float, ymin: float, xmax: float,
 # ---------------------------------------------------------------------------
 # ECQL queries over a z2 store
 
-def plan_query(spark, path: str, cql: str, digits: int = 2,
+def plan_query(spark, path: str, cql: str, digits: int | None = None,
                x: str = "lon", y: str = "lat",
                require_bounded: bool = False):
     """The QueryRunner/StrategyDecider analog: ECQL in, (DataFrame, plan
@@ -515,7 +586,8 @@ def plan_query(spark, path: str, cql: str, digits: int = 2,
                           (Z2IndexKeySpace.scala:86-89 short-circuit)
     - ``z2-index``        bounded spatial predicate covering < 3/4 of the
                           partitions -> prefix pruning + window ranges +
-                          residual compiled filter
+                          residual compiled filter (``digits``: the
+                          store's prefix width, read from it when None)
     - ``full-scan``       unbounded (attribute-only / NOT / whole-world
                           spatial, FilterHelper.scala:44-67) or
                           unselective -> scan + residual; attribute
@@ -523,7 +595,9 @@ def plan_query(spark, path: str, cql: str, digits: int = 2,
     """
     from ..functions.cql import cql_filter, extract_bounds
 
-    df = open_store(spark, path)
+    df, widths = _open(spark, path)
+    ks = KEYSPACES["z2"]
+    digits = prefix_digits(widths, ks.prefix, digits)
     windows = extract_bounds(cql, "geom")
     plan = {"strategy": "full-scan", "windows": windows, "prefixes": None}
     if require_bounded and windows is None:
@@ -538,19 +612,19 @@ def plan_query(spark, path: str, cql: str, digits: int = 2,
             return df.filter(F.lit(False)), plan
         prefixes: set[str] = set()
         for w in windows:
-            prefixes.update(KEYSPACES["z2"].cover(w, 0, _WEEK_S - 1, digits))
+            prefixes.update(ks.cover(w, 0, _WEEK_S - 1, digits))
         if len(prefixes) < (16 ** digits) * 3 // 4:
             plan["strategy"] = "z2-index"
             plan["prefixes"] = len(prefixes)
             cond = reduce(operator.or_, (_point_box(w, x, y) for w in windows))
-            df = df.filter(F.col("z2_p").isin(sorted(prefixes)) & cond)
+            df = df.filter(F.col(ks.prefix).isin(sorted(prefixes)) & cond)
         # else: covering nearly everything — pruning would only add a
         # partition-filter cost; fall through to full-scan + residual
     df = df.withColumn("geom", F.expr(f"st_makePoint({x}, {y})"))
     return cql_filter(df, cql).drop("geom"), plan
 
 
-def query_store(spark, path: str, cql: str, digits: int = 2,
+def query_store(spark, path: str, cql: str, digits: int | None = None,
                 x: str = "lon", y: str = "lat") -> DataFrame:
     """The DataStore.getFeatureReader(query) analog: ECQL string in,
     planned scan out (see :func:`plan_query` for the strategy logic)."""
@@ -567,7 +641,7 @@ def _bucket(c: Column, max_buckets: int) -> Column:
 
 def write_indexed_attr(df: DataFrame, path: str, attr: str,
                        x: str = "lon", y: str = "lat",
-                       digits: int = 1, max_buckets: int = 256) -> None:
+                       digits: int = DIGITS, max_buckets: int = 256) -> None:
     """Attribute index analog (the reference's AttributeIndex:
     attribute value as the key prefix with spatial Z tiering as the
     suffix — geomesa-index-api .../index/attribute/AttributeIndex.scala,
@@ -585,15 +659,16 @@ def write_indexed_attr(df: DataFrame, path: str, attr: str,
 
 
 def attr_query(spark, path: str, attr: str, value,
-               bbox: tuple | None = None, digits: int = 1,
+               bbox: tuple | None = None, digits: int | None = None,
                max_buckets: int = 256,
                x: str = "lon", y: str = "lat") -> DataFrame:
     """Planned attribute(+bbox) scan over a write_indexed_attr store:
     bucket pruning (one hive partition family per value) + optional z2
-    prefix pruning + pushed exact predicates. digits/max_buckets must
-    match the write. The bucket is the writer's JVM hash of the literal
-    cast to the column's type (xxhash64 of an int and of the same bigint
-    differ), which the optimizer folds to a constant partition filter."""
+    prefix pruning + pushed exact predicates. ``max_buckets`` must match
+    the write; ``digits`` is read from the store when None. The bucket
+    is the writer's JVM hash of the literal cast to the column's type
+    (xxhash64 of an int and of the same bigint differ), which the
+    optimizer folds to a constant partition filter."""
     df = scan_store(spark, path, ATTR, bbox, None, digits, x=x, y=y)
     lit = F.lit(value).cast(df.schema[attr].dataType)
     return df.filter((F.col("attr_b") == _bucket(lit, max_buckets))

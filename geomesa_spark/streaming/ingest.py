@@ -45,6 +45,9 @@ import time
 
 from pyspark.sql import DataFrame
 
+from ..plans.store import (DIGITS, KEYSPACES, _local_widths, prefix_digits,
+                           write_store)
+
 __all__ = ["stream_ingest_indexed", "ingest_manifests"]
 
 _MANIFEST_DIR = "_stream_manifests"
@@ -70,8 +73,8 @@ def _fs_rmtree(p):
 def _batch_writer(path: str, x: str, y: str, digits: int, hist_top: int):
     from pyspark.sql import functions as F
 
-    from ..plans.store import KEYSPACES, write_store
-
+    ks = KEYSPACES["z2"]
+    prefix_digits(_local_widths(path), ks.prefix, digits)  # raises on another width
     mdir = os.path.join(path, _MANIFEST_DIR)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -80,7 +83,7 @@ def _batch_writer(path: str, x: str, y: str, digits: int, hist_top: int):
             return
         t0 = time.monotonic()
         staging = os.path.join(path, "_staging", f"batch-{batch_id}")
-        write_store(batch_df, staging, KEYSPACES["z2"], digits, x=x, y=y)
+        write_store(batch_df, staging, ks, digits, x=x, y=y)
         # publish: deterministic names + sweep = idempotent under replay
         moved = []
         for part in sorted(os.listdir(staging)):
@@ -123,13 +126,16 @@ def _batch_writer(path: str, x: str, y: str, digits: int, hist_top: int):
 
 
 def stream_ingest_indexed(stream: DataFrame, path: str, checkpoint: str,
-                          x: str = "lon", y: str = "lat", digits: int = 2,
+                          x: str = "lon", y: str = "lat", digits: int = DIGITS,
                           hist_top: int = 64, trigger: dict | None = None):
     """Start a streaming query appending ``stream`` (point rows) into
     the z2-partitioned store at ``path``. Returns the StreamingQuery.
 
     The result is a live plans/store store: bbox_query/query_store
-    prune its partitions exactly as for a batch-written one."""
+    prune its partitions exactly as for a batch-written one, reading
+    the prefix width from its directories. ``digits`` must be the width
+    of the store already at ``path``, if any (ValueError otherwise): a
+    store holding two widths could not be read."""
     writer = (stream.writeStream
               .foreachBatch(_batch_writer(path, x, y, digits, hist_top))
               .option("checkpointLocation", checkpoint)

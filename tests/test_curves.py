@@ -361,7 +361,7 @@ class TestZExpr:
         assert ref[1:4].tolist() == [2, 1, 3]
 
     def test_store_hex_keys_match_numpy(self, spark):
-        from geomesa_spark.plans.store import KEYSPACES, keyed
+        from geomesa_spark.plans.store import DIGITS, KEYSPACES, keyed
 
         x, y, secs, _ = self._inputs()
         df = self._frame(spark, x, y, secs)
@@ -374,7 +374,7 @@ class TestZExpr:
         assert got["z2_hex"][:n].tolist() == list(Z2SFC().hex_encode(z2))
         assert got["z3_hex"][:n].tolist() == [
             format((int(z) << 1) & (2**64 - 1), "016x") for z in z3]
-        assert got["z2_p"][:n].tolist() == [h[:2] for h in got["z2_hex"][:n]]
+        assert got["z2_p"][:n].tolist() == [h[:DIGITS] for h in got["z2_hex"][:n]]
         # a null coordinate or dtg: a null key and prefix (the default
         # hive partition)
         assert got["z2_hex"][n:].isna().tolist() == [True, True, False]

@@ -15,12 +15,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from geomesa_spark.plans.planner import (  # noqa: E402
     choose_strategy, planned_query, store_cost)
 from geomesa_spark.plans.store import (  # noqa: E402
-    KEYSPACES, write_indexed, write_indexed_attr, write_indexed_z3)
+    DIGITS, KEYSPACES, write_indexed, write_indexed_attr, write_indexed_z3)
 
 BBOX = (-60.0, -30.0, 60.0, 45.0)
 T0, T1 = 1704672000, 1705881600  # Jan 8 - Jan 22 2024 (2 of ~5 weeks)
@@ -35,17 +36,20 @@ def _points(spark, n=4000):
         F.concat(F.lit("k"), (F.col("id") % 7).cast("string")).alias("kind")))
 
 
-def _stores(spark, tmp_path):
+def _stores(spark, tmp_path, digits=DIGITS):
     pts = _points(spark)
     stores = {k: str(tmp_path / k) for k in ("z2", "z3", "attr")}
-    write_indexed(pts, stores["z2"])
-    write_indexed_z3(pts, stores["z3"])
-    write_indexed_attr(pts, stores["attr"], "kind")
+    write_indexed(pts, stores["z2"], digits=digits)
+    write_indexed_z3(pts, stores["z3"], digits=digits)
+    write_indexed_attr(pts, stores["attr"], "kind", digits=digits)
     return pts, stores
 
 
 def test_strategy_ordering(spark, tmp_path):
-    _, stores = _stores(spark, tmp_path)
+    # 2-char stores: at the 1-char default a z3 prefix holds one bit of
+    # x and of y, and BBOX x (T0, T1) prices z2 and z3 alike (6 of 16
+    # prefixes, 36 of 96 (bin, prefix) pairs)
+    _, stores = _stores(spark, tmp_path, digits=2)
 
     # attr equality present -> attr index wins (1/256 bucket fraction)
     p = choose_strategy(stores, bbox=BBOX, interval=(T0, T1),
@@ -144,6 +148,27 @@ def test_extended_family_ordering_and_rows(spark, tmp_path):
                                 bbox=bbox, interval=(t0, t1))
     assert plan2["chosen"] == "xz2"
     assert {r["gid"] for r in out2.collect()} == want
+
+
+def test_store_cost_prices_each_store_at_its_own_width(spark, tmp_path):
+    """A 1-char and a 2-char store of the same rows are each priced over
+    their own prefix count, with no width passed; a width the store does
+    not hold raises."""
+    pts = _points(spark)
+    z2, z3 = KEYSPACES["z2"], KEYSPACES["z3"]
+    for d in (1, 2):
+        p2, p3 = str(tmp_path / f"z2_{d}"), str(tmp_path / f"z3_{d}")
+        write_indexed(pts, p2, digits=d)
+        write_indexed_z3(pts, p3, digits=d)
+        assert store_cost(z2, p2, BBOX, None) == \
+            len(z2.cover(BBOX, 0, 0, d)) / 16 ** d
+        assert store_cost(z3, p3, BBOX, (T0, T1)) == \
+            store_cost(z3, p3, BBOX, (T0, T1), d) > 0
+        with pytest.raises(ValueError, match="hex chars"):
+            store_cost(z2, p2, BBOX, None, 3 - d)
+        with pytest.raises(ValueError, match="hex chars"):
+            choose_strategy({"z2": p2, "z3": p3}, bbox=BBOX,
+                            interval=(T0, T1), z3_digits=3 - d)
 
 
 def test_binned_cost_ignores_hive_default_partition(tmp_path):

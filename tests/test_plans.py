@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.plans.checkpoint import read_manifest, run_stage
 from geomesa_spark.plans.store import (
-    KEYSPACES, bbox_query, scan_store, write_indexed, write_store,
+    DIGITS, KEYSPACES, bbox_query, scan_store, write_indexed, write_store,
 )
 from geomesa_spark.sources.pages import generate_points, page_coords
 
@@ -98,6 +98,99 @@ def test_indexed_store_bbox_query(spark, tmp_path, pruned_on):
     prefixes = KEYSPACES["z2"].cover(bbox, 0, 0, 2)
     all_parts = [d for d in os.listdir(path) if d.startswith("z2_p=")]
     assert 0 < len(prefixes) < len(all_parts)
+
+
+def test_readers_take_the_prefix_width_from_the_store(spark, tmp_path,
+                                                      pruned_on):
+    """A store written at 2 hex chars answers every z2 reader given no
+    width with the oracle rows, pruned; a width the store does not hold,
+    or a store holding two widths, raises instead of pruning to nothing.
+    A default write holds at most 16 one-char prefixes."""
+    from geomesa_spark.functions import register_functions
+    from geomesa_spark.plans.planner import planned_query
+    from geomesa_spark.plans.store import query_store, z2_keyed
+
+    register_functions(spark)
+    n = 5000
+    pts = generate_points(spark, n, partitions=4)
+    path = str(tmp_path / "w2")
+    write_indexed(pts, path, digits=2)
+    bbox = (-75.0, 39.5, -72.0, 41.5)
+    ids = np.arange(n, dtype=np.int64)
+    lon, lat = page_coords(ids)
+    want = sorted(ids[(lon >= bbox[0]) & (lon <= bbox[2])
+                      & (lat >= bbox[1]) & (lat <= bbox[3])].tolist())
+    assert want
+    z2 = KEYSPACES["z2"]
+    cql = "BBOX(geom, {}, {}, {}, {})".format(*bbox)
+    readers = {
+        "bbox_query": lambda d: bbox_query(spark, path, *bbox, digits=d),
+        "scan_store": lambda d: scan_store(spark, path, z2, bbox, digits=d),
+        "query_store": lambda d: query_store(spark, path, cql, digits=d),
+        "planned_query": lambda d: planned_query(
+            spark, {"z2": path}, bbox=bbox, z2_digits=d)[1],
+    }
+    for name, read in readers.items():
+        for d in (None, 2):
+            got = read(d)
+            assert sorted(r["page_id"] for r in got.collect()) == want, (name, d)
+            pruned_on(got, "z2_p")
+        with pytest.raises(ValueError, match="hex chars"):
+            read(1)
+
+    # a one-char append makes the store hold two widths
+    z2_keyed(pts.limit(10), digits=1).write.mode("append") \
+        .partitionBy("z2_p").parquet(path)
+    for name, read in readers.items():
+        with pytest.raises(ValueError, match="one width"):
+            read(None)
+
+    # overwritten at the default width, the store reads back again
+    write_indexed(pts, path)
+    parts = [d for d in os.listdir(path) if d.startswith("z2_p=")]
+    assert 0 < len(parts) <= 16
+    assert all(len(d) == len("z2_p=") + DIGITS for d in parts)
+    for name, read in readers.items():
+        assert sorted(r["page_id"] for r in read(None).collect()) == want, name
+
+
+_WRITERS = {"keyed", "write_store", "z2_keyed", "write_indexed",
+            "write_indexed_xz2", "write_indexed_z3", "write_indexed_attr",
+            "stream_ingest_indexed"}
+_READERS = {"scan_store", "bbox_query", "bbox_query_xz2", "stbox_query_z3",
+            "plan_query", "query_store", "attr_query", "store_cost",
+            "choose_strategy", "planned_query", "prefix_digits"}
+
+
+def test_store_width_defaults_are_one_constant():
+    """Every store writer's prefix width defaults to ``store.DIGITS`` and
+    every reader's to None (the store's own width): read from the source,
+    so a writer cannot drift back to a literal default of its own."""
+    import ast
+    import inspect
+
+    from geomesa_spark.plans import planner, store
+    from geomesa_spark.streaming import ingest
+
+    writers, readers = set(), set()
+    for mod in (store, planner, ingest):
+        for fn in ast.walk(ast.parse(inspect.getsource(mod))):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            args = fn.args.args + fn.args.kwonlyargs
+            defaults = ([None] * (len(fn.args.args) - len(fn.args.defaults))
+                        + fn.args.defaults + fn.args.kw_defaults)
+            for a, d in zip(args, defaults):
+                if not a.arg.endswith("digits") or d is None:
+                    continue
+                if fn.name in _WRITERS:
+                    assert isinstance(d, ast.Name) and d.id == "DIGITS", fn.name
+                    writers.add(fn.name)
+                else:
+                    assert isinstance(d, ast.Constant) and d.value is None, \
+                        (fn.name, a.arg)
+                    readers.add(fn.name)
+    assert writers == _WRITERS and readers == _READERS
 
 
 def test_prefixes_world_bbox_is_everything(spark):
@@ -359,9 +452,9 @@ def test_xz2_store_bbox_query(spark, tmp_path, pruned_on):
     pruned_on(out, "xz2_p")
 
     # the planner actually prunes: covering prefixes < all partitions
-    prefixes = KEYSPACES["xz2"].cover((qx0, qy0, qx1, qy1), 0, 0, 2)
+    prefixes = KEYSPACES["xz2"].cover((qx0, qy0, qx1, qy1), 0, 0, DIGITS)
     n_parts = spark.read.parquet(path).select("xz2_p").distinct().count()
-    assert 0 < len(prefixes) < 256
+    assert 0 < len(prefixes) < 16 ** DIGITS
     assert len(prefixes) < n_parts or n_parts < 8  # meaningful pruning
 
 

@@ -792,6 +792,20 @@ def test_pip_join_refine_parity_matrix(spark, path):
             {7} if predicate in ("st_contains", "st_within") else set())
 
 
+@pytest.mark.parametrize("path", ["prepared", "shuffle"])
+def test_pip_join_rejects_unsupported_predicates(spark, path):
+    """The point-in-polygon refine answers only contains/within/covers/
+    intersects; any other predicate raises instead of returning the
+    covered points."""
+    pts = spark.createDataFrame([(1, 5.0, 5.0), (2, 50.0, 50.0)],
+                                "pt long, lon double, lat double")
+    polys = spark.createDataFrame(_pip_polys()[:1], "poly_id long, geom binary")
+    for predicate in ("st_disjoint", "st_crosses"):
+        with pytest.raises(ValueError, match="pip_join predicate"):
+            pip_join(pts, polys, "lon", "lat", "geom", predicate=predicate,
+                     **_PIP_PATHS[path])
+
+
 # ---------------------------------------------------------------------------
 # Arrow traffic of the refine: the exact UDF name and input columns.
 

@@ -418,7 +418,7 @@ def test_stream_ingest_indexed(spark, tmp_path):
     an idempotent no-op."""
     import json
 
-    from geomesa_spark.plans.store import bbox_query, read_indexed
+    from geomesa_spark.plans.store import DIGITS, bbox_query, read_indexed
     from geomesa_spark.streaming.ingest import (_batch_writer,
                                                 ingest_manifests,
                                                 stream_ingest_indexed)
@@ -456,8 +456,15 @@ def test_stream_ingest_indexed(spark, tmp_path):
                  bbox_query(spark, store, -10, -5, 10, 5).collect())
     assert res == want and len(res) > 0
 
+    # the live store holds default-width prefixes, and a writer at any
+    # other width is refused before it could mix two widths
+    parts = [d for d in os.listdir(store) if d.startswith("z2_p=")]
+    assert 0 < len(parts) <= 16
+    with pytest.raises(ValueError, match="hex chars"):
+        _batch_writer(store, "lon", "lat", DIGITS + 1, 64)
+
     # replaying an already-manifested batch id is a no-op
-    writer = _batch_writer(store, "lon", "lat", 2, 64)
+    writer = _batch_writer(store, "lon", "lat", DIGITS, 64)
     replay = spark.createDataFrame(rows1[:5])
     writer(replay, mans[0]["batch_id"])
     assert read_indexed(spark, store).count() == 250
@@ -472,3 +479,29 @@ def test_stream_ingest_indexed(spark, tmp_path):
     assert read_indexed(spark, store).count() == 250
     mans2 = ingest_manifests(store)
     assert sum(m["row_count"] for m in mans2) == 250
+
+
+def test_await_sink_rows_raises_when_the_stream_dies(spark):
+    """The entry's memory-sink wait fails with the stream's own error as
+    soon as the query dies, not at its deadline."""
+    import sys
+    import uuid
+
+    from pyspark.errors import StreamingQueryException
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    name = f"dead_{uuid.uuid4().hex[:12]}"
+    broken = (spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+              .select((F.col("value")
+                       + F.raise_error(F.lit("stream boom")).cast("long"))
+                      .alias("v")))
+    q = broken.writeStream.format("memory").queryName(name).start()
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(StreamingQueryException, match="stream boom"):
+            entry._await_sink_rows(spark, q, name, 10, timeout=240)
+    finally:
+        q.stop()
+    assert time.monotonic() - t0 < 120
